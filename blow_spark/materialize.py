@@ -360,7 +360,12 @@ def spill_to_parquet(df: DataFrame, prefix: str = "blow_spark_ckpt_") -> DataFra
     filter-pushed, and free of the upstream plan. Dirs are registered
     for cleanup: LRU-evicted past ``_MAX_LIVE_SPILLS`` live dirs and
     swept at process exit, so two consecutive full-catalog runs leave
-    the tempdir population flat (pinned in tests/test_materialize.py)."""
+    the tempdir population flat (pinned in tests/test_materialize.py).
+
+    The scan is given the schema just written instead of inferring it:
+    inference is a one-task Spark job (0.1-0.2 s on a 4-core host),
+    and file sources mark every field nullable, so ``df.schema`` read
+    back equals the inferred schema and the plans are identical."""
     path = tempfile.mkdtemp(prefix=prefix)
     df.write.mode("overwrite").parquet(path)
     # AFTER the write (overwrite mode recreates the dir); dot-prefixed,
@@ -370,4 +375,4 @@ def spill_to_parquet(df: DataFrame, prefix: str = "blow_spark_ckpt_") -> DataFra
     while len(_live_spills) > _MAX_LIVE_SPILLS:
         old, _ = _live_spills.popitem(last=False)
         _remove_dir(old)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)

@@ -87,6 +87,9 @@ class Pipeline:
         ensure_package_shipped(self.df.sparkSession)
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            from blow_spark.shipping import skip_unchanged_zip_rereads
+
+            skip_unchanged_zip_rereads()
             for pdf in batches:
                 out = [o for row in pdf.itertuples(index=False) for o in fn(row)]
                 yield pd.DataFrame(out) if out else pd.DataFrame(columns=_field_names(schema))
@@ -132,6 +135,9 @@ class Pipeline:
         ensure_package_shipped(self.df.sparkSession)
 
         def run(batches):
+            from blow_spark.shipping import skip_unchanged_zip_rereads
+
+            skip_unchanged_zip_rereads()
             for pdf in batches:
                 yield fn(pdf)
 

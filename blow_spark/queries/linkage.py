@@ -84,11 +84,12 @@ def _pair_counts(a: DataFrame, b: DataFrame) -> DataFrame:
         F.col("cust_b") < F.lit(1 << 32)
     )
     pk = F.when(
-        in_domain, F.shiftleft(F.col("cust_a"), 32) + F.col("cust_b")
+        in_domain,
+        F.shiftleft(F.col("cust_a").cast("long"), 32) + F.col("cust_b").cast("long"),
     ).otherwise(
         F.raise_error(
             F.lit(
-                "linkpred packed pair key: custkey >= 2^31 — beyond the "
+                "linkpred packed pair key: cust_a >= 2^31 or cust_b >= 2^32 — beyond the "
                 "guarded pack domain (TPC-H SF ~14k); use the two-column "
                 "grouping for this scale"
             )

@@ -19,6 +19,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = max(8, (os.cpu_count() or 8))
 
 
+def _default_driver_memory() -> str:
+    """A quarter of the host's physical memory, at least 1 GiB. A fixed
+    48g default let the driver heap outgrow a 15 GB host until the kernel
+    OOM-killed the JVM; a quarter leaves room for its off-heap memory,
+    the Python workers and other processes."""
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    return f"{max(1024, total_mb // 4)}m"
+
+
 def get_spark(
     app_name: str = "blow_spark",
     master: str | None = None,
@@ -53,7 +62,7 @@ def get_spark(
         # injection + row-identity pinned in tests/test_plans.py.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

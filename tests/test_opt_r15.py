@@ -54,12 +54,15 @@ def test_spread_volume_noops_below_one_chunk(spark, tmp_path):
 
 
 def test_spread_volume_sizes_to_rows(spark, tmp_path):
-    # 2000 rows at 400/partition -> 5 partitions, NOT defaultParallelism
+    # 400 rows/partition over 400·want rows -> want partitions, NOT
+    # defaultParallelism (want < parallelism on any host with 3+ cores)
     from blow_spark.dedup import _spread
 
-    scan = _spill_dir(spark, tmp_path, "mid", rows=2000)
+    parallelism = spark.sparkContext.defaultParallelism
+    want = max(2, min(5, parallelism - 1))
+    scan = _spill_dir(spark, tmp_path, "mid", rows=400 * want)
     out = _spread(scan, per_part_rows=400)
-    assert out.rdd.getNumPartitions() == 5
+    assert out.rdd.getNumPartitions() == want
 
 
 def test_spread_volume_caps_at_parallelism(spark, tmp_path):
@@ -159,6 +162,24 @@ def test_pair_counts_matches_two_column_form(spark):
         .collect()
     }
     assert packed == plain and packed
+
+
+def test_pair_counts_int_keys_pack_like_long_keys(spark):
+    # INT custkeys are widened before the shift: a 32-bit shiftleft by 32
+    # is a shift by 0 and would merge distinct pairs
+    from pyspark.sql import functions as F
+
+    from blow_spark.queries.linkage import _pair_counts
+
+    rows = [(c, p) for p in range(1, 6) for c in range(1, 8) if (c * p) % 3]
+
+    def counts(key_type):
+        edges = spark.createDataFrame(rows, f"c {key_type}, p long")
+        a = edges.select(F.col("c").alias("cust_a"), "p")
+        b = edges.select(F.col("c").alias("cust_b"), "p")
+        return {(r.cust_a, r.cust_b): r.common_parts for r in _pair_counts(a, b).collect()}
+
+    assert counts("int") == counts("long")
 
 
 def test_pair_counts_raises_outside_pack_domain(spark):
