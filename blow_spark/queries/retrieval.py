@@ -40,15 +40,13 @@ _FUSED_TOPK = 10
 
 def _dense_ranked(spark: SparkSession, sf_dir: str, depth: int) -> DataFrame:
     """Exact cosine rank list (query_id, cand_id, rank) at the given
-    depth for the first ``_N_QUERIES`` vectors. Round-15 (guide §4.2):
-    rides the vectorized GEMM scorer — bit-equal to the posexplode
-    expression plan (same int64 fixed-point sums, same (−cos, id)
-    tie-break; brute_force_topk_vectorized carries its own DuckDB
-    oracle) at a fraction of the cost: one numpy pass per corpus batch
-    instead of a Q·N·dim-row broadcast join + hash aggregate."""
+    depth for the first ``_N_QUERIES`` vectors, from the engine's exact
+    scorer (int64 fixed-point sums, (−cos, id) tie-break — the
+    arithmetic the oracle below replays): one numpy pass per corpus
+    batch."""
     e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < _N_QUERIES)
-    return similarity.brute_force_topk_vectorized(q, e, k=depth).select(
+    return similarity.brute_force_topk(q, e, k=depth).select(
         "query_id", F.col("neighbor_id").alias("cand_id"), "rank"
     )
 
@@ -319,9 +317,7 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     or a penalty miscount in ANY step turns the row red."""
     e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < _N_QUERIES)
-    # round-15: GEMM scorer, bit-equal to the expression plan (see
-    # _dense_ranked)
-    cand = similarity.brute_force_topk_vectorized(q, e, k=_MMR_CANDS).select(
+    cand = similarity.brute_force_topk(q, e, k=_MMR_CANDS).select(
         "query_id",
         F.col("neighbor_id").alias("cand_id"),
         F.round(F.col("cos_sim") * 1_000_000).cast("long").alias("rel_mu"),
@@ -338,44 +334,17 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, "query_id")
         .filter(F.col("a.cand_id") < F.col("b.cand_id"))
         .select(
-            F.col("a.cand_id").alias("a_id"), F.col("b.cand_id").alias("b_id")
+            F.col("a.cand_id").alias("query_id"),
+            F.col("b.cand_id").alias("neighbor_id"),
         )
         .distinct()
     )
-    ids = (
-        upair.select(F.col("a_id").alias("vec_id"))
-        .unionAll(upair.select(F.col("b_id").alias("vec_id")))
-        .distinct()
-    )
-    pe = (
-        e.join(ids, "vec_id", "left_semi")
-        .select("vec_id", F.posexplode("embedding").alias("pos", "x"))
-        .select("vec_id", "pos", F.col("x").cast("double").alias("x"))
-    )
-    s = F.lit(similarity.DOT_SCALE)
-    pa, pb = pe.alias("pa"), pe.alias("pb")
     simtab = (
-        upair.join(pa, F.col("pa.vec_id") == F.col("a_id"))
-        .join(
-            pb,
-            (F.col("pb.vec_id") == F.col("b_id")) & (F.col("pb.pos") == F.col("pa.pos")),
-        )
-        .groupBy("a_id", "b_id")
-        .agg(
-            F.sum(F.round(F.col("pa.x") * F.col("pb.x") * s).cast("long")).alias("dq"),
-            F.sum(F.round(F.col("pa.x") * F.col("pa.x") * s).cast("long")).alias("an"),
-            F.sum(F.round(F.col("pb.x") * F.col("pb.x") * s).cast("long")).alias("bn"),
-        )
+        similarity._rescore_candidates(upair, e)
         .select(
-            "a_id",
-            "b_id",
-            F.round(
-                F.col("dq").cast("double")
-                / (F.sqrt(F.col("an").cast("double")) * F.sqrt(F.col("bn").cast("double")))
-                * 1_000_000
-            )
-            .cast("long")
-            .alias("sim_mu"),
+            F.col("query_id").alias("a_id"),
+            F.col("neighbor_id").alias("b_id"),
+            F.round(F.col("cos_sim") * 1_000_000).cast("long").alias("sim_mu"),
         )
         .coalesce(1)
         .localCheckpoint()
@@ -508,9 +477,7 @@ def rag_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, 2-column) documents scan."""
     e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < _N_QUERIES)
-    # round-15: GEMM scorer, bit-equal to the expression plan (see
-    # _dense_ranked)
-    ranked = similarity.brute_force_topk_vectorized(q, e, k=_CTX_TOPK).select(
+    ranked = similarity.brute_force_topk(q, e, k=_CTX_TOPK).select(
         "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
     )
     toks = read_table(spark, sf_dir, "documents").select(

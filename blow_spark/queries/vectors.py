@@ -79,10 +79,10 @@ def array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for the first 10 vectors against the corpus,
-    via the codegen'd posexplode + fixed-point-SUM plan (integer dot
-    products are order-independent → engine-exact; the interpreted
-    zip_with/aggregate fold this replaced took 39 s at sf0.1). See
-    blow_spark.similarity.brute_force_topk."""
+    via the engine's one exact scorer, blow_spark.similarity.
+    brute_force_topk: per-batch numpy fixed-point cosine plus a partial
+    top-k, merged by one window (integer dot products are
+    order-independent → engine-exact against the SQL twin above)."""
     e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
     return similarity.brute_force_topk(q, e, k=5)
@@ -133,12 +133,10 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("query_id") < 50)
         .select("query_id", "neighbor_id")
     )
-    # Round-15 (guide §4.2): the 50-query exact AUDIT side rides the
-    # bit-equal vectorized GEMM scorer (same int64 fixed-point sums and
-    # tie-breaks — see brute_force_topk_vectorized's oracle) instead of
-    # the posexplode join+aggregate; the production ANN plan being
-    # certified is untouched.
-    exact = similarity.brute_force_topk_vectorized(
+    # the 50-query exact AUDIT side is the engine's exact scorer (the
+    # same fixed-point arithmetic similarity_topk_bruteforce's oracle
+    # replays); the production ANN plan being certified is untouched.
+    exact = similarity.brute_force_topk(
         e.filter(F.col("vec_id") < 50), e, k=5
     ).select("query_id", "neighbor_id")
     hits = ann.join(exact, ["query_id", "neighbor_id"]).agg(
@@ -286,17 +284,16 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "vector", "pandas"),
 )
 def similarity_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow/numpy variant of brute-force top-k (the 10⁹-corpus form),
-    HASH-CHECKED against the same fixed-point oracle as the
-    expression-fold path since the round-3 rewrite: per-batch numpy
-    scoring now quantizes with the exact SQL-ROUND replica
-    (_round_half_away), making the two engines' scores bit-equal —
+    """The pandas-tagged twin of similarity_topk_bruteforce: the same
+    call of the engine's one exact scorer (per-batch numpy scoring in
+    mapInPandas, quantized with the exact SQL-ROUND replica
+    _round_half_away), HASH-CHECKED against the same fixed-point oracle —
     order-independent integer sums on both sides. Exact-tuple parity
-    with the fold path is additionally pinned in
+    with the DuckDB twin at a second query slice is pinned in
     tests/test_similarity.py."""
     e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
-    return similarity.brute_force_topk_vectorized(q, e, k=5)
+    return similarity.brute_force_topk(q, e, k=5)
 
 
 @register(
@@ -665,20 +662,14 @@ def similarity_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties break to the smaller label) — the standard label-propagation /
     weak-supervision primitive over an embedding column, and a composed
     test of the whole similarity stack (fixed-point top-k → label join →
-    per-query argmax). Plan: the top-k stage is the vectorized GEMM
-    scorer (bit-equal to the posexplode fold — see the code comment for
-    the measured 6× gap at 50 queries); the vote is a (query, label)
+    per-query argmax). Plan: the top-k stage is the exact numpy scorer
+    (one corpus pass, per-batch partial top-k); the vote is a (query, label)
     hash aggregation over k·Q rows and a WindowGroupLimit argmax. At
     10⁹ vectors swap in the LSH variant — the vote stages are
     unchanged."""
     e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 50)
-    # GEMM top-k, not the posexplode fold: 50 queries × corpus through
-    # the codegen'd pos-join materializes Q·N·dim rows into a hash agg
-    # (measured 8.6 s at sf0.1); the per-batch numpy scorer does the
-    # same arithmetic bit-equal (parity pinned in tests/test_similarity)
-    # in ~1 s and is the form that scales with query count.
-    nn = similarity.brute_force_topk_vectorized(q, e, k=5).select(
+    nn = similarity.brute_force_topk(q, e, k=5).select(
         "query_id", "neighbor_id"
     )
     labels = e.select(F.col("vec_id").alias("neighbor_id"), "label")
@@ -994,15 +985,15 @@ def similarity_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFr
     FIRST 16 dimensions, reporting per-query overlap — the measurement
     that decides whether a pipeline can serve truncated embeddings (4×
     less memory and shuffle) at acceptable recall. Both sides are the
-    engine-exact fixed-point brute-force plan (similarity.
+    engine-exact fixed-point brute-force scorer (similarity.
     brute_force_topk), so the oracle replays the identical integer
     arithmetic and the overlap is hash-exact, not approximate.
 
-    Scale: each side is the bounded-broadcast brute-force path (queries
-    × dim capped, corpus never shuffles vectors); the truncated side
-    slices map-side before explode, so it moves 1/4 the bytes — which
-    is the production claim this query quantifies. The overlap join is
-    per-query constant-size (10 rows a side)."""
+    Scale: each side is the bounded-broadcast brute-force path (query
+    count capped, corpus never shuffles vectors); the truncated side
+    slices map-side before scoring, so its batches carry 1/4 the bytes
+    — which is the production claim this query quantifies. The overlap
+    join is per-query constant-size (10 rows a side)."""
     e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 20)
     full10 = similarity.brute_force_topk(q, e, k=10).select(
@@ -1857,16 +1848,12 @@ def similarity_ann_method_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = read_table(spark, sf_dir, "embeddings")
     q50 = e.filter(F.col("vec_id") < 50)
-    # Round-15 (guide §4.2): the exact ground-truth side rides the
-    # vectorized GEMM scorer instead of the posexplode expression fold —
-    # BIT-EQUAL by construction (same int64 sums of round(x·y·S), same
-    # (−cos, id) tie-break; brute_force_topk_vectorized carries its own
-    # DuckDB oracle), but one numpy pass per Arrow batch instead of a
-    # Q·N·dim-row join + hash aggregate. Certification semantics are
-    # unchanged: the recall floor is still measured against the full
-    # exact top-5 of all 50 audited queries.
+    # exact ground truth: the engine's exact scorer (int64 sums of
+    # round(x·y·S), (−cos, id) tie-break — the arithmetic
+    # similarity_topk_bruteforce's oracle replays); the recall floor is
+    # measured against the full exact top-5 of all 50 audited queries.
     exact = spill_to_parquet(
-        similarity.brute_force_topk_vectorized(q50, e, k=5).select(
+        similarity.brute_force_topk(q50, e, k=5).select(
             "query_id", "neighbor_id"
         ),
         "blow_spark_annrep_exact_",
@@ -1963,10 +1950,8 @@ def similarity_ann_method_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     deq = spill_to_parquet(
         mm.select("vec_id", qv.alias("embedding")), "blow_spark_annrep_deq_"
     )
-    # same GEMM swap as the exact branch above (round 15): identical
-    # fixed-point arithmetic over the dequantized vectors, one corpus
-    # pass instead of the 50×N×64-row join+aggregate
-    int8_topk = similarity.brute_force_topk_vectorized(
+    # the same exact scorer over the dequantized vectors
+    int8_topk = similarity.brute_force_topk(
         deq.filter(F.col("vec_id") < 50), deq, k=5
     )
     int8_cand_n = n_q.crossJoin(n_corpus).select(

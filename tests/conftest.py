@@ -15,14 +15,50 @@ SF_MEDIUM = "/root/testdata/sf0.01"
 os.environ.setdefault("BLOW_SPARK_DEBUG_CHECKPOINT_SMALL", "1")
 
 
+#: The suite's SparkSession once the ``spark`` fixture has built it.
+_SESSION = None
+
+
+def _jvm_alive(spark) -> bool:
+    """True while the py4j gateway still answers a trivial JVM call."""
+    try:
+        spark.sparkContext._jvm.java.lang.System.nanoTime()
+        return True
+    except Exception:
+        return False
+
+
 @pytest.fixture(scope="session")
 def spark():
+    global _SESSION
     from blow_spark import get_spark
 
     cpus = min(8, os.cpu_count() or 8)
     s = get_spark(app_name="blow_spark_tests", master=f"local[{cpus}]", shuffle_partitions=8)
+    _SESSION = s
     yield s
-    s.stop()
+    if _jvm_alive(s):
+        s.stop()
+
+
+@pytest.hookimpl(wrapper=True)
+def pytest_runtest_protocol(item, nextitem):
+    """Stop the run at the first failure that leaves the JVM dead (an
+    OOM kill, a crash): every later Spark test would only fail with
+    ConnectionRefused, so one bad test must not cost hundreds."""
+    failed = item.session.testsfailed
+    result = yield
+    if (
+        item.session.testsfailed > failed
+        and _SESSION is not None
+        and not _jvm_alive(_SESSION)
+    ):
+        pytest.exit(
+            f"the Spark JVM stopped answering during {item.nodeid}; "
+            f"aborting the run instead of failing every later test",
+            returncode=3,
+        )
+    return result
 
 
 @pytest.fixture(scope="session")

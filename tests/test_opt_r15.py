@@ -65,6 +65,15 @@ def test_spread_volume_sizes_to_rows(spark, tmp_path):
     assert out.rdd.getNumPartitions() == want
 
 
+def test_spread_volume_passes_in_memory_frames_through(spark):
+    # no input files means no footer row count: the volume mode must not
+    # fall back to the blanket repartition(parallelism)
+    from blow_spark.dedup import _spread
+
+    small = spark.createDataFrame([(i, i + 1) for i in range(10)], "id_a long, id_b long")
+    assert _spread(small, per_part_rows=16384) is small
+
+
 def test_spread_volume_caps_at_parallelism(spark, tmp_path):
     # one row per partition would be absurd — the cap is the session's
     # default parallelism, same ceiling as the blanket mode

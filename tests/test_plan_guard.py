@@ -14,9 +14,25 @@ by their own tests.
 
 from __future__ import annotations
 
+import pytest
+from conftest import SF_SMALL
 from plan_guard import exchange_counts, physical_plan, single_partition_windows
 
 from blow_spark.queries import REGISTRY, queries
+
+
+@pytest.fixture(scope="module")
+def plans(spark) -> dict[str, str]:
+    """Physical-plan text of every non-runtime query at sf0.001, built
+    once for both walks below: a build runs the query's eager spill and
+    checkpoint jobs, so each rebuild would repeat them."""
+    qs = queries()
+    return {
+        n: physical_plan(qs[n](spark, SF_SMALL))
+        for n in sorted(REGISTRY)
+        if "runtime" not in REGISTRY[n].tags
+    }
+
 
 # Pinned-small branches: each is the per-PARTITION offsets table of the
 # two-phase exact global rank (ops.global_row_number and its inline twin
@@ -103,14 +119,10 @@ WHITELIST = {
 }
 
 
-def test_no_unwhitelisted_single_partition_windows(spark):
-    qs = queries()
-    names = [n for n, q in REGISTRY.items() if "runtime" not in q.tags]
-    sf = "/root/testdata/sf0.001"
+def test_no_unwhitelisted_single_partition_windows(plans):
     flagged: dict[str, int] = {}
-    for n in sorted(names):
-        df = qs[n](spark, sf)
-        hits = single_partition_windows(physical_plan(df))
+    for n, plan in plans.items():
+        hits = single_partition_windows(plan)
         if hits:
             flagged[n] = len(hits)
     assert flagged == WHITELIST, (
@@ -164,7 +176,9 @@ BENCH_EXCHANGE_PINS = {
     # r14: +1 shuffle = _spread of the spilled candidate scan before
     # the verify join (single-split fix, dedup._verify_and_release)
     "dedup_minhash_lsh": (0, 2),
-    "similarity_topk_bruteforce": (2, 1),
+    # one exact scorer: MapInPandas over the corpus scan + the rank
+    # window's shuffle (the posexplode broadcast join + aggregate is gone)
+    "similarity_topk_bruteforce": (1, 0),
     "tpch_q8_national_market_share": (2, 7),
     "tpch_q21_suppliers_who_kept_waiting": (4, 3),
     "split_train_val_test": (3, 0),
@@ -660,11 +674,9 @@ BENCH_EXCHANGE_PINS = {
 }
 
 
-def test_bench_query_exchange_budgets(spark):
+def test_bench_query_exchange_budgets(plans):
     import bench
 
-    qs = queries()
-    sf = "/root/testdata/sf0.001"
     bench_names = [
         n
         for n in bench.HEADLINE
@@ -676,9 +688,7 @@ def test_bench_query_exchange_budgets(spark):
         f"  unpinned: {sorted(set(bench_names) - set(BENCH_EXCHANGE_PINS))}\n"
         f"  stale pins: {sorted(set(BENCH_EXCHANGE_PINS) - set(bench_names))}"
     )
-    observed = {}
-    for n in bench_names:
-        observed[n] = exchange_counts(physical_plan(qs[n](spark, sf)))
+    observed = {n: exchange_counts(plans[n]) for n in bench_names}
     drift = {
         n: {"pinned": BENCH_EXCHANGE_PINS[n], "observed": observed[n]}
         for n in observed

@@ -162,15 +162,17 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
 
 
 def test_exact_cosine_plan_is_codegen_broadcast(spark, sf_dir):
-    """brute_force_topk's fixed-point dot-product plan: posexplode
-    (Generate) + BroadcastHashJoin + two-phase HashAggregate — never a
-    cartesian/nested-loop, and never the interpreted higher-order
-    aggregate fold it replaced (39 s → ~3 s at sf0.1)."""
+    """brute_force_topk's plan is blow's flatMap shape: MapInPandas
+    directly over the corpus scan (the query matrix rides the task
+    closure), then the rank window — no exploded components, no
+    cartesian/nested-loop pairing and no broadcast exchange."""
     p = _plan(spark, sf_dir, "similarity_topk_bruteforce")
-    assert "BroadcastHashJoin" in p, p[:800]
-    assert "CartesianProduct" not in p and "NestedLoop" not in p, p[:800]
-    assert "Generate posexplode" in p, p[:800]
-    assert p.count("HashAggregate") >= 2, p[:800]
+    assert "MapInPandas" in p, p[:800]
+    below = p[p.index("MapInPandas") :]
+    assert "FileScan parquet" in below and "embeddings" in below, p[:800]
+    assert "Exchange" not in below, p[:800]
+    for absent in ("posexplode", "CartesianProduct", "NestedLoop", "BroadcastExchange"):
+        assert absent not in p, p[:800]
 
 
 def test_exact_allpairs_plan_is_broadcast_nlj_into_arrow(spark, sf_dir):

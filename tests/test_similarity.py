@@ -130,21 +130,24 @@ def test_ivf_finds_planted_near_dups(spark):
     assert hits >= 38, f"only {hits}/40 planted near-dups found"
 
 
-def test_vectorized_topk_matches_fold_topk(emb):
-    """The numpy path is BIT-EQUAL to the oracle-paired expression-fold
-    path since the fixed-point rewrite: same neighbors, same ranks, same
-    cos_sim doubles (both are integer fixed-point sums divided/rooted
-    identically)."""
+def test_vectorized_topk_matches_fold_topk(sf_dir, emb):
+    """The numpy scorer is BIT-EQUAL to its DuckDB fixed-point twin — the
+    catalog's SQL fold, which stays the reference — at a second query
+    slice and depth (vec_id < 8, k = 3): same neighbors, same ranks,
+    same cos_sim doubles (integer fixed-point sums divided and rooted
+    identically on both engines)."""
+    from blow_spark.oracle import compare, duckdb_run
+    from blow_spark.queries import oracle_sql
+
+    sql = oracle_sql()["similarity_topk_bruteforce"]
+    for old, new in (("vec_id < 10", "vec_id < 8"), ("rank <= 5", "rank <= 3")):
+        assert sql.count(old) == 1, old
+        sql = sql.replace(old, new)
+    want = duckdb_run(sql, sf_dir)
+    assert len(want) == 8 * 3
     q = emb.filter(F.col("vec_id") < 8)
-    fold = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"])
-        for r in similarity.brute_force_topk(q, emb, k=3).collect()
-    }
-    vec = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"])
-        for r in similarity.brute_force_topk_vectorized(q, emb, k=3).collect()
-    }
-    assert fold == vec
+    r = compare("topk_vec_id_lt_8_k3", similarity.brute_force_topk(q, emb, k=3), want)
+    assert r.ok, r.detail
 
 
 def _persistent_rdd_ids(spark):
@@ -209,39 +212,16 @@ def test_vectorized_topk_query_cap_fails_fast(spark, emb):
         F.array(F.lit(1.0), F.lit(0.0)).alias("embedding"),
     )
     with pytest.raises(ValueError, match="brute_force_topk"):
-        similarity.brute_force_topk_vectorized(big, emb, k=3)
-    with pytest.raises(ValueError, match="ivf_topk"):
-        similarity.brute_force_topk_vectorized(
-            emb.limit(11), emb, k=3, max_query_rows=10
-        )
-    # at/under the cap the call still works end-to-end
-    out = similarity.brute_force_topk_vectorized(
-        emb.filter(F.col("vec_id") < 3), emb, k=2, max_query_rows=10
-    )
-    assert out.count() == 6
-
-
-def test_brute_force_topk_broadcast_cap_fails_fast(spark, emb):
-    """The broadcast-join query side of brute_force_topk is bounded on
-    POST-explode rows (Q·dim — the actual broadcast payload): a 10^6-row
-    query set at dim 5 (5M exploded rows > the 4M default cap) must raise
-    the routing error without materializing the join (round-4 verdict
-    item #1 — same fail-fast class as the vectorized kNN cap)."""
-    big = spark.range(1_000_000).select(
-        F.col("id").alias("vec_id"),
-        F.array(*[F.lit(float(i)) for i in range(5)]).alias("embedding"),
-    )
-    with pytest.raises(ValueError, match="srp_lsh_topk"):
         similarity.brute_force_topk(big, emb, k=3)
     with pytest.raises(ValueError, match="ivf_topk"):
         similarity.brute_force_topk(
-            emb.limit(11), emb, k=3, max_exploded_query_rows=10
+            emb.limit(11), emb, k=3, max_query_rows=10
         )
     # at/under the cap the call still works end-to-end
     out = similarity.brute_force_topk(
-        emb.filter(F.col("vec_id") < 2), emb, k=2, max_exploded_query_rows=1_000
+        emb.filter(F.col("vec_id") < 3), emb, k=2, max_query_rows=10
     )
-    assert out.count() == 4
+    assert out.count() == 6
 
 
 def test_cosine_pairs_exact_corpus_cap_fails_fast(spark, emb):
