@@ -516,8 +516,7 @@ SUMMARY_LINE_BUDGET = 1700
 #: of every row visible in the r14 summary (so PERF_r15 sees no key
 #: disappear) — values are rounded to 2 decimals to keep the line well
 #: inside the tail-capture budget at any plausible magnitude. The full
-#: 218-row record stays in BENCH_DETAIL.json, and "n_ran" (below) gives
-#: the driver the authoritative ran-count.
+#: 218-row record stays in BENCH_DETAIL.json.
 SUMMARY_ROWS = [
     "split_leakage_safe",
     "dedup_minhash_lsh",
@@ -725,10 +724,10 @@ def summary_line(timings: dict[str, float], sf_val, core=None, audit=None) -> st
     round over round and the driver's drop detection can never false-
     fire on a displaced row (round-14 verdict item #3: 3 rows that ran,
     flat, read as "dropped_from_bench" because the slowest-that-fit
-    packing displaced them). "n_ran" carries the authoritative count of
-    timed rows. The EXTENDED tier still counts toward "value" and
-    "n_queries"/"n_ran" and lives in BENCH_DETAIL.json next to this
-    script. When ``audit`` is given (round-13 verdict item #5), those
+    packing displaced them). "n_queries" is the count of timed rows.
+    The EXTENDED tier still counts toward "value" and "n_queries" and
+    lives in BENCH_DETAIL.json next to this script. When ``audit`` is
+    given (round-13 verdict item #5), those
     certification queries are subtotaled SEPARATELY as "audit_sec" and
     excluded from "value": they deliberately carry exact ground-truth
     branches, so their cost is certification overhead, not the
@@ -745,7 +744,6 @@ def summary_line(timings: dict[str, float], sf_val, core=None, audit=None) -> st
         "unit": "sec",
         "sf": sf_val,
         "n_queries": len(timings),
-        "n_ran": len(timings),
         "detail": "BENCH_DETAIL.json",
         "queries": {},
     }

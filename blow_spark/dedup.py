@@ -120,14 +120,6 @@ def _spread(df: DataFrame, per_part_rows: int | None = None) -> DataFrame:
         except Exception:
             return df  # unreadable footers: leave the scan alone
         target = min(target, -(-rows // per_part_rows))
-        if _os.environ.get("BLOW_SPARK_SPREAD_DEBUG") == "1":
-            import sys
-
-            print(
-                f"_spread: rows={rows} est_parts={est_parts} "
-                f"target={target}",
-                file=sys.stderr,
-            )
     if est_parts < target and target > 1:
         return df.repartition(target)
     return df

@@ -33,6 +33,7 @@ progressive/subsampled JPEG, ...):
 
 from __future__ import annotations
 
+import struct
 from collections.abc import Iterator
 
 import numpy as np
@@ -147,7 +148,6 @@ def _decode_png(content: bytes) -> np.ndarray:
     tests/test_multimodal.py. Row loop is Python — fine for the
     thumbnail/preview sizes a feature pass reads; swap PIL in for
     decode-heavy jobs when it ships."""
-    import struct
     import zlib
 
     if content[:8] != _PNG_MAGIC:
@@ -214,7 +214,6 @@ def encode_png(img: np.ndarray, interlace: bool = False) -> bytes:
     external dependency, used to materialize genuine .png files for the
     binaryFile ingest path
     (queries.multimodal_q.source_binaryfile_image_ingest)."""
-    import struct
     import zlib
 
     img = np.asarray(img, dtype=np.uint8)
@@ -261,8 +260,6 @@ def _decode_bmp(content: bytes) -> np.ndarray:
     BGR→RGB, and flips bottom-up storage to top-down. Anything outside
     the subset raises NotImplementedError (truthful gate, same policy
     as the PNG/JPEG decoders). Returns HxWx3 uint8 (row 0 = top)."""
-    import struct
-
     if content[:2] != b"BM":
         raise ValueError("not a BMP stream")
     (offset,) = struct.unpack_from("<I", content, 10)
@@ -384,8 +381,6 @@ def encode_qoi(img: np.ndarray, colorspace: int = 0) -> bytes:
     following the reference encoder's op-selection order (run → index
     → diff → luma → literal), which makes output byte-for-byte
     canonical and hand-verifiable against the one-page spec."""
-    import struct
-
     img = np.asarray(img, dtype=np.uint8)
     if img.ndim != 3 or img.shape[2] not in (3, 4):
         raise ValueError("QOI input must be HxWx3 or HxWx4 uint8")
@@ -442,8 +437,6 @@ def decode_qoi(content: bytes) -> np.ndarray:
     """Decode a QOI stream to HxWxC uint8 (C from the header). Raises
     ValueError on bad magic/header/stream-end, never returns partial
     pixels."""
-    import struct
-
     if content[:4] != _QOI_MAGIC:
         raise ValueError("not a QOI stream")
     w, h, nc, colorspace = struct.unpack(">IIBB", content[4:14])
@@ -737,86 +730,107 @@ def sample_frames(
 
 
 # --------------------------------------------------------------------------
-# Image-corpus fixture builder (test/gate scaffolding — NOT an operator)
+# Media-corpus fixture builders (test/gate scaffolding — NOT operators)
 # --------------------------------------------------------------------------
 
 
-def png_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
-    """Build (once per sf_dir, cached) a directory of genuine ``.png``
-    files — one per document, stdlib-encoded from the document's leading
-    192 bytes (lossless, so an oracle knows every pixel) — and return its
-    path. This is the FIXTURE side of the binaryFile ingest query,
-    hoisted out of the registered builder (round-4 verdict item #7) so
-    the operator itself is purely scan→decode→stats.
+def _doc_bytes(text, n: int) -> bytes:
+    """A document's leading ``n`` UTF-8 bytes, zero-padded to ``n``."""
+    return str(text).encode("utf-8")[:n].ljust(n, b"\0")
+
+
+def _media_fixture_dir(spark, sf_dir: str, n_docs: int, family: str, files_for_doc) -> str:
+    """Build (once per source version) the directory
+    ``$TMPDIR/blow_spark_<family>_<token>`` of media files for the
+    documents with ``doc_id < n_docs`` and return its path.
+    ``files_for_doc(doc_id, text)`` yields ``(file_name, bytes)`` pairs;
+    this is the one place that caches, sweeps and writes media fixtures.
 
     The files are written DISTRIBUTED — each executor task encodes and
-    writes its partition's images inside mapInPandas — not via a driver
-    collect loop: on a cluster this is exactly how an image corpus is
-    staged (tasks write objects to shared storage); in local mode every
-    task sees the same filesystem. A ``_SUCCESS`` marker makes the build
-    idempotent across the many calls the gate/bench make; concurrent
-    builders write the same deterministic bytes to the same names, so a
-    race is harmless (last-write-wins with identical content)."""
+    writes its partition's documents inside one flatMap
+    (``Pipeline.flat_map``) — not via a driver collect loop: on a
+    cluster this is how an image corpus is staged (tasks write objects
+    to shared storage); in local mode every task sees the same
+    filesystem.
+
+    The token hashes the family, ``sf_dir``, ``n_docs`` and the file
+    version of ``documents.parquet`` (every file's name, size and
+    mtime_ns), not just the path: fixture directories get regenerated
+    in place, and a cache keyed on path alone would silently
+    desynchronize a query from its oracle. Each family keeps one live
+    cache; idle siblings with another token are swept
+    (``materialize.cleanup_stale_siblings``). A ``_SUCCESS`` marker
+    makes the build idempotent across processes, and a hit touches the
+    dir so the age-guarded sweep spares it. Concurrent builders write
+    the same deterministic bytes to the same names, so a race is
+    harmless (last write wins with identical content)."""
     import hashlib
     import os
     import tempfile
 
-    import pandas as pd
-
-    from blow_spark.shipping import ensure_package_shipped
-    from blow_spark.sources import read_table
-
-    # The cache token includes a FINGERPRINT of the source table (file
-    # names + sizes + mtimes), not just its path: fixture directories
-    # get regenerated in place between driver rounds, and a stale PNG
-    # cache keyed on path alone would silently desynchronize the query
-    # from its oracle.
-    src = os.path.join(sf_dir, "documents.parquet")
-    stat_parts = []
-    if os.path.isdir(src):
-        for fn in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, fn))
-            stat_parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        stat_parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    token = hashlib.sha256(
-        f"{sf_dir}|{n_docs}|{'|'.join(stat_parts)}".encode()
-    ).hexdigest()[:12]
-    img_dir = os.path.join(tempfile.gettempdir(), f"blow_spark_pngs_{token}")
-    # exactly one live cache per family: siblings with a different
-    # fingerprint token are stale by construction (round-11 verdict
-    # item #2 — regenerated fixtures orphaned the old cache forever)
     from blow_spark.materialize import cleanup_stale_siblings
+    from blow_spark.pipeline import Pipeline
+    from blow_spark.sources import _file_version, read_table
 
-    cleanup_stale_siblings(
-        img_dir, os.path.join(tempfile.gettempdir(), "blow_spark_pngs_*")
-    )
-    marker = os.path.join(img_dir, "_SUCCESS")
+    version = _file_version(os.path.join(sf_dir, "documents.parquet"))
+    token = hashlib.sha256(f"{family}|{sf_dir}|{n_docs}|{version}".encode()).hexdigest()[:12]
+    prefix = os.path.join(tempfile.gettempdir(), f"blow_spark_{family}_")
+    out_dir = prefix + token
+    cleanup_stale_siblings(out_dir, prefix + "*")
+    marker = os.path.join(out_dir, "_SUCCESS")
     if os.path.exists(marker):
-        os.utime(img_dir)  # mark live: the age-guarded janitor spares it
-        return img_dir
-    os.makedirs(img_dir, exist_ok=True)
-    ensure_package_shipped(spark)
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < n_docs)
-        .select("doc_id", "text")
-    )
+        os.utime(out_dir)
+        return out_dir
+    os.makedirs(out_dir, exist_ok=True)
 
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = str(text).encode("utf-8")[:192].ljust(192, b"\0")
-                img = np.frombuffer(raw, dtype=np.uint8).reshape(8, 8, 3)
-                with open(os.path.join(img_dir, f"{int(doc_id)}.png"), "wb") as f:
-                    f.write(encode_png(img))
-            yield pd.DataFrame({"n": [len(pdf)]})
+    def write_doc(row):
+        for name, data in files_for_doc(int(row.doc_id), row.text):
+            with open(os.path.join(out_dir, name), "wb") as f:
+                f.write(data)
+        return ()
 
-    d.mapInPandas(write_part, "n long").count()  # run the write job
+    docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < n_docs)
+    Pipeline(docs.select("doc_id", "text")).flat_map(write_doc, "n long").sink()
     with open(marker, "w"):
         pass
-    return img_dir
+    return out_dir
+
+
+def decode_media_files(spark, media_dir: str, glob: str, decode_one, schema: str) -> DataFrame:
+    """Per-file flatMap over the ``glob`` files of a media directory:
+    Spark's ``binaryFile`` source scans one ``(path, content)`` row per
+    object (no decode in the scan) and ``decode_one(row)`` yields that
+    file's output rows (``Pipeline.flat_map``). ``pathGlobFilter``
+    prunes at file-listing time, so the ``_SUCCESS`` marker is never
+    read. At scale only the object-store URI changes."""
+    from blow_spark.pipeline import Pipeline
+
+    files = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(media_dir)
+    return Pipeline(files.select("path", "content")).flat_map(decode_one, schema).df
+
+
+def media_stem(path: str) -> str:
+    """File name without directory or extension: the ``doc_id`` (plus
+    any variant suffix) a fixture file is named by."""
+    import os
+
+    return os.path.splitext(os.path.basename(path))[0]
+
+
+def png_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
+    """Build (once per source version, cached) a directory of genuine
+    ``.png`` files — one per document, stdlib-encoded from the
+    document's leading 192 bytes (lossless, so an oracle knows every
+    pixel) — and return its path. This is the FIXTURE side of the
+    binaryFile ingest query, hoisted out of the registered builder
+    (round-4 verdict item #7) so the operator itself is purely
+    scan→decode→stats. Built by ``_media_fixture_dir``."""
+
+    def files(doc_id, text):
+        img = np.frombuffer(_doc_bytes(text, 192), dtype=np.uint8).reshape(8, 8, 3)
+        yield f"{doc_id}.png", encode_png(img)
+
+    return _media_fixture_dir(spark, sf_dir, n_docs, "pngs", files)
 
 
 # --------------------------------------------------------------------------
@@ -1010,6 +1024,27 @@ def _edge_pad(plane: np.ndarray, ph: int, pw: int) -> np.ndarray:
     return out
 
 
+def _jpeg_seg(marker: int, payload: bytes) -> bytes:
+    """One JPEG marker segment: marker, big-endian length, payload."""
+    return struct.pack(">HH", marker, len(payload) + 2) + payload
+
+
+def _jpeg_dht(cls: int, tid: int, spec) -> bytes:
+    """DHT segment for one Huffman table ``spec = (bits, values)``."""
+    bits, vals = spec
+    return _jpeg_seg(0xFFC4, bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals))
+
+
+def _jpeg_head(ql: np.ndarray, qc: np.ndarray, ncomp: int, sof: bytes) -> bytes:
+    """SOI, the JFIF APP0 segment (v1.1, 1:1 aspect, no thumbnail), the
+    zigzag-ordered DQT segments (chroma only for color) and the frame
+    header ``sof``: the part every encoder here writes the same way."""
+    out = _JPEG_MAGIC + _jpeg_seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    for tid, tbl in enumerate((ql,) if ncomp == 1 else (ql, qc)):
+        out += _jpeg_seg(0xFFDB, bytes([tid]) + bytes(int(tbl[r, c]) for (r, c) in _JZZ))
+    return out + sof
+
+
 def encode_jpeg_baseline(
     img: np.ndarray, quality: int = 50, subsampling: str = "444"
 ) -> bytes:
@@ -1023,8 +1058,6 @@ def encode_jpeg_baseline(
     inputs — quantize deterministically), zigzag, DC differential,
     RLE/EOB AC coding, byte stuffing. The write-side twin of
     _decode_jpeg."""
-    import struct
-
     if subsampling not in ("444", "420"):
         raise NotImplementedError("JPEG encoder: subsampling 444 or 420")
     img = np.asarray(img, dtype=np.uint8)
@@ -1117,36 +1150,19 @@ def encode_jpeg_baseline(
                             code, ln = ac_tbl[0x00]  # EOB
                             bw.write(code, ln)
     scan = bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    def dqt(tid: int, tbl: np.ndarray) -> bytes:
-        return seg(
-            0xFFDB, bytes([tid]) + bytes(int(tbl[r, c]) for (r, c) in _JZZ)
-        )
-
-    def dht(cls: int, tid: int, spec) -> bytes:
-        bits, vals = spec
-        return seg(0xFFC4, bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals))
-
     ncomp = 1 if gray else 3
     sof_comps = b"".join(
         bytes([i + 1, (planes[i][3] << 4) | planes[i][4], 0 if i == 0 else 1])
         for i in range(ncomp)
     )
-    sof = seg(0xFFC0, struct.pack(">BHHB", 8, h, w, ncomp) + sof_comps)
+    sof = _jpeg_seg(0xFFC0, struct.pack(">BHHB", 8, h, w, ncomp) + sof_comps)
     sos_comps = b"".join(
         bytes([i + 1, 0x00 if i == 0 else 0x11]) for i in range(ncomp)
     )
-    sos = seg(0xFFDA, bytes([ncomp]) + sos_comps + bytes([0, 63, 0]))
-    app0 = seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out = _JPEG_MAGIC + app0 + dqt(0, ql)
+    sos = _jpeg_seg(0xFFDA, bytes([ncomp]) + sos_comps + bytes([0, 63, 0]))
+    out = _jpeg_head(ql, qc, ncomp, sof) + _jpeg_dht(0, 0, _JH_DC_LUMA) + _jpeg_dht(1, 0, _JH_AC_LUMA)
     if not gray:
-        out += dqt(1, qc)
-    out += sof + dht(0, 0, _JH_DC_LUMA) + dht(1, 0, _JH_AC_LUMA)
-    if not gray:
-        out += dht(0, 1, _JH_DC_CHROMA) + dht(1, 1, _JH_AC_CHROMA)
+        out += _jpeg_dht(0, 1, _JH_DC_CHROMA) + _jpeg_dht(1, 1, _JH_AC_CHROMA)
     return out + sos + scan + b"\xff\xd9"
 
 
@@ -1315,8 +1331,6 @@ def encode_jpeg_progressive(
     the custom flat-8 table (_JH_AC_PROG) — the scan structure mozjpeg/
     libjpeg actually emit for web JPEGs. Decoded in full by
     decode_jpeg_progressive."""
-    import struct
-
     img = np.asarray(img, dtype=np.uint8)
     gray = img.ndim == 2
     h, w = img.shape[:2]
@@ -1400,30 +1414,16 @@ def encode_jpeg_progressive(
                 bw.write(code, ln)
         ac_scans.append(bw.flush())
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    def dqt(tid: int, tbl: np.ndarray) -> bytes:
-        return seg(0xFFDB, bytes([tid]) + bytes(int(tbl[r_, c_]) for (r_, c_) in _JZZ))
-
-    def dht(cls: int, tid: int, spec) -> bytes:
-        bits, vals = spec
-        return seg(0xFFC4, bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals))
-
     ncomp = len(planes)
     sof_comps = b"".join(
         bytes([i + 1, 0x11, planes[i][2]]) for i in range(ncomp)
     )
-    sof2 = seg(0xFFC2, struct.pack(">BHHB", 8, h, w, ncomp) + sof_comps)
-    app0 = seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out = _JPEG_MAGIC + app0 + dqt(0, ql)
+    sof2 = _jpeg_seg(0xFFC2, struct.pack(">BHHB", 8, h, w, ncomp) + sof_comps)
+    out = _jpeg_head(ql, qc, ncomp, sof2) + _jpeg_dht(0, 0, _JH_DC_LUMA) + _jpeg_dht(1, 0, _JH_AC_LUMA)
     if ncomp > 1:
-        out += dqt(1, qc)
-    out += sof2 + dht(0, 0, _JH_DC_LUMA) + dht(1, 0, _JH_AC_LUMA)
-    if ncomp > 1:
-        out += dht(0, 1, _JH_DC_CHROMA) + dht(1, 1, _JH_AC_CHROMA)
+        out += _jpeg_dht(0, 1, _JH_DC_CHROMA) + _jpeg_dht(1, 1, _JH_AC_CHROMA)
     # DC scan SOS: all components, Ss=0 Se=0 AhAl=0
-    sos_dc = seg(
+    sos_dc = _jpeg_seg(
         0xFFDA,
         bytes([ncomp])
         + b"".join(bytes([i + 1, (planes[i][2] << 4)]) for i in range(ncomp))
@@ -1431,7 +1431,7 @@ def encode_jpeg_progressive(
     )
     out += sos_dc + dc_scan
     for ci in range(ncomp):
-        sos_ac = seg(
+        sos_ac = _jpeg_seg(
             0xFFDA,
             bytes([1, ci + 1, planes[ci][2]]) + bytes([1, 63, 0]),
         )
@@ -1444,8 +1444,6 @@ def _assemble_jpeg_progressive_sa(qblocks, planes, h, w, ql, qc) -> bytes:
     (see encode_jpeg_progressive). Scan order matches libjpeg's default:
     DC first (all comps, Al=1) -> AC first per comp per band (Al=1) ->
     DC refine (Ah=1) -> AC refine per comp per band (Ah=1, Al=0)."""
-    import struct
-
     ncomp = len(planes)
     al = 1
     n_blocks = len(qblocks[0])
@@ -1506,29 +1504,13 @@ def _assemble_jpeg_progressive_sa(qblocks, planes, h, w, ql, qc) -> bytes:
                 )
             )
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    def dqt(tid: int, tbl: np.ndarray) -> bytes:
-        return seg(
-            0xFFDB, bytes([tid]) + bytes(int(tbl[r_, c_]) for (r_, c_) in _JZZ)
-        )
-
-    def dht(cls: int, tid: int, spec) -> bytes:
-        bits, vals = spec
-        return seg(0xFFC4, bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals))
-
     sof_comps = b"".join(bytes([i + 1, 0x11, planes[i][2]]) for i in range(ncomp))
-    sof2 = seg(0xFFC2, struct.pack(">BHHB", 8, h, w, ncomp) + sof_comps)
-    app0 = seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out = _JPEG_MAGIC + app0 + dqt(0, ql)
+    sof2 = _jpeg_seg(0xFFC2, struct.pack(">BHHB", 8, h, w, ncomp) + sof_comps)
+    out = _jpeg_head(ql, qc, ncomp, sof2) + _jpeg_dht(0, 0, _JH_DC_LUMA) + _jpeg_dht(1, 0, _JH_AC_PROG)
     if ncomp > 1:
-        out += dqt(1, qc)
-    out += sof2 + dht(0, 0, _JH_DC_LUMA) + dht(1, 0, _JH_AC_PROG)
-    if ncomp > 1:
-        out += dht(0, 1, _JH_DC_CHROMA)
+        out += _jpeg_dht(0, 1, _JH_DC_CHROMA)
     for sos_payload, entropy in scans:
-        out += seg(0xFFDA, sos_payload) + entropy
+        out += _jpeg_seg(0xFFDA, sos_payload) + entropy
     return out + b"\xff\xd9"
 
 
@@ -1562,8 +1544,6 @@ def decode_jpeg_progressive(
     with realized decode facts: per-scan (Ss, Se, Ah, Al) census plus
     used_eobrun / used_zrl / used_newsig_refine / corr_bits counters —
     the proof bits the oracle gate asserts."""
-    import struct
-
     if content[:2] != _JPEG_MAGIC:
         raise ValueError("not a JPEG stream")
     st = stats if stats is not None else {}
@@ -1843,8 +1823,6 @@ def decode_jpeg_progressive_dc(content: bytes) -> np.ndarray:
     decode_image's contract is exactness. Supports grayscale/YCbCr at
     1-2 sampling factors, restart markers, and successive-approximation
     DC (Ah=0 first scans, any Al). Raises on non-progressive input."""
-    import struct
-
     if content[:2] != _JPEG_MAGIC:
         raise ValueError("not a JPEG stream")
     pos = 2
@@ -2054,8 +2032,6 @@ def _decode_jpeg(content: bytes) -> np.ndarray:
     upsampling. Progressive/arithmetic/12-bit streams raise
     NotImplementedError (truthful feature gate, same policy as the
     PNG subset)."""
-    import struct
-
     if content[:2] != _JPEG_MAGIC:
         raise ValueError("not a JPEG stream")
     pos = 2
@@ -2265,6 +2241,23 @@ def _decode_jpeg(content: bytes) -> np.ndarray:
     return np.clip(np.round(np.stack([r, g, b], axis=-1)), 0, 255).astype(np.uint8)
 
 
+def _dithered_block_image(text) -> np.ndarray:
+    """The 64x64 grayscale JPEG fixture image of a document: 64 flat
+    8x8 blocks (block k at grid divmod(k, 8)) whose gray levels are the
+    document's leading 64 UTF-8 bytes. Two pixels of each
+    interior-valued block carry a DC-neutral ±1 dither whose AC energy
+    is below half the smallest AC quantizer at quality 50 and 75, so
+    the encoder must destroy it."""
+    img = np.zeros((64, 64), dtype=np.uint8)
+    for k, v in enumerate(_doc_bytes(text, 64)):
+        r, c = divmod(k, 8)
+        img[r * 8 : (r + 1) * 8, c * 8 : (c + 1) * 8] = v
+        if 0 < v < 255:
+            img[r * 8, c * 8] = v + 1
+            img[r * 8, c * 8 + 1] = v - 1
+    return img
+
+
 def jpeg_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
     """Genuine ``.jpg`` corpus fixture (the JPEG twin of
     png_corpus_fixture_dir): one 64x64 grayscale baseline JPEG per
@@ -2276,70 +2269,12 @@ def jpeg_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
     of each interior-valued block carry a ±1 dither whose AC energy is
     provably below half the smallest AC quantizer — the encoder MUST
     destroy it (that's the lossy path working), which the oracle's
-    closed form silently asserts. Written DISTRIBUTED inside
-    mapInPandas, cached per source fingerprint, exactly like the PNG
-    fixture."""
-    import hashlib
-    import os
-    import tempfile
+    closed form silently asserts. Built by ``_media_fixture_dir``."""
 
-    import pandas as pd
+    def files(doc_id, text):
+        yield f"{doc_id}.jpg", encode_jpeg_baseline(_dithered_block_image(text), quality=50)
 
-    from blow_spark.shipping import ensure_package_shipped
-    from blow_spark.sources import read_table
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    stat_parts = []
-    if os.path.isdir(src):
-        for fn in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, fn))
-            stat_parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        stat_parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    token = hashlib.sha256(
-        f"jpeg|{sf_dir}|{n_docs}|{'|'.join(stat_parts)}".encode()
-    ).hexdigest()[:12]
-    img_dir = os.path.join(tempfile.gettempdir(), f"blow_spark_jpgs_{token}")
-    # exactly one live cache per family: siblings with a different
-    # fingerprint token are stale by construction (round-11 verdict
-    # item #2 — regenerated fixtures orphaned the old cache forever)
-    from blow_spark.materialize import cleanup_stale_siblings
-
-    cleanup_stale_siblings(
-        img_dir, os.path.join(tempfile.gettempdir(), "blow_spark_jpgs_*")
-    )
-    marker = os.path.join(img_dir, "_SUCCESS")
-    if os.path.exists(marker):
-        os.utime(img_dir)  # mark live: the age-guarded janitor spares it
-        return img_dir
-    os.makedirs(img_dir, exist_ok=True)
-    ensure_package_shipped(spark)
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < n_docs)
-        .select("doc_id", "text")
-    )
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = str(text).encode("utf-8")[:64].ljust(64, b"\0")
-                img = np.zeros((64, 64), dtype=np.uint8)
-                for k, v in enumerate(raw):
-                    r, c = divmod(k, 8)
-                    img[r * 8 : (r + 1) * 8, c * 8 : (c + 1) * 8] = v
-                    if 0 < v < 255:  # sub-quantizer dither, DC-neutral
-                        img[r * 8, c * 8] = v + 1
-                        img[r * 8, c * 8 + 1] = v - 1
-                with open(os.path.join(img_dir, f"{int(doc_id)}.jpg"), "wb") as f:
-                    f.write(encode_jpeg_baseline(img, quality=50))
-            yield pd.DataFrame({"n": [len(pdf)]})
-
-    d.mapInPandas(write_part, "n long").count()
-    with open(marker, "w"):
-        pass
-    return img_dir
+    return _media_fixture_dir(spark, sf_dir, n_docs, "jpgs", files)
 
 
 def jpeg420_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
@@ -2369,80 +2304,29 @@ def jpeg420_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
     A broken MCU interleave, chroma downsample, Huffman table
     selection, upsample, or color transform shifts whole channels —
     the per-channel sums the oracle checks make every one visible.
-    Written DISTRIBUTED inside mapInPandas, cached per source
-    fingerprint, exactly like the 4:4:4 fixture."""
-    import hashlib
-    import os
-    import tempfile
+    Built by ``_media_fixture_dir``."""
 
-    import pandas as pd
+    def files(doc_id, text):
+        img = np.zeros((64, 64, 3), dtype=np.uint8)
+        for t, v in enumerate(_doc_bytes(text, 16)):
+            ty, tx = divmod(t, 4)
+            vp = 32 + (v % 160)
+            img[ty * 16 : (ty + 1) * 16, tx * 16 : (tx + 1) * 16] = (vp, vp, vp + 34 * (t % 2))
+        yield f"{doc_id}.jpg", encode_jpeg_baseline(img, quality=50, subsampling="420")
 
-    from blow_spark.shipping import ensure_package_shipped
-    from blow_spark.sources import read_table
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    stat_parts = []
-    if os.path.isdir(src):
-        for fn in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, fn))
-            stat_parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        stat_parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    token = hashlib.sha256(
-        f"jpeg420|{sf_dir}|{n_docs}|{'|'.join(stat_parts)}".encode()
-    ).hexdigest()[:12]
-    img_dir = os.path.join(tempfile.gettempdir(), f"blow_spark_j420_{token}")
-    from blow_spark.materialize import cleanup_stale_siblings
-
-    cleanup_stale_siblings(
-        img_dir, os.path.join(tempfile.gettempdir(), "blow_spark_j420_*")
-    )
-    marker = os.path.join(img_dir, "_SUCCESS")
-    if os.path.exists(marker):
-        os.utime(img_dir)  # mark live: the age-guarded janitor spares it
-        return img_dir
-    os.makedirs(img_dir, exist_ok=True)
-    ensure_package_shipped(spark)
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < n_docs)
-        .select("doc_id", "text")
-    )
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = str(text).encode("utf-8")[:16].ljust(16, b"\0")
-                img = np.zeros((64, 64, 3), dtype=np.uint8)
-                for t, v in enumerate(raw):
-                    ty, tx = divmod(t, 4)
-                    vp = 32 + (v % 160)
-                    img[ty * 16 : (ty + 1) * 16, tx * 16 : (tx + 1) * 16] = (
-                        vp,
-                        vp,
-                        vp + 34 * (t % 2),
-                    )
-                with open(os.path.join(img_dir, f"{int(doc_id)}.jpg"), "wb") as f:
-                    f.write(encode_jpeg_baseline(img, quality=50, subsampling="420"))
-            yield pd.DataFrame({"n": [len(pdf)]})
-
-    d.mapInPandas(write_part, "n long").count()
-    with open(marker, "w"):
-        pass
-    return img_dir
+    return _media_fixture_dir(spark, sf_dir, n_docs, "j420", files)
 
 
 def jpeg_requality_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
     """RE-ENCODED duplicate-pair ``.jpg`` corpus (round 13, for the
     perceptual dHash near-dup operator): each document's 64x64
-    grayscale fixture image (same construction as
-    jpeg_corpus_fixture_dir — 64 flat 8x8 blocks carrying the doc's
-    leading UTF-8 bytes, DC-neutral sub-quantizer dither) is written
-    TWICE, at quality 50 AND quality 75 — a planted pair of perceptual
-    duplicates whose files are byte-different AND pixel-different, the
-    exact situation byte-hash dedup cannot see and perceptual hashing
-    exists for.
+    grayscale fixture image (``_dithered_block_image``, the
+    jpeg_corpus_fixture_dir image — 64 flat 8x8 blocks carrying the
+    doc's leading UTF-8 bytes, DC-neutral sub-quantizer dither) is
+    written TWICE, at quality 50 AND quality 75 — a planted pair of
+    perceptual duplicates whose files are byte-different AND
+    pixel-different, the exact situation byte-hash dedup cannot see and
+    perceptual hashing exists for.
 
     Why 75 and not 90 for the second encode: at q75 the Annex K luma
     DC quantizer scales to (16*50+50)//100 = 8, which EQUALS the
@@ -2457,68 +2341,14 @@ def jpeg_requality_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> s
     scaled AC quantizer at both qualities (<1 vs 10/2 at q50, 5/2 at
     q75), so the encoder provably destroys it and every decoded block
     is flat. Files are named ``{doc_id}_q50.jpg`` / ``{doc_id}_q75.jpg``;
-    written DISTRIBUTED inside mapInPandas, cached per source
-    fingerprint, exactly like the other image fixtures."""
-    import hashlib
-    import os
-    import tempfile
+    built by ``_media_fixture_dir``."""
 
-    import pandas as pd
+    def files(doc_id, text):
+        img = _dithered_block_image(text)
+        for q in (50, 75):
+            yield f"{doc_id}_q{q}.jpg", encode_jpeg_baseline(img, quality=q)
 
-    from blow_spark.shipping import ensure_package_shipped
-    from blow_spark.sources import read_table
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    stat_parts = []
-    if os.path.isdir(src):
-        for fn in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, fn))
-            stat_parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        stat_parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    token = hashlib.sha256(
-        f"jpegrq|{sf_dir}|{n_docs}|{'|'.join(stat_parts)}".encode()
-    ).hexdigest()[:12]
-    img_dir = os.path.join(tempfile.gettempdir(), f"blow_spark_jpgrq_{token}")
-    from blow_spark.materialize import cleanup_stale_siblings
-
-    cleanup_stale_siblings(
-        img_dir, os.path.join(tempfile.gettempdir(), "blow_spark_jpgrq_*")
-    )
-    marker = os.path.join(img_dir, "_SUCCESS")
-    if os.path.exists(marker):
-        os.utime(img_dir)  # mark live: the age-guarded janitor spares it
-        return img_dir
-    os.makedirs(img_dir, exist_ok=True)
-    ensure_package_shipped(spark)
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < n_docs)
-        .select("doc_id", "text")
-    )
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = str(text).encode("utf-8")[:64].ljust(64, b"\0")
-                img = np.zeros((64, 64), dtype=np.uint8)
-                for k, v in enumerate(raw):
-                    r, c = divmod(k, 8)
-                    img[r * 8 : (r + 1) * 8, c * 8 : (c + 1) * 8] = v
-                    if 0 < v < 255:  # sub-quantizer dither, DC-neutral
-                        img[r * 8, c * 8] = v + 1
-                        img[r * 8, c * 8 + 1] = v - 1
-                for q in (50, 75):
-                    path = os.path.join(img_dir, f"{int(doc_id)}_q{q}.jpg")
-                    with open(path, "wb") as f:
-                        f.write(encode_jpeg_baseline(img, quality=q))
-            yield pd.DataFrame({"n": [len(pdf)]})
-
-    d.mapInPandas(write_part, "n long").count()
-    with open(marker, "w"):
-        pass
-    return img_dir
+    return _media_fixture_dir(spark, sf_dir, n_docs, "jpgrq", files)
 
 
 def jpeg_progressive_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
@@ -2529,66 +2359,13 @@ def jpeg_progressive_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) ->
     quantizers match the baseline fixture's, the DC-scan-only decode of
     these files reproduces the baseline closed form exactly (the AC
     scan carries only the destroyed dither — zero coefficients — so
-    DC-only IS the full reconstruction here). Cached per source
-    fingerprint like the other image fixtures."""
-    import hashlib
-    import os
-    import tempfile
+    DC-only IS the full reconstruction here). Built by
+    ``_media_fixture_dir``."""
 
-    import pandas as pd
+    def files(doc_id, text):
+        yield f"{doc_id}.jpg", encode_jpeg_progressive(_dithered_block_image(text), quality=50)
 
-    from blow_spark.shipping import ensure_package_shipped
-    from blow_spark.sources import read_table
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    stat_parts = []
-    if os.path.isdir(src):
-        for fn in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, fn))
-            stat_parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        stat_parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    token = hashlib.sha256(
-        f"jpegprog|{sf_dir}|{n_docs}|{'|'.join(stat_parts)}".encode()
-    ).hexdigest()[:12]
-    img_dir = os.path.join(tempfile.gettempdir(), f"blow_spark_jpgprog_{token}")
-    from blow_spark.materialize import cleanup_stale_siblings
-
-    cleanup_stale_siblings(
-        img_dir, os.path.join(tempfile.gettempdir(), "blow_spark_jpgprog_*")
-    )
-    marker = os.path.join(img_dir, "_SUCCESS")
-    if os.path.exists(marker):
-        os.utime(img_dir)  # mark live: the age-guarded janitor spares it
-        return img_dir
-    os.makedirs(img_dir, exist_ok=True)
-    ensure_package_shipped(spark)
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < n_docs)
-        .select("doc_id", "text")
-    )
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = str(text).encode("utf-8")[:64].ljust(64, b"\0")
-                img = np.zeros((64, 64), dtype=np.uint8)
-                for k, v in enumerate(raw):
-                    r, c = divmod(k, 8)
-                    img[r * 8 : (r + 1) * 8, c * 8 : (c + 1) * 8] = v
-                    if 0 < v < 255:  # sub-quantizer dither, DC-neutral
-                        img[r * 8, c * 8] = v + 1
-                        img[r * 8, c * 8 + 1] = v - 1
-                with open(os.path.join(img_dir, f"{int(doc_id)}.jpg"), "wb") as f:
-                    f.write(encode_jpeg_progressive(img, quality=50))
-            yield pd.DataFrame({"n": [len(pdf)]})
-
-    d.mapInPandas(write_part, "n long").count()
-    with open(marker, "w"):
-        pass
-    return img_dir
+    return _media_fixture_dir(spark, sf_dir, n_docs, "jpgprog", files)
 
 
 def phash_dct_matrix_e6() -> "np.ndarray":
@@ -2619,73 +2396,17 @@ def jpeg_phash_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
     and mean-threshold hashes but leaves every AC DCT coefficient
     untouched). Decodes stay closed-form: q50 rounds odd v up, q75 is
     the identity, so the brightness file decodes to min(v+6, 255)
-    exactly. Cached per source fingerprint like the other fixtures."""
-    import hashlib
-    import os
-    import tempfile
+    exactly. Files are named ``{doc_id}_q50.jpg`` / ``_q75.jpg`` /
+    ``_b75.jpg``; built by ``_media_fixture_dir``."""
 
-    import pandas as pd
+    def files(doc_id, text):
+        img = _dithered_block_image(text)
+        bright = np.minimum(img.astype(np.int32) + 6, 255).astype(np.uint8)
+        yield f"{doc_id}_q50.jpg", encode_jpeg_baseline(img, quality=50)
+        yield f"{doc_id}_q75.jpg", encode_jpeg_baseline(img, quality=75)
+        yield f"{doc_id}_b75.jpg", encode_jpeg_baseline(bright, quality=75)
 
-    from blow_spark.shipping import ensure_package_shipped
-    from blow_spark.sources import read_table
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    stat_parts = []
-    if os.path.isdir(src):
-        for fn in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, fn))
-            stat_parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        stat_parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    token = hashlib.sha256(
-        f"jpegph|{sf_dir}|{n_docs}|{'|'.join(stat_parts)}".encode()
-    ).hexdigest()[:12]
-    img_dir = os.path.join(tempfile.gettempdir(), f"blow_spark_jpgph_{token}")
-    from blow_spark.materialize import cleanup_stale_siblings
-
-    cleanup_stale_siblings(
-        img_dir, os.path.join(tempfile.gettempdir(), "blow_spark_jpgph_*")
-    )
-    marker = os.path.join(img_dir, "_SUCCESS")
-    if os.path.exists(marker):
-        os.utime(img_dir)  # mark live: the age-guarded janitor spares it
-        return img_dir
-    os.makedirs(img_dir, exist_ok=True)
-    ensure_package_shipped(spark)
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < n_docs)
-        .select("doc_id", "text")
-    )
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = str(text).encode("utf-8")[:64].ljust(64, b"\0")
-                img = np.zeros((64, 64), dtype=np.uint8)
-                for k, v in enumerate(raw):
-                    r, c = divmod(k, 8)
-                    img[r * 8 : (r + 1) * 8, c * 8 : (c + 1) * 8] = v
-                    if 0 < v < 255:  # sub-quantizer dither, DC-neutral
-                        img[r * 8, c * 8] = v + 1
-                        img[r * 8, c * 8 + 1] = v - 1
-                bright = np.minimum(img.astype(np.int32) + 6, 255).astype(
-                    np.uint8
-                )
-                base = os.path.join(img_dir, str(int(doc_id)))
-                with open(f"{base}_q50.jpg", "wb") as f:
-                    f.write(encode_jpeg_baseline(img, quality=50))
-                with open(f"{base}_q75.jpg", "wb") as f:
-                    f.write(encode_jpeg_baseline(img, quality=75))
-                with open(f"{base}_b75.jpg", "wb") as f:
-                    f.write(encode_jpeg_baseline(bright, quality=75))
-            yield pd.DataFrame({"n": [len(pdf)]})
-
-    d.mapInPandas(write_part, "n long").count()
-    with open(marker, "w"):
-        pass
-    return img_dir
+    return _media_fixture_dir(spark, sf_dir, n_docs, "jpgph", files)
 
 
 #: orthonormal (7,7) DCT basis block — used by the SA fixture to craft
@@ -2754,68 +2475,15 @@ def jpeg_progressive_sa_corpus_fixture_dir(
     written by encode_jpeg_progressive(successive=True) — and
     ``{id}b.jpg`` — the baseline encoding of the SAME image — so the
     full-progressive decode can be pixel-matched against an
-    INDEPENDENTLY CODED baseline twin in-plan. Cached per source
-    fingerprint like the other image fixtures."""
-    import hashlib
-    import os
-    import tempfile
+    INDEPENDENTLY CODED baseline twin in-plan. Built by
+    ``_media_fixture_dir``."""
 
-    import pandas as pd
+    def files(doc_id, text):
+        img = jpeg_sa_fixture_image(_doc_bytes(text, 64))
+        yield f"{doc_id}p.jpg", encode_jpeg_progressive(img, quality=50, successive=True)
+        yield f"{doc_id}b.jpg", encode_jpeg_baseline(img, quality=50)
 
-    from blow_spark.shipping import ensure_package_shipped
-    from blow_spark.sources import read_table
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    stat_parts = []
-    if os.path.isdir(src):
-        for fn in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, fn))
-            stat_parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        stat_parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    token = hashlib.sha256(
-        f"jpegsa|{sf_dir}|{n_docs}|{'|'.join(stat_parts)}".encode()
-    ).hexdigest()[:12]
-    img_dir = os.path.join(tempfile.gettempdir(), f"blow_spark_jpgsa_{token}")
-    from blow_spark.materialize import cleanup_stale_siblings
-
-    cleanup_stale_siblings(
-        img_dir, os.path.join(tempfile.gettempdir(), "blow_spark_jpgsa_*")
-    )
-    marker = os.path.join(img_dir, "_SUCCESS")
-    if os.path.exists(marker):
-        os.utime(img_dir)  # mark live: the age-guarded janitor spares it
-        return img_dir
-    os.makedirs(img_dir, exist_ok=True)
-    ensure_package_shipped(spark)
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < n_docs)
-        .select("doc_id", "text")
-    )
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = str(text).encode("utf-8")[:64]
-                img = jpeg_sa_fixture_image(raw)
-                with open(
-                    os.path.join(img_dir, f"{int(doc_id)}p.jpg"), "wb"
-                ) as f:
-                    f.write(
-                        encode_jpeg_progressive(img, quality=50, successive=True)
-                    )
-                with open(
-                    os.path.join(img_dir, f"{int(doc_id)}b.jpg"), "wb"
-                ) as f:
-                    f.write(encode_jpeg_baseline(img, quality=50))
-            yield pd.DataFrame({"n": [len(pdf)]})
-
-    d.mapInPandas(write_part, "n long").count()
-    with open(marker, "w"):
-        pass
-    return img_dir
+    return _media_fixture_dir(spark, sf_dir, n_docs, "jpgsa", files)
 
 
 #: fixed 4-color palette for the QOI fixture's INDEX-op section —
@@ -2841,66 +2509,26 @@ def qoi_fixture_pixel(r: int, c: int, v: int) -> tuple[int, int, int]:
     return QOI_FIXTURE_PALETTE[(r + c) % 4]
 
 
+def _qoi_fixture_image(text) -> np.ndarray:
+    """The 64x64 RGB QOI/Adam7 fixture image of a document: row r from
+    its r-th leading UTF-8 byte via ``qoi_fixture_pixel``."""
+    raw = _doc_bytes(text, 64)
+    img = np.zeros((64, 64, 3), dtype=np.uint8)
+    for r in range(64):
+        for c in range(64):
+            img[r, c] = qoi_fixture_pixel(r, c, raw[r])
+    return img
+
+
 def qoi_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
     """Genuine ``.qoi`` corpus fixture: one 64x64 RGB QOI per document,
     row r colored from the document's r-th leading UTF-8 byte via
-    ``qoi_fixture_pixel``. Written DISTRIBUTED inside mapInPandas,
-    cached per source fingerprint, exactly like the PNG/JPEG fixtures."""
-    import hashlib
-    import os
-    import tempfile
+    ``qoi_fixture_pixel``. Built by ``_media_fixture_dir``."""
 
-    import pandas as pd
+    def files(doc_id, text):
+        yield f"{doc_id}.qoi", encode_qoi(_qoi_fixture_image(text))
 
-    from blow_spark.shipping import ensure_package_shipped
-    from blow_spark.sources import read_table
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    stat_parts = []
-    if os.path.isdir(src):
-        for fn in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, fn))
-            stat_parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        stat_parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    token = hashlib.sha256(
-        f"qoi|{sf_dir}|{n_docs}|{'|'.join(stat_parts)}".encode()
-    ).hexdigest()[:12]
-    img_dir = os.path.join(tempfile.gettempdir(), f"blow_spark_qoi_{token}")
-    from blow_spark.materialize import cleanup_stale_siblings
-
-    cleanup_stale_siblings(
-        img_dir, os.path.join(tempfile.gettempdir(), "blow_spark_qoi_*")
-    )
-    marker = os.path.join(img_dir, "_SUCCESS")
-    if os.path.exists(marker):
-        os.utime(img_dir)  # mark live: the age-guarded janitor spares it
-        return img_dir
-    os.makedirs(img_dir, exist_ok=True)
-    ensure_package_shipped(spark)
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < n_docs)
-        .select("doc_id", "text")
-    )
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = str(text).encode("utf-8")[:64].ljust(64, b"\0")
-                img = np.zeros((64, 64, 3), dtype=np.uint8)
-                for r in range(64):
-                    for c in range(64):
-                        img[r, c] = qoi_fixture_pixel(r, c, raw[r])
-                with open(os.path.join(img_dir, f"{int(doc_id)}.qoi"), "wb") as f:
-                    f.write(encode_qoi(img))
-            yield pd.DataFrame({"n": [len(pdf)]})
-
-    d.mapInPandas(write_part, "n long").count()
-    with open(marker, "w"):
-        pass
-    return img_dir
+    return _media_fixture_dir(spark, sf_dir, n_docs, "qoi", files)
 
 
 # --------------------------------------------------------------------------
@@ -2924,8 +2552,6 @@ def mp4_walk_boxes(content: bytes, offset: int = 0, end: int | None = None):
     to-end-of-file (size == 0) per ISO/IEC 14496-12 §4.2; recurses into
     known container boxes. Raises ValueError on truncated/overflowing
     boxes — a malformed file never yields partial fields."""
-    import struct
-
     if end is None:
         end = len(content)
     stack = [(offset, end, 0)]
@@ -2959,8 +2585,6 @@ def parse_mp4_meta(content: bytes) -> dict:
     brand, mvhd timescale/duration, per-track tkhd (id, duration,
     16.16 fixed-point width/height), mdat payload byte count. All
     integer big-endian field extraction — no floats anywhere."""
-    import struct
-
     meta = {
         "brand": None,
         "timescale": None,
@@ -3014,8 +2638,6 @@ def build_mp4_minimal(
     parse_mp4_meta): ftyp + moov(mvhd + trak(tkhd)*) + mdat, spec
     field layouts (version-0 boxes), 16.16 fixed-point dimensions.
     ``tracks`` is [(track_id, duration, width_px, height_px)]."""
-    import struct
-
     def box(btype: bytes, payload: bytes) -> bytes:
         return struct.pack(">I", len(payload) + 8) + btype + payload
 
@@ -3076,63 +2698,16 @@ def mp4_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
     """Genuine ``.mp4`` corpus fixture: one minimal ISO-BMFF file per
     document (ftyp + moov/mvhd + 1-3 trak/tkhd + mdat of the doc's
     leading 32 UTF-8 bytes), parameters from ``mp4_fixture_params``.
-    Written DISTRIBUTED inside mapInPandas, cached per source
-    fingerprint, exactly like the image fixtures."""
-    import hashlib
-    import os
-    import tempfile
+    Built by ``_media_fixture_dir``."""
 
-    import pandas as pd
+    def files(doc_id, text):
+        raw = str(text).encode("utf-8")
+        p = mp4_fixture_params(raw)
+        yield f"{doc_id}.mp4", build_mp4_minimal(
+            "mp42", p["timescale"], p["duration"], p["tracks"], raw[:32]
+        )
 
-    from blow_spark.shipping import ensure_package_shipped
-    from blow_spark.sources import read_table
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    stat_parts = []
-    if os.path.isdir(src):
-        for fn in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, fn))
-            stat_parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        stat_parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    token = hashlib.sha256(
-        f"mp4|{sf_dir}|{n_docs}|{'|'.join(stat_parts)}".encode()
-    ).hexdigest()[:12]
-    img_dir = os.path.join(tempfile.gettempdir(), f"blow_spark_mp4_{token}")
-    from blow_spark.materialize import cleanup_stale_siblings
-
-    cleanup_stale_siblings(
-        img_dir, os.path.join(tempfile.gettempdir(), "blow_spark_mp4_*")
-    )
-    marker = os.path.join(img_dir, "_SUCCESS")
-    if os.path.exists(marker):
-        os.utime(img_dir)  # mark live: the age-guarded janitor spares it
-        return img_dir
-    os.makedirs(img_dir, exist_ok=True)
-    ensure_package_shipped(spark)
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < n_docs)
-        .select("doc_id", "text")
-    )
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = str(text).encode("utf-8")
-                p = mp4_fixture_params(raw)
-                blob = build_mp4_minimal(
-                    "mp42", p["timescale"], p["duration"], p["tracks"], raw[:32]
-                )
-                with open(os.path.join(img_dir, f"{int(doc_id)}.mp4"), "wb") as f:
-                    f.write(blob)
-            yield pd.DataFrame({"n": [len(pdf)]})
-
-    d.mapInPandas(write_part, "n long").count()
-    with open(marker, "w"):
-        pass
-    return img_dir
+    return _media_fixture_dir(spark, sf_dir, n_docs, "mp4", files)
 
 
 def encode_png_indexed(indices: np.ndarray, palette: np.ndarray) -> bytes:
@@ -3142,7 +2717,6 @@ def encode_png_indexed(indices: np.ndarray, palette: np.ndarray) -> bytes:
     round-11 indexed branch in ``_decode_png`` — lets the repo
     materialize genuine palette PNGs whose pixels an oracle knows in
     closed form (index -> palette arithmetic)."""
-    import struct
     import zlib
 
     indices = np.asarray(indices, dtype=np.uint8)
@@ -3186,71 +2760,18 @@ def palette_png_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
     """Genuine indexed-color ``.png`` corpus fixture (the color-type-3
     twin of png_corpus_fixture_dir/jpeg_corpus_fixture_dir): one 8x8
     palette PNG per document whose pixel INDICES are the document's
-    leading 64 UTF-8 bytes mod 64, mapped through PALETTE64. Written
-    DISTRIBUTED inside mapInPandas, cached per source fingerprint."""
-    import hashlib
-    import os
-    import tempfile
+    leading 64 UTF-8 bytes mod 64, mapped through PALETTE64. Built by
+    ``_media_fixture_dir``."""
 
-    import pandas as pd
+    def files(doc_id, text):
+        idx = (np.frombuffer(_doc_bytes(text, 64), dtype=np.uint8) % 64).reshape(8, 8)
+        yield f"{doc_id}.png", encode_png_indexed(idx, PALETTE64)
 
-    from blow_spark.shipping import ensure_package_shipped
-    from blow_spark.sources import read_table
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    stat_parts = []
-    if os.path.isdir(src):
-        for fn in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, fn))
-            stat_parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        stat_parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    token = hashlib.sha256(
-        f"plte|{sf_dir}|{n_docs}|{'|'.join(stat_parts)}".encode()
-    ).hexdigest()[:12]
-    img_dir = os.path.join(tempfile.gettempdir(), f"blow_spark_plte_{token}")
-    # exactly one live cache per family: siblings with a different
-    # fingerprint token are stale by construction (round-11 verdict
-    # item #2 — regenerated fixtures orphaned the old cache forever)
-    from blow_spark.materialize import cleanup_stale_siblings
-
-    cleanup_stale_siblings(
-        img_dir, os.path.join(tempfile.gettempdir(), "blow_spark_plte_*")
-    )
-    marker = os.path.join(img_dir, "_SUCCESS")
-    if os.path.exists(marker):
-        os.utime(img_dir)  # mark live: the age-guarded janitor spares it
-        return img_dir
-    os.makedirs(img_dir, exist_ok=True)
-    ensure_package_shipped(spark)
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < n_docs)
-        .select("doc_id", "text")
-    )
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = str(text).encode("utf-8")[:64].ljust(64, b"\0")
-                idx = (np.frombuffer(raw, dtype=np.uint8) % 64).reshape(8, 8)
-                with open(
-                    os.path.join(img_dir, f"{int(doc_id)}.png"), "wb"
-                ) as f:
-                    f.write(encode_png_indexed(idx, PALETTE64))
-            yield pd.DataFrame({"n": [len(pdf)]})
-
-    d.mapInPandas(write_part, "n long").collect()
-    with open(marker, "w"):
-        pass
-    return img_dir
+    return _media_fixture_dir(spark, sf_dir, n_docs, "plte", files)
 
 
 def _riff_chunks(content: bytes):
     """Walk a RIFF/WAVE container's (fourcc, payload) chunks."""
-    import struct
-
     pos = 12
     while pos + 8 <= len(content):
         fourcc = content[pos : pos + 4]
@@ -3270,8 +2791,6 @@ def decode_wav_adpcm(content: bytes) -> np.ndarray:
     compressed WAVs at all, so this parser is the only path. Stereo or
     other tags raise NotImplementedError (truthful gate). Returns int16
     samples."""
-    import struct
-
     if content[:4] != b"RIFF" or content[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE stream")
     block_align = None
@@ -3303,66 +2822,15 @@ def decode_wav_adpcm(content: bytes) -> np.ndarray:
 
 
 def png_adam7_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
-    """Genuine Adam7-INTERLACED ``.png`` corpus fixture: the SAME pixel
-    generation formula as the QOI fixture (qoi_fixture_pixel), through
-    a completely different lossless container — so the one closed-form
-    oracle gates two independent codec paths. Written DISTRIBUTED
-    inside mapInPandas, cached per source fingerprint."""
-    import hashlib
-    import os
-    import tempfile
+    """Genuine Adam7-INTERLACED ``.png`` corpus fixture: the SAME image
+    as the QOI fixture (``_qoi_fixture_image``), through a completely
+    different lossless container — so the one closed-form oracle gates
+    two independent codec paths. Built by ``_media_fixture_dir``."""
 
-    import pandas as pd
+    def files(doc_id, text):
+        yield f"{doc_id}.png", encode_png(_qoi_fixture_image(text), interlace=True)
 
-    from blow_spark.shipping import ensure_package_shipped
-    from blow_spark.sources import read_table
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    stat_parts = []
-    if os.path.isdir(src):
-        for fn in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, fn))
-            stat_parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        stat_parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    token = hashlib.sha256(
-        f"adam7|{sf_dir}|{n_docs}|{'|'.join(stat_parts)}".encode()
-    ).hexdigest()[:12]
-    img_dir = os.path.join(tempfile.gettempdir(), f"blow_spark_adm7_{token}")
-    from blow_spark.materialize import cleanup_stale_siblings
-
-    cleanup_stale_siblings(
-        img_dir, os.path.join(tempfile.gettempdir(), "blow_spark_adm7_*")
-    )
-    marker = os.path.join(img_dir, "_SUCCESS")
-    if os.path.exists(marker):
-        os.utime(img_dir)  # mark live: the age-guarded janitor spares it
-        return img_dir
-    os.makedirs(img_dir, exist_ok=True)
-    ensure_package_shipped(spark)
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < n_docs)
-        .select("doc_id", "text")
-    )
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = str(text).encode("utf-8")[:64].ljust(64, b"\0")
-                img = np.zeros((64, 64, 3), dtype=np.uint8)
-                for r in range(64):
-                    for c in range(64):
-                        img[r, c] = qoi_fixture_pixel(r, c, raw[r])
-                with open(os.path.join(img_dir, f"{int(doc_id)}.png"), "wb") as f:
-                    f.write(encode_png(img, interlace=True))
-            yield pd.DataFrame({"n": [len(pdf)]})
-
-    d.mapInPandas(write_part, "n long").count()
-    with open(marker, "w"):
-        pass
-    return img_dir
+    return _media_fixture_dir(spark, sf_dir, n_docs, "adm7", files)
 
 
 # --------------------------------------------------------------------------
@@ -3483,8 +2951,6 @@ def encode_gif(
     global color table -> a genuine single-frame .gif (logical screen
     descriptor, GCT, image descriptor, REAL LZW pixel stream in
     255-byte sub-blocks, trailer)."""
-    import struct
-
     indices = np.asarray(indices, dtype=np.uint8)
     h, w = indices.shape
     ncol = len(palette)
@@ -3526,8 +2992,6 @@ def decode_gif(content: bytes) -> "np.ndarray":
     malformed streams. Animation (later frames), transparency
     compositing, and disposal methods are out of scope: the first
     frame IS the image for corpus analytics."""
-    import struct
-
     if content[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF stream")
     try:
@@ -3537,8 +3001,6 @@ def decode_gif(content: bytes) -> "np.ndarray":
 
 
 def _decode_gif_body(content: bytes) -> "np.ndarray":
-    import struct
-
     sw, sh, packed, _bg, _ar = struct.unpack("<HHBBB", content[6:13])
     pos = 13
     gct = None
@@ -3613,61 +3075,12 @@ def gif_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
     per-row color multiset still varies with the byte (12 of the 16
     palette slots per row, not all 16, so channel sums stay
     v-sensitive). Odd doc_ids are written INTERLACED so both row
-    orders ride the oracle gate. Cached per source fingerprint,
-    exactly like the PNG/JPEG/QOI fixtures."""
-    import hashlib
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from blow_spark.shipping import ensure_package_shipped
-    from blow_spark.sources import read_table
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    stat_parts = []
-    if os.path.isdir(src):
-        for fn in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, fn))
-            stat_parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        stat_parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    token = hashlib.sha256(
-        f"gif|{sf_dir}|{n_docs}|{'|'.join(stat_parts)}".encode()
-    ).hexdigest()[:12]
-    img_dir = os.path.join(tempfile.gettempdir(), f"blow_spark_gif_{token}")
-    from blow_spark.materialize import cleanup_stale_siblings
-
-    cleanup_stale_siblings(
-        img_dir, os.path.join(tempfile.gettempdir(), "blow_spark_gif_*")
-    )
-    marker = os.path.join(img_dir, "_SUCCESS")
-    if os.path.exists(marker):
-        os.utime(img_dir)  # mark live: the age-guarded janitor spares it
-        return img_dir
-    os.makedirs(img_dir, exist_ok=True)
-    ensure_package_shipped(spark)
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < n_docs)
-        .select("doc_id", "text")
-    )
+    orders ride the oracle gate. Built by ``_media_fixture_dir``."""
     pal = gif_fixture_palette()
 
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = str(text).encode("utf-8")[:48].ljust(48, b"\0")
-                col_off = np.arange(48) // 4
-                idx = ((np.frombuffer(raw, dtype=np.uint8).astype(np.int64)[:, None]
-                        + col_off[None, :]) % 16).astype(np.uint8)
-                blob = encode_gif(idx, pal, interlace=bool(int(doc_id) % 2))
-                with open(os.path.join(img_dir, f"{int(doc_id)}.gif"), "wb") as f:
-                    f.write(blob)
-            yield pd.DataFrame({"n": [len(pdf)]})
+    def files(doc_id, text):
+        rows = np.frombuffer(_doc_bytes(text, 48), dtype=np.uint8).astype(np.int64)
+        idx = ((rows[:, None] + np.arange(48)[None, :] // 4) % 16).astype(np.uint8)
+        yield f"{doc_id}.gif", encode_gif(idx, pal, interlace=bool(doc_id % 2))
 
-    d.mapInPandas(write_part, "n long").count()
-    with open(marker, "w"):
-        pass
-    return img_dir
+    return _media_fixture_dir(spark, sf_dir, n_docs, "gif", files)

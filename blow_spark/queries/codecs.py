@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import struct
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -648,53 +649,27 @@ def multimodal_png_palette_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: parallel binaryFile scan -> map-only decode -> narrow stats,
     the identical plan shape as the JPEG/PNG ingest queries; at 100 TB
     only the object-store URI changes. Reference analog: none."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from blow_spark.shipping import ensure_package_shipped
-
-    ensure_package_shipped(spark)
     img_dir = multimodal.palette_png_fixture_dir(spark, sf_dir, n_docs=50)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(img_dir)
-    )
 
-    def dec(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                img = multimodal.decode_image(bytes(content)).astype(np.int64)
-                weights = 1 + np.arange(img.shape[0] * img.shape[1]).reshape(
-                    img.shape[0], img.shape[1]
-                )
-                rows.append(
-                    {
-                        "doc_id": int(
-                            os.path.splitext(os.path.basename(path))[0]
-                        ),
-                        "height": img.shape[0],
-                        "width": img.shape[1],
-                        "sum_r": int(img[:, :, 0].sum()),
-                        "sum_g": int(img[:, :, 1].sum()),
-                        "sum_b": int(img[:, :, 2].sum()),
-                        "pos_checksum": int(
-                            (img.sum(axis=2) * weights).sum()
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "height", "width",
-                    "sum_r", "sum_g", "sum_b", "pos_checksum",
-                ],
-            )
+    def dec(row):
+        img = multimodal.decode_image(bytes(row.content)).astype(np.int64)
+        weights = 1 + np.arange(img.shape[0] * img.shape[1]).reshape(
+            img.shape[0], img.shape[1]
+        )
+        yield {
+            "doc_id": int(multimodal.media_stem(row.path)),
+            "height": img.shape[0],
+            "width": img.shape[1],
+            "sum_r": int(img[:, :, 0].sum()),
+            "sum_g": int(img[:, :, 1].sum()),
+            "sum_b": int(img[:, :, 2].sum()),
+            "pos_checksum": int((img.sum(axis=2) * weights).sum()),
+        }
 
-    return files.select("path", "content").mapInPandas(
+    return multimodal.decode_media_files(
+        spark,
+        img_dir,
+        "*.png",
         dec,
         "doc_id long, height int, width int, sum_r long, sum_g long, "
         "sum_b long, pos_checksum long",
@@ -1033,7 +1008,7 @@ def multimodal_gif_lzw_decode_stats(spark: SparkSession, sf_dir: str) -> DataFra
     width bumps at 2^w, 12-bit cap with dictionary reset, 255-byte
     sub-block framing; odd doc_ids written INTERLACED so the 4-pass
     row order rides the gate too), scanned with binaryFile and decoded
-    FOR REAL by multimodal.decode_gif inside mapInPandas, reduced to
+    FOR REAL by multimodal.decode_gif in a per-file flatMap, reduced to
     per-image per-channel pixel sums plus the realized interlace flag
     parsed from the image-descriptor byte.
 
@@ -1045,51 +1020,29 @@ def multimodal_gif_lzw_decode_stats(spark: SparkSession, sf_dir: str) -> DataFra
     scan -> map-only decode -> narrow stats; at 100 TB only the
     object-store URI changes. Reference analog: none (the reference
     has no codecs); LZW per Welch 1984 + the GIF89a specification."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from blow_spark.shipping import ensure_package_shipped
-
-    ensure_package_shipped(spark)
     img_dir = multimodal.gif_corpus_fixture_dir(spark, sf_dir, n_docs=50)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gif")
-        .load(img_dir)
-    )
 
-    def decode(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                blob = bytes(content)
-                img = multimodal.decode_gif(blob)
-                s = img.astype(np.int64).sum(axis=(0, 1))
-                rows.append(
-                    {
-                        "doc_id": int(os.path.splitext(os.path.basename(path))[0]),
-                        "height": img.shape[0],
-                        "width": img.shape[1],
-                        "n_px": int(img.shape[0] * img.shape[1]),
-                        "r_sum": int(s[0]),
-                        "g_sum": int(s[1]),
-                        "b_sum": int(s[2]),
-                        # image descriptor's packed byte: 13-byte header
-                        # + 48-byte GCT + 9 bytes into the descriptor
-                        "interlaced": bool(blob[70] & 0x40),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "height", "width", "n_px",
-                    "r_sum", "g_sum", "b_sum", "interlaced",
-                ],
-            )
+    def decode(row):
+        blob = bytes(row.content)
+        img = multimodal.decode_gif(blob)
+        s = img.astype(np.int64).sum(axis=(0, 1))
+        yield {
+            "doc_id": int(multimodal.media_stem(row.path)),
+            "height": img.shape[0],
+            "width": img.shape[1],
+            "n_px": int(img.shape[0] * img.shape[1]),
+            "r_sum": int(s[0]),
+            "g_sum": int(s[1]),
+            "b_sum": int(s[2]),
+            # image descriptor's packed byte: 13-byte header
+            # + 48-byte GCT + 9 bytes into the descriptor
+            "interlaced": bool(blob[70] & 0x40),
+        }
 
-    return files.select("path", "content").mapInPandas(
+    return multimodal.decode_media_files(
+        spark,
+        img_dir,
+        "*.gif",
         decode,
         "doc_id long, height int, width int, n_px int, "
         "r_sum long, g_sum long, b_sum long, interlaced boolean",

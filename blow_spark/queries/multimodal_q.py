@@ -17,6 +17,7 @@ SQL-expressible."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,6 +25,39 @@ from pyspark.sql import functions as F
 from blow_spark import multimodal
 from blow_spark.queries import register
 from blow_spark.sources import read_table
+
+_GRAY_STATS = "doc_id long, height int, width int, n_px int, px_sum long"
+_RGB_STATS = (
+    "doc_id long, height int, width int, n_px int, r_sum long, g_sum long, b_sum long"
+)
+
+
+def _gray_stats(row):
+    """Size and pixel sum of one decoded image file."""
+    img = multimodal.decode_image(bytes(row.content))
+    yield {
+        "doc_id": int(multimodal.media_stem(row.path)),
+        "height": img.shape[0],
+        "width": img.shape[1],
+        "n_px": int(img.size),
+        "px_sum": int(img.astype(np.int64).sum()),
+    }
+
+
+def _rgb_stats(row):
+    """Size and per-channel pixel sums of one decoded RGB image file."""
+    img = multimodal.decode_image(bytes(row.content))
+    s = img.astype(np.int64).sum(axis=(0, 1))
+    yield {
+        "doc_id": int(multimodal.media_stem(row.path)),
+        "height": img.shape[0],
+        "width": img.shape[1],
+        "n_px": int(img.shape[0] * img.shape[1]),
+        "r_sum": int(s[0]),
+        "g_sum": int(s[1]),
+        "b_sum": int(s[2]),
+    }
+
 
 
 @register(
@@ -363,56 +397,20 @@ def source_binaryfile_image_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     with Spark's ``binaryFile`` source (the actual way an image corpus
     enters a 100 TB pipeline: one row per object with path/length/bytes,
     no decode in the scan), then decoded FOR REAL by the stdlib PNG
-    decoder inside mapInPandas and reduced to per-image stats. A broken
+    decoder in a per-file flatMap and reduced to per-image stats. A broken
     encoder, decoder, filter reconstruction, or path-to-id parse breaks
     the hash. At scale the only changes are the object-store URI and
     ``pathGlobFilter``/``recursiveFileLookup`` options — the plan shape
     (parallel file scan → map-only decode → narrow stats) is this one.
 
-    The image directory is FIXTURE scaffolding, built by the shared
-    helper ``multimodal.png_corpus_fixture_dir`` (distributed
-    executor-side writes, cached per sf_dir) — hoisted out of this
-    builder in round 5 so the registered operator is purely
-    scan→decode→stats with no driver materialization anywhere."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from blow_spark.shipping import ensure_package_shipped
-
-    ensure_package_shipped(spark)
+    The image directory is FIXTURE scaffolding
+    (``multimodal.png_corpus_fixture_dir``, written by executor tasks
+    and cached per source version by ``multimodal._media_fixture_dir``)
+    — hoisted out of this builder in round 5 so the registered operator
+    is purely scan→decode→stats (``multimodal.decode_media_files``)
+    with no driver materialization anywhere."""
     img_dir = multimodal.png_corpus_fixture_dir(spark, sf_dir, n_docs=50)
-    # pathGlobFilter prunes at FILE LISTING time (skips the _SUCCESS
-    # marker without scanning it) — the option the docstring points at
-    # for production object-store ingest
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(img_dir)
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                img = multimodal.decode_image(bytes(content))
-                rows.append(
-                    {
-                        "doc_id": int(os.path.splitext(os.path.basename(path))[0]),
-                        "height": img.shape[0],
-                        "width": img.shape[1],
-                        "n_px": int(img.size),
-                        "px_sum": int(img.astype(np.int64).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "height", "width", "n_px", "px_sum"]
-            )
-
-    return files.select("path", "content").mapInPandas(
-        decode, "doc_id long, height int, width int, n_px int, px_sum long"
-    )
+    return multimodal.decode_media_files(spark, img_dir, "*.png", _gray_stats, _GRAY_STATS)
 
 
 _CHUNK_BYTES = 64
@@ -764,7 +762,7 @@ def multimodal_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline-sequential .jpg files on disk (stdlib+numpy encoder,
     Annex K Huffman + quant tables), scanned with binaryFile, Huffman-
     decoded + dequantized + IDCT'd FOR REAL by multimodal._decode_jpeg
-    inside mapInPandas, reduced to per-image pixel stats.
+    in a per-file flatMap, reduced to per-image pixel stats.
 
     The oracle can know the pixels of a LOSSY codec because the fixture
     is flat 8x8 blocks at quality 50, where the luma DC quantizer is 16
@@ -777,42 +775,8 @@ def multimodal_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamping, AND genuine lossy behavior. A broken anything breaks the
     hash. Plan shape: parallel file scan -> map-only decode -> narrow
     stats; at 100 TB only the object-store URI changes."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from blow_spark.shipping import ensure_package_shipped
-
-    ensure_package_shipped(spark)
     img_dir = multimodal.jpeg_corpus_fixture_dir(spark, sf_dir, n_docs=50)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(img_dir)
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                img = multimodal.decode_image(bytes(content))
-                rows.append(
-                    {
-                        "doc_id": int(os.path.splitext(os.path.basename(path))[0]),
-                        "height": img.shape[0],
-                        "width": img.shape[1],
-                        "n_px": int(img.size),
-                        "px_sum": int(img.astype(np.int64).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "height", "width", "n_px", "px_sum"]
-            )
-
-    return files.select("path", "content").mapInPandas(
-        decode, "doc_id long, height int, width int, n_px int, px_sum long"
-    )
+    return multimodal.decode_media_files(spark, img_dir, "*.jpg", _gray_stats, _GRAY_STATS)
 
 
 @register(
@@ -860,8 +824,8 @@ def multimodal_jpeg_420_decode_stats(spark: SparkSession, sf_dir: str) -> DataFr
     2x2-mean chroma downsampling), scanned with binaryFile, decoded
     FOR REAL by the generalized multimodal._decode_jpeg — generic
     sampling-factor MCU walk, 4 luma + 2 chroma blocks per MCU,
-    replication upsampling, YCbCr->RGB — inside mapInPandas, reduced
-    to per-image PER-CHANNEL pixel sums.
+    replication upsampling, YCbCr->RGB — in a per-file flatMap,
+    reduced to per-image PER-CHANNEL pixel sums.
 
     The oracle knows the pixels of this lossy chain in closed form
     because each 16x16 tile is exactly one flat MCU at quality 50:
@@ -876,51 +840,8 @@ def multimodal_jpeg_420_decode_stats(spark: SparkSession, sf_dir: str) -> DataFr
     shifts r/g/b differently. Plan shape: parallel file scan ->
     map-only decode -> narrow stats; at 100 TB only the object-store
     URI changes. Reference analog: none (the reference has no codecs)."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from blow_spark.shipping import ensure_package_shipped
-
-    ensure_package_shipped(spark)
     img_dir = multimodal.jpeg420_corpus_fixture_dir(spark, sf_dir, n_docs=50)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(img_dir)
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                img = multimodal.decode_image(bytes(content))
-                s = img.astype(np.int64).sum(axis=(0, 1))
-                rows.append(
-                    {
-                        "doc_id": int(os.path.splitext(os.path.basename(path))[0]),
-                        "height": img.shape[0],
-                        "width": img.shape[1],
-                        "n_px": int(img.shape[0] * img.shape[1]),
-                        "r_sum": int(s[0]),
-                        "g_sum": int(s[1]),
-                        "b_sum": int(s[2]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "height", "width", "n_px",
-                    "r_sum", "g_sum", "b_sum",
-                ],
-            )
-
-    return files.select("path", "content").mapInPandas(
-        decode,
-        "doc_id long, height int, width int, n_px int, "
-        "r_sum long, g_sum long, b_sum long",
-    )
+    return multimodal.decode_media_files(spark, img_dir, "*.jpg", _rgb_stats, _RGB_STATS)
 
 
 def _qoi_oracle() -> str:
@@ -979,7 +900,7 @@ def multimodal_qoi_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     of Szablewski 2022: RUN, 64-slot running-index INDEX, DIFF, LUMA,
     and literal ops, hand-verified byte-for-byte against the spec in
     tests/test_round12.py), scanned with binaryFile and decoded FOR
-    REAL by multimodal.decode_qoi inside mapInPandas, reduced to
+    REAL by multimodal.decode_qoi in a per-file flatMap, reduced to
     per-image per-channel pixel sums.
 
     QOI is LOSSLESS, so unlike the JPEG gates the oracle needs no
@@ -991,51 +912,8 @@ def multimodal_qoi_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     run bias, a swapped LUMA nibble — breaks the channel sums. Plan
     shape: parallel file scan -> map-only decode -> narrow stats; at
     100 TB only the object-store URI changes. Reference analog: none."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from blow_spark.shipping import ensure_package_shipped
-
-    ensure_package_shipped(spark)
     img_dir = multimodal.qoi_corpus_fixture_dir(spark, sf_dir, n_docs=50)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.qoi")
-        .load(img_dir)
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                img = multimodal.decode_image(bytes(content))
-                s = img.astype(np.int64).sum(axis=(0, 1))
-                rows.append(
-                    {
-                        "doc_id": int(os.path.splitext(os.path.basename(path))[0]),
-                        "height": img.shape[0],
-                        "width": img.shape[1],
-                        "n_px": int(img.shape[0] * img.shape[1]),
-                        "r_sum": int(s[0]),
-                        "g_sum": int(s[1]),
-                        "b_sum": int(s[2]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "height", "width", "n_px",
-                    "r_sum", "g_sum", "b_sum",
-                ],
-            )
-
-    return files.select("path", "content").mapInPandas(
-        decode,
-        "doc_id long, height int, width int, n_px int, "
-        "r_sum long, g_sum long, b_sum long",
-    )
+    return multimodal.decode_media_files(spark, img_dir, "*.qoi", _rgb_stats, _RGB_STATS)
 
 
 @register(
@@ -1092,7 +970,7 @@ def multimodal_mp4_box_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     16.16 fixed-point dimensions, mdat), scanned with binaryFile and
     walked FOR REAL by multimodal.mp4_walk_boxes (32-bit sizes, 64-bit
     largesize, to-end-of-file sizes, container recursion — truncation
-    raises, never partial fields) inside mapInPandas.
+    raises, never partial fields) in a per-file flatMap.
 
     The oracle replays the fixture's parameter formula (doc bytes →
     timescale/duration/track geometry), so any size-arithmetic error,
@@ -1101,49 +979,27 @@ def multimodal_mp4_box_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     timescale conversion both engines floor identically. Plan shape:
     parallel file scan -> map-only walk -> narrow stats; at 100 TB
     only the object-store URI changes. Reference analog: none."""
-    import os
-
-    import pandas as pd
-
-    from blow_spark.shipping import ensure_package_shipped
-
-    ensure_package_shipped(spark)
     img_dir = multimodal.mp4_corpus_fixture_dir(spark, sf_dir, n_docs=50)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp4")
-        .load(img_dir)
-    )
 
-    def walk(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = multimodal.parse_mp4_meta(bytes(content))
-                rows.append(
-                    {
-                        "doc_id": int(os.path.splitext(os.path.basename(path))[0]),
-                        "brand": m["brand"],
-                        "timescale": m["timescale"],
-                        "duration": m["duration"],
-                        "duration_ms": m["duration"] * 1000 // m["timescale"],
-                        "n_tracks": m["n_tracks"],
-                        "width_px_sum": m["width_px_sum"],
-                        "height_px_sum": m["height_px_sum"],
-                        "track_duration_sum": m["track_duration_sum"],
-                        "mdat_bytes": m["mdat_bytes"],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "brand", "timescale", "duration", "duration_ms",
-                    "n_tracks", "width_px_sum", "height_px_sum",
-                    "track_duration_sum", "mdat_bytes",
-                ],
-            )
+    def walk(row):
+        m = multimodal.parse_mp4_meta(bytes(row.content))
+        yield {
+            "doc_id": int(multimodal.media_stem(row.path)),
+            "brand": m["brand"],
+            "timescale": m["timescale"],
+            "duration": m["duration"],
+            "duration_ms": m["duration"] * 1000 // m["timescale"],
+            "n_tracks": m["n_tracks"],
+            "width_px_sum": m["width_px_sum"],
+            "height_px_sum": m["height_px_sum"],
+            "track_duration_sum": m["track_duration_sum"],
+            "mdat_bytes": m["mdat_bytes"],
+        }
 
-    return files.select("path", "content").mapInPandas(
+    return multimodal.decode_media_files(
+        spark,
+        img_dir,
+        "*.mp4",
         walk,
         "doc_id long, brand string, timescale long, duration long, "
         "duration_ms long, n_tracks int, width_px_sum long, "
@@ -1172,51 +1028,8 @@ def multimodal_png_adam7_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     but not in the QOI query isolates the fault to the Adam7
     machinery specifically). Plan shape: parallel file scan ->
     map-only decode -> narrow stats. Reference analog: none."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from blow_spark.shipping import ensure_package_shipped
-
-    ensure_package_shipped(spark)
     img_dir = multimodal.png_adam7_corpus_fixture_dir(spark, sf_dir, n_docs=50)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(img_dir)
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                img = multimodal.decode_image(bytes(content))
-                s = img.astype(np.int64).sum(axis=(0, 1))
-                rows.append(
-                    {
-                        "doc_id": int(os.path.splitext(os.path.basename(path))[0]),
-                        "height": img.shape[0],
-                        "width": img.shape[1],
-                        "n_px": int(img.shape[0] * img.shape[1]),
-                        "r_sum": int(s[0]),
-                        "g_sum": int(s[1]),
-                        "b_sum": int(s[2]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "height", "width", "n_px",
-                    "r_sum", "g_sum", "b_sum",
-                ],
-            )
-
-    return files.select("path", "content").mapInPandas(
-        decode,
-        "doc_id long, height int, width int, n_px int, "
-        "r_sum long, g_sum long, b_sum long",
-    )
+    return multimodal.decode_media_files(spark, img_dir, "*.png", _rgb_stats, _RGB_STATS)
 
 
 def _dhash_oracle() -> str:
@@ -1336,7 +1149,7 @@ def multimodal_dhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a third, pure-Python replication of the pipeline.
 
     Pipeline (all on the real codec): binaryFile scan of genuine .jpg
-    files -> mapInPandas Arrow-batched REAL JPEG decode
+    files -> per-file flatMap REAL JPEG decode
     (multimodal._decode_jpeg) -> 8x8 block sums -> 112-bit dHash
     (56 horizontal + 56 vertical strict-greater comparisons) -> spill
     the 100-row hash table once (multi-consumer) -> explode 8 bands of
@@ -1352,64 +1165,46 @@ def multimodal_dhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (the reference has no codecs or joins);
     dHash per Krawetz's published description (HackerFactor, 2013)."""
     import hashlib
-    import os
-
-    import numpy as np
 
     from blow_spark.materialize import spill_to_parquet
-    from blow_spark.shipping import ensure_package_shipped
 
-    ensure_package_shipped(spark)
     TAU = 10
     img_dir = multimodal.jpeg_requality_corpus_fixture_dir(spark, sf_dir, n_docs=50)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(img_dir)
-    )
 
-    def hash_images(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                stem = os.path.splitext(os.path.basename(path))[0]
-                doc_s, q_s = stem.rsplit("_q", 1)
-                img = multimodal.decode_image(bytes(content))
-                bsum = (
-                    img.astype(np.int64)
-                    .reshape(8, 8, 8, 8)
-                    .sum(axis=(1, 3))
-                )  # 8x8 grid of block sums, row-major
-                h_row = 0
-                for r in range(8):
-                    for c in range(7):
-                        if bsum[r, c] > bsum[r, c + 1]:
-                            h_row |= 1 << (r * 7 + c)
-                h_col = 0
-                for i in range(56):
-                    r, c = divmod(i, 8)
-                    if bsum[r, c] > bsum[r + 1, c]:
-                        h_col |= 1 << i
-                rows.append(
-                    {
-                        "doc_id": int(doc_s),
-                        "img_key": int(doc_s) * 2 + (1 if q_s == "75" else 0),
-                        "h_row": h_row,
-                        "h_col": h_col,
-                        "bsums": [int(x) for x in bsum.reshape(-1)],
-                        "file_md5": hashlib.md5(bytes(content)).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "img_key", "h_row", "h_col", "bsums", "file_md5",
-                ],
-            )
+    def hash_image(row):
+        doc_s, q_s = multimodal.media_stem(row.path).rsplit("_q", 1)
+        content = bytes(row.content)
+        img = multimodal.decode_image(content)
+        bsum = (
+            img.astype(np.int64)
+            .reshape(8, 8, 8, 8)
+            .sum(axis=(1, 3))
+        )  # 8x8 grid of block sums, row-major
+        h_row = 0
+        for r in range(8):
+            for c in range(7):
+                if bsum[r, c] > bsum[r, c + 1]:
+                    h_row |= 1 << (r * 7 + c)
+        h_col = 0
+        for i in range(56):
+            r, c = divmod(i, 8)
+            if bsum[r, c] > bsum[r + 1, c]:
+                h_col |= 1 << i
+        yield {
+            "doc_id": int(doc_s),
+            "img_key": int(doc_s) * 2 + (1 if q_s == "75" else 0),
+            "h_row": h_row,
+            "h_col": h_col,
+            "bsums": [int(x) for x in bsum.reshape(-1)],
+            "file_md5": hashlib.md5(content).hexdigest(),
+        }
 
     hashed = spill_to_parquet(
-        files.select("path", "content").mapInPandas(
-            hash_images,
+        multimodal.decode_media_files(
+            spark,
+            img_dir,
+            "*.jpg",
+            hash_image,
             "doc_id long, img_key long, h_row long, h_col long, "
             "bsums array<long>, file_md5 string",
         ),
@@ -1640,7 +1435,7 @@ def multimodal_phash_dct_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame
     realize from real decoded pixels.
 
     Pipeline (all on the real codec): binaryFile scan of the 3-per-doc
-    planted corpus (q50 / q75 / q75-of-brightened) -> Arrow-batched
+    planted corpus (q50 / q75 / q75-of-brightened) -> per-file flatMap
     REAL JPEG decode -> block sums -> integer DCT hash -> spill the
     150-row hash table once -> 7-band explode -> band-equality
     self-join -> bit_count(xor) exact verify -> planted-pair audit.
@@ -1649,55 +1444,36 @@ def multimodal_phash_dct_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame
     argument as multimodal_dhash_near_dup / dedup_minhash_lsh).
     Reference analog: none (the reference has no codecs or joins)."""
     import hashlib
-    import os
-
-    import numpy as np
 
     from blow_spark.materialize import spill_to_parquet
-    from blow_spark.shipping import ensure_package_shipped
 
-    ensure_package_shipped(spark)
     img_dir = multimodal.jpeg_phash_corpus_fixture_dir(spark, sf_dir, n_docs=50)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(img_dir)
-    )
     kind_off = {"q50": 0, "q75": 1, "b75": 2}
+    m = multimodal.phash_dct_matrix_e6()
 
-    def hash_images(batches):
-        m = multimodal.phash_dct_matrix_e6()
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                stem = os.path.splitext(os.path.basename(path))[0]
-                doc_s, kind = stem.rsplit("_", 1)
-                img = multimodal.decode_image(bytes(content))
-                bsum = (
-                    img.astype(np.int64).reshape(8, 8, 8, 8).sum(axis=(1, 3))
-                )
-                d = m @ bsum @ m.T
-                coefs = d.reshape(-1)[1:]
-                med = int(np.sort(coefs)[31])
-                h = 0
-                for i in range(63):
-                    if int(coefs[i]) > med:
-                        h |= 1 << i
-                rows.append(
-                    {
-                        "doc_id": int(doc_s),
-                        "img_key": int(doc_s) * 3 + kind_off[kind],
-                        "h": h,
-                        "file_md5": hashlib.md5(bytes(content)).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "img_key", "h", "file_md5"]
-            )
+    def hash_image(row):
+        doc_s, kind = multimodal.media_stem(row.path).rsplit("_", 1)
+        content = bytes(row.content)
+        img = multimodal.decode_image(content)
+        bsum = img.astype(np.int64).reshape(8, 8, 8, 8).sum(axis=(1, 3))
+        d = m @ bsum @ m.T
+        coefs = d.reshape(-1)[1:]
+        med = int(np.sort(coefs)[31])
+        h = 0
+        for i in range(63):
+            if int(coefs[i]) > med:
+                h |= 1 << i
+        yield {
+            "doc_id": int(doc_s),
+            "img_key": int(doc_s) * 3 + kind_off[kind],
+            "h": h,
+            "file_md5": hashlib.md5(content).hexdigest(),
+        }
 
     hashed = spill_to_parquet(
-        files.select("path", "content").mapInPandas(
-            hash_images, "doc_id long, img_key long, h long, file_md5 string"
+        multimodal.decode_media_files(
+            spark, img_dir, "*.jpg", hash_image,
+            "doc_id long, img_key long, h long, file_md5 string",
         ),
         "blow_spark_phash_",
     )
@@ -1854,70 +1630,49 @@ def multimodal_jpeg_progressive_dc_stats(spark: SparkSession, sf_dir: str) -> Da
     shape: parallel file scan -> map-only decode -> narrow stats, the
     same 100 TB shape as every codec query. Reference analog: none
     (the reference has no codecs)."""
-    import os
-
-    import numpy as np
-
-    from blow_spark.shipping import ensure_package_shipped
-
-    ensure_package_shipped(spark)
     img_dir = multimodal.jpeg_progressive_corpus_fixture_dir(spark, sf_dir, n_docs=50)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(img_dir)
-    )
 
-    def decode(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                blob = bytes(content)
-                img = multimodal.decode_jpeg_progressive_dc(blob)
-                sof_kind = -1
-                n_scans = 0
-                p = 2
-                while p + 4 <= len(blob):
-                    if blob[p] != 0xFF:
+    def decode(row):
+        blob = bytes(row.content)
+        img = multimodal.decode_jpeg_progressive_dc(blob)
+        sof_kind = -1
+        n_scans = 0
+        p = 2
+        while p + 4 <= len(blob):
+            if blob[p] != 0xFF:
+                break
+            m = blob[p + 1]
+            if m == 0xD9:
+                break
+            ln = (blob[p + 2] << 8) | blob[p + 3]
+            if m in (0xC0, 0xC1, 0xC2, 0xC3):
+                sof_kind = m & 0xF
+            if m == 0xDA:
+                n_scans += 1
+                # skip entropy data to the next real marker
+                p += 2 + ln
+                while p + 1 < len(blob):
+                    if blob[p] == 0xFF and blob[p + 1] != 0x00 and not (
+                        0xD0 <= blob[p + 1] <= 0xD7
+                    ):
                         break
-                    m = blob[p + 1]
-                    if m == 0xD9:
-                        break
-                    ln = (blob[p + 2] << 8) | blob[p + 3]
-                    if m in (0xC0, 0xC1, 0xC2, 0xC3):
-                        sof_kind = m & 0xF
-                    if m == 0xDA:
-                        n_scans += 1
-                        # skip entropy data to the next real marker
-                        p += 2 + ln
-                        while p + 1 < len(blob):
-                            if blob[p] == 0xFF and blob[p + 1] != 0x00 and not (
-                                0xD0 <= blob[p + 1] <= 0xD7
-                            ):
-                                break
-                            p += 1
-                        continue
-                    p += 2 + ln
-                rows.append(
-                    {
-                        "doc_id": int(os.path.splitext(os.path.basename(path))[0]),
-                        "height": img.shape[0],
-                        "width": img.shape[1],
-                        "n_px": int(img.size),
-                        "px_sum": int(img.astype(np.int64).sum()),
-                        "sof_kind": sof_kind,
-                        "n_scans": n_scans,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "height", "width", "n_px", "px_sum",
-                    "sof_kind", "n_scans",
-                ],
-            )
+                    p += 1
+                continue
+            p += 2 + ln
+        yield {
+            "doc_id": int(multimodal.media_stem(row.path)),
+            "height": img.shape[0],
+            "width": img.shape[1],
+            "n_px": int(img.size),
+            "px_sum": int(img.astype(np.int64).sum()),
+            "sof_kind": sof_kind,
+            "n_scans": n_scans,
+        }
 
-    return files.select("path", "content").mapInPandas(
+    return multimodal.decode_media_files(
+        spark,
+        img_dir,
+        "*.jpg",
         decode,
         "doc_id long, height int, width int, n_px int, px_sum long, "
         "sof_kind int, n_scans int",
@@ -1986,86 +1741,62 @@ def multimodal_jpeg_progressive_ac_refine_stats(
     decode -> one 50-key aggregate pairing each stream with its twin.
     Reference analog: none (the reference has no codecs)."""
     import hashlib
-    import os
 
-    import numpy as np
-
-    from blow_spark.shipping import ensure_package_shipped
-
-    ensure_package_shipped(spark)
     img_dir = multimodal.jpeg_progressive_sa_corpus_fixture_dir(
         spark, sf_dir, n_docs=50
     )
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(img_dir)
-    )
 
-    def decode(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                blob = bytes(content)
-                name = os.path.splitext(os.path.basename(path))[0]
-                doc_id, kind = int(name[:-1]), name[-1]
-                if kind == "p":
-                    st: dict = {}
-                    img = multimodal.decode_jpeg_progressive(blob, stats=st)
-                    n_scans = len(st["scans"])
-                    n_refine = sum(1 for s in st["scans"] if s[2] > 0)
-                    flags = (
-                        st["used_eobrun"] > 0,
-                        st["used_zrl"] > 0,
-                        st["used_newsig_refine"] > 0,
-                        st["corr_bits"] > 0,
-                    )
-                    sof_kind = -1
-                    p = 2
-                    while p + 4 <= len(blob):
-                        if blob[p] != 0xFF or blob[p + 1] == 0xD9:
-                            break
-                        m = blob[p + 1]
-                        ln = (blob[p + 2] << 8) | blob[p + 3]
-                        if m in (0xC0, 0xC1, 0xC2, 0xC3):
-                            sof_kind = m & 0xF
-                            break
-                        p += 2 + ln
-                else:
-                    img = multimodal.decode_image(blob)
-                    n_scans = n_refine = 0
-                    flags = (False, False, False, False)
-                    sof_kind = 0
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "kind": kind,
-                        "height": img.shape[0],
-                        "width": img.shape[1],
-                        "px_sum_flat": int(
-                            img[:48, :].astype(np.int64).sum()
-                        ),
-                        "pix_md5": hashlib.md5(img.tobytes()).hexdigest(),
-                        "sof_kind": sof_kind,
-                        "n_scans": n_scans,
-                        "n_refine_scans": n_refine,
-                        "used_eobrun": flags[0],
-                        "used_zrl": flags[1],
-                        "new_sig_refined": flags[2],
-                        "corr_bits_read": flags[3],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "kind", "height", "width", "px_sum_flat",
-                    "pix_md5", "sof_kind", "n_scans", "n_refine_scans",
-                    "used_eobrun", "used_zrl", "new_sig_refined",
-                    "corr_bits_read",
-                ],
+    def decode(row):
+        blob = bytes(row.content)
+        name = multimodal.media_stem(row.path)
+        doc_id, kind = int(name[:-1]), name[-1]
+        if kind == "p":
+            st: dict = {}
+            img = multimodal.decode_jpeg_progressive(blob, stats=st)
+            n_scans = len(st["scans"])
+            n_refine = sum(1 for s in st["scans"] if s[2] > 0)
+            flags = (
+                st["used_eobrun"] > 0,
+                st["used_zrl"] > 0,
+                st["used_newsig_refine"] > 0,
+                st["corr_bits"] > 0,
             )
+            sof_kind = -1
+            p = 2
+            while p + 4 <= len(blob):
+                if blob[p] != 0xFF or blob[p + 1] == 0xD9:
+                    break
+                m = blob[p + 1]
+                ln = (blob[p + 2] << 8) | blob[p + 3]
+                if m in (0xC0, 0xC1, 0xC2, 0xC3):
+                    sof_kind = m & 0xF
+                    break
+                p += 2 + ln
+        else:
+            img = multimodal.decode_image(blob)
+            n_scans = n_refine = 0
+            flags = (False, False, False, False)
+            sof_kind = 0
+        yield {
+            "doc_id": doc_id,
+            "kind": kind,
+            "height": img.shape[0],
+            "width": img.shape[1],
+            "px_sum_flat": int(img[:48, :].astype(np.int64).sum()),
+            "pix_md5": hashlib.md5(img.tobytes()).hexdigest(),
+            "sof_kind": sof_kind,
+            "n_scans": n_scans,
+            "n_refine_scans": n_refine,
+            "used_eobrun": flags[0],
+            "used_zrl": flags[1],
+            "new_sig_refined": flags[2],
+            "corr_bits_read": flags[3],
+        }
 
-    per_file = files.select("path", "content").mapInPandas(
+    per_file = multimodal.decode_media_files(
+        spark,
+        img_dir,
+        "*.jpg",
         decode,
         "doc_id long, kind string, height int, width int, "
         "px_sum_flat long, pix_md5 string, sof_kind int, n_scans int, "

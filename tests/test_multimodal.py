@@ -1,15 +1,21 @@
 """Multimodal binary-column plumbing: synthetic payloads, Arrow-batched
 feature extraction verified against local numpy, frame sampling shape,
-decode stubs."""
+decode stubs, and the media fixture cache's lifecycle."""
 
 from __future__ import annotations
 
+import fnmatch
+import os
+import tempfile
+
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from blow_spark import multimodal
 from blow_spark.sources import read_table
+from tests.test_schema_reuse import _jobs
 
 
 def test_byte_features_match_numpy(spark, sf_dir):
@@ -257,3 +263,67 @@ def test_blob_chunk_reassemble_total_domain(spark, tmp_path):
     assert (got[2].n_chunks, got[2].total_bytes) == (1, 0)
     assert (got[3].n_chunks, got[3].total_bytes) == (1, 0)
     assert all(got[i].reassembly_ok for i in (1, 2, 3))
+
+
+#: every media fixture builder and the file names it writes for doc_id d
+_FIXTURE_FILES = {
+    "png_corpus_fixture_dir": ("{d}.png",),
+    "jpeg_corpus_fixture_dir": ("{d}.jpg",),
+    "jpeg420_corpus_fixture_dir": ("{d}.jpg",),
+    "jpeg_requality_corpus_fixture_dir": ("{d}_q50.jpg", "{d}_q75.jpg"),
+    "jpeg_progressive_corpus_fixture_dir": ("{d}.jpg",),
+    "jpeg_phash_corpus_fixture_dir": ("{d}_q50.jpg", "{d}_q75.jpg", "{d}_b75.jpg"),
+    "jpeg_progressive_sa_corpus_fixture_dir": ("{d}p.jpg", "{d}b.jpg"),
+    "qoi_corpus_fixture_dir": ("{d}.qoi",),
+    "mp4_corpus_fixture_dir": ("{d}.mp4",),
+    "palette_png_fixture_dir": ("{d}.png",),
+    "png_adam7_corpus_fixture_dir": ("{d}.png",),
+    "gif_corpus_fixture_dir": ("{d}.gif",),
+}
+
+
+@pytest.fixture
+def media_tmp(tmp_path, monkeypatch):
+    """Fixture dirs go under ``tmp_path`` instead of the shared temp dir."""
+    d = tmp_path / "tmp"
+    d.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(d))
+    return d
+
+
+def test_media_fixture_cache_lifecycle(spark, sf_dir, tmp_path, media_tmp):
+    """A hit returns the same dir and starts no job; rewriting the
+    source documents.parquet yields a new dir."""
+    src = tmp_path / "sf"
+    src.mkdir()
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    pq.write_table(docs, src / "documents.parquet")
+    first, first_jobs = _jobs(spark, lambda: multimodal.png_corpus_fixture_dir(spark, str(src), n_docs=3))
+    again, again_jobs = _jobs(spark, lambda: multimodal.png_corpus_fixture_dir(spark, str(src), n_docs=3))
+    assert first_jobs >= 1
+    assert (again, again_jobs) == (first, 0)
+    pq.write_table(docs.slice(0, docs.num_rows - 1), src / "documents.parquet")
+    rebuilt = multimodal.png_corpus_fixture_dir(spark, str(src), n_docs=3)
+    assert rebuilt != first
+    assert sorted(os.listdir(rebuilt)) == sorted(os.listdir(first))
+
+
+def test_media_fixture_families_names_and_globs(spark, sf_dir, media_tmp):
+    """Every builder writes its files under the expected names, and no
+    family's sibling sweep glob matches another family's dir."""
+    n_docs = 2
+    ids = [r.doc_id for r in read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < n_docs).collect()]
+    assert ids
+    families = {}
+    for builder, patterns in _FIXTURE_FILES.items():
+        d = getattr(multimodal, builder)(spark, sf_dir, n_docs=n_docs)
+        assert os.path.dirname(d) == str(media_tmp)
+        want = {p.format(d=i) for i in ids for p in patterns} | {"_SUCCESS"}
+        assert set(os.listdir(d)) == want, builder
+        name = os.path.basename(d)
+        assert name.startswith("blow_spark_")
+        families[name[len("blow_spark_") :].rsplit("_", 1)[0]] = name
+    assert len(families) == len(_FIXTURE_FILES)
+    for family in families:
+        matches = fnmatch.filter(families.values(), f"blow_spark_{family}_*")
+        assert matches == [families[family]], family

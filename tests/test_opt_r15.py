@@ -11,8 +11,8 @@ is not visible through the oracle compare alone:
   several-fold, so file bytes under-count the per-pair verify work.
 - bench.summary_line's STABLE summary membership (item #3): the
   driver-visible "queries" dict has a fixed key set, so the driver's
-  drop detection can no longer false-fire on displaced rows; "n_ran"
-  carries the authoritative ran-count.
+  drop detection can no longer false-fire on displaced rows; "n_queries"
+  counts every timed row.
 - materialize.checkpoint_small's debug-mode row-count guard (item #5):
   the ≤16k-row domain-bounded contract now raises under the test env
   flag instead of being documentation-only.
@@ -111,7 +111,7 @@ def test_summary_membership_is_timing_independent():
     p1 = json.loads(bench.summary_line(t1, 0.1, core=bench.CORE, audit=bench.AUDIT))
     p2 = json.loads(bench.summary_line(t2, 0.1, core=bench.CORE, audit=bench.AUDIT))
     assert set(p1["queries"]) == set(p2["queries"]) == set(bench.SUMMARY_ROWS)
-    assert p1["n_ran"] == len(bench.HEADLINE)
+    assert p1["n_queries"] == len(bench.HEADLINE)
 
 
 def test_summary_line_fits_budget_at_large_values():
