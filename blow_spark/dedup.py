@@ -1025,18 +1025,19 @@ def connected_components(
     exposure), and the terminal state is asserted to be a star forest
     (every child appears exactly once, no parent is a child) — a
     violated assertion falls back to continued iteration rather than
-    wrong output. localCheckpoint() per round truncates lineage. The
+    wrong output. Each round's edge set is a ``checkpoint_sublinear``
+    cut (storage policy: the ``blow_spark.materialize`` docstring). The
     reference has no multi-pass operator at all (single-pass channel
     dataflow, maps/maps.go:34-37); this is the iterative-algorithm
     pattern the brief calls out, kept deterministic (the fixpoint —
     min node id per component — is independent of round structure) so
     a DuckDB recursive CTE can oracle it."""
+    from blow_spark.materialize import checkpoint_sublinear, spill_to_parquet
+
     raw = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")).persist()
     n_edges = raw.count()  # materializes the (expensive) pair plan ONCE
     LAST_CC_STRATEGY["n_edges"] = n_edges
     if n_edges <= local_edge_cutoff:
-        from blow_spark.materialize import spill_to_parquet
-
         LAST_CC_STRATEGY["strategy"] = "local"
         out = spill_to_parquet(_cc_local(raw), "blow_spark_cc_")
         raw.unpersist()
@@ -1046,17 +1047,15 @@ def connected_components(
     LAST_CC_STRATEGY["strategy"] = "distributed"
     # node universe up front: star rewrites drop nodes that collapse
     # into their root, and self-loop-only nodes never enter the loop
-    nodes = (
+    nodes = checkpoint_sublinear(
         raw.select(F.col("a").alias("node"))
         .union(raw.select(F.col("b").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
-    e = (
+    e = checkpoint_sublinear(
         raw.filter(F.col("a") != F.col("b"))
         .select(F.col("a").alias("u"), F.col("b").alias("v"))
         .distinct()
-        .localCheckpoint()
     )
     raw.unpersist()
     e_cnt = e.count()
@@ -1077,14 +1076,13 @@ def connected_components(
         # ---- small-star: edges now orient u > v; (x, m) for x in
         # N(u) ∪ {u} \ {m}, m = min neighbor ----
         smin = e_ls.groupBy("u").agg(F.min("v").alias("m"))
-        e_ss = (
+        e_ss = checkpoint_sublinear(
             e_ls.join(smin, "u")
             .where(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(smin.select("u", F.col("m").alias("v")))
             .where(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint()
         )
         new_cnt = e_ss.count()
         # exact set-equality convergence: both frames are DISTINCT sets

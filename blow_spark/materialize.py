@@ -1,39 +1,55 @@
-"""Materialize-and-release: spill an intermediate DataFrame to a
-temporary parquet table and hand back a scan of it.
+"""Lineage cuts and temp-path lifecycle.
 
-This is the cache-lifecycle primitive the multi-consumer operators
-(MinHash-LSH, SRP-LSH) use instead of ``.persist()`` with no owner:
-``persist()`` inside an operator leaks into the caller's session — the
-caller can't know to free it, and a long-lived session running the whole
-catalog accumulates executor cache (round-2 verdict, "What's wrong" #2).
-Spilling to parquet instead:
+Storage policy
+--------------
+This module is the only code that decides how an intermediate is
+materialized. An operator declares the SIZE CLASS of the table it cuts
+and calls that class's helper; it never calls ``.localCheckpoint()``,
+``.cache()`` or its own parquet round-trip (pinned by
+tests/test_materialize.py::test_no_lineage_cut_outside_materialize).
+Every helper runs its materialization job at call time and returns a
+DataFrame whose plan no longer contains the upstream.
 
-* truncates lineage exactly like a checkpoint (downstream consumers scan
-  the table; the expensive upstream never re-runs),
-* leaves NOTHING in the block manager — ``getPersistentRDDs()`` stays
-  empty after the operator returns (pinned in tests/test_dedup.py and
-  tests/test_similarity.py),
-* IS the cluster-scale design the operators' docstrings promise: at
-  100 TB the signature/sketch intermediate is a bucketed table on shared
-  storage, not executor memory — this helper is that table with a
-  tempdir path.
+* **bounded** — :func:`checkpoint_small`: tables whose size is set by a
+  domain, not the data (per-round iterates, hypothesis pools, calendar
+  grids; at most 16k rows). ``coalesce(1)`` then
+  ``localCheckpoint(eager=True)``, plus a row-count guard under
+  ``BLOW_SPARK_DEBUG_CHECKPOINT_SMALL=1``.
+* **sublinear** — :func:`checkpoint_sublinear`: vocabulary- or node-grain
+  tables that grow with the corpus but far slower than it (graph
+  supersteps, vocabularies, edge lists). ``localCheckpoint(eager=True)``
+  with the input's partitioning kept.
+* **data** — :func:`spill_to_parquet`: data-proportional tables
+  (candidate sets, signature tables). Written to a temp parquet dir and
+  read back as a plain file scan; at cluster scale that dir is a table
+  on shared storage, not executor memory. It leaves nothing in the
+  block manager (``getPersistentRDDs()`` stays empty; pinned in
+  tests/test_dedup.py and tests/test_similarity.py) and, unlike
+  ``DataFrame.checkpoint()``, needs no session checkpoint dir.
 
-Spark's own ``DataFrame.checkpoint()`` needs a session-level checkpoint
-dir and still registers cleanup state; a plain parquet round-trip has no
-session coupling and the output is a normal pruned/pushed-down scan.
+What a lost block does: the two ``localCheckpoint`` classes keep their
+partitions in the block manager (MEMORY_AND_DISK) and drop the lineage
+that could rebuild them. If a block is lost — its executor dies, or the
+checkpointed RDD is unpersisted — the next query over the cut FAILS with
+Spark's ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``; it is never recomputed
+and never answered wrong or empty. A parquet spill lives on the file
+system, outside the block manager, so it SURVIVES the loss of every
+block and executor; only deleting its dir loses it (pinned by
+tests/test_materialize.py::test_lost_block_is_survived_or_named).
+Block-manager cuts are released by Spark's ContextCleaner when their
+DataFrame goes out of scope; they never enter the session's
+CacheManager, so nothing is left for the caller to free.
 
-Lifecycle (round-10 verdict item #6): every spilled dir is recorded in
-a module-level registry and swept by (a) an ``atexit`` hook at process
-exit and (b) a bounded LRU — once more than ``_MAX_LIVE_SPILLS`` dirs
-are live, the OLDEST are deleted. The LRU bound is safe because a spill
-is a *plan truncation point consumed within the operator that created
-it*: by the time an operator returns, its downstream consumers have
-either already scanned the spill (the common case: the operator's own
-jobs) or hold a scan whose first action runs while the spill is still
-among the newest dirs. The bound is sized to hold every spill a single
-catalog query can create (the unigram-EM loop spills ~80 steps ×2
-engines — far below the bound), so dirs are only ever reclaimed across
-QUERY boundaries, never within one.
+Temp-path lifecycle
+-------------------
+Every spilled dir is registered and swept by (a) an ``atexit`` hook
+and (b) a bounded LRU that deletes the OLDEST dirs past
+``_MAX_LIVE_SPILLS``. The bound is safe because a spill is consumed
+within the query that created it, and it holds every spill one catalog
+query can create (the unigram-EM loop spills ~80 steps ×2 engines), so
+dirs are only reclaimed across QUERY boundaries. Scratch paths
+(:func:`scratch_dir`, :func:`register_scratch`) follow the same rules
+under their own bound.
 """
 
 from __future__ import annotations
@@ -284,23 +300,10 @@ def cleanup_stale_siblings(
 
 
 def checkpoint_small(df: DataFrame) -> DataFrame:
-    """Materialize-and-truncate for DOMAIN-BOUNDED intermediates (tens
-    of rows to a few thousand — per-round iterate vectors, hypothesis
-    pools, calendar grids): ``localCheckpoint(eager=True)``.
-
-    Round-14 optimization (guide §5 "localCheckpoint is a cheaper way
-    to cut lineage"): these tables were previously parquet-spilled,
-    paying a write job + commit + re-list + scan per step — measurable
-    overhead when an iterative operator materializes several tiny
-    tables per round. localCheckpoint stores the computed partitions
-    in the block manager (MEMORY_AND_DISK) and truncates lineage the
-    same way; the blocks are reference-counted and swept by Spark's
-    ContextCleaner when the DataFrame goes out of scope, the same
-    lifecycle ops.pagerank has used since round 4.
-
-    Use ``spill_to_parquet`` instead whenever the intermediate is
-    data-proportional (candidate sets, signature tables): at cluster
-    scale those belong on shared storage, not executor memory.
+    """Cut a BOUNDED intermediate (see the module docstring):
+    ``coalesce(1)`` then ``localCheckpoint(eager=True)``. Round 14
+    moved these tables off parquet spills, whose write job + commit +
+    re-list + scan per step dominated tiny per-round tables.
 
     ``coalesce(1)`` first: a localCheckpoint keeps its upstream
     partition count, so every downstream stage over a 25-row table
@@ -310,15 +313,13 @@ def checkpoint_small(df: DataFrame) -> DataFrame:
     8; a parquet spill got the same effect implicitly from AQE
     coalescing the write).
 
-    DEBUG GUARD (round-15, round-14 verdict item #5): the ≤16k-row
-    contract used to be documented but unenforced — a future call site
-    handing a data-proportional table here would serialize a stage and
-    pin executor memory at scale, silently. With
-    ``BLOW_SPARK_DEBUG_CHECKPOINT_SMALL=1`` (set for the test suite in
-    tests/conftest.py, so every registered query's call sites are
-    checked each run) the input's row count is probed via limit
-    pushdown (scans at most the cap + 1 rows) and a violation raises.
-    Off by default: production pays zero extra jobs."""
+    DEBUG GUARD (round-15): with ``BLOW_SPARK_DEBUG_CHECKPOINT_SMALL=1``
+    (set for the test suite in tests/conftest.py, so every registered
+    query's call sites are checked each run) the input's row count is
+    probed via limit pushdown (scans at most the cap + 1 rows) and more
+    than 16k rows raises — a data-proportional table here would
+    serialize a stage and pin executor memory at scale, silently. Off
+    by default: production pays zero extra jobs."""
     if os.environ.get("BLOW_SPARK_DEBUG_CHECKPOINT_SMALL") == "1":
         cap = 16384
         if df.limit(cap + 1).count() > cap:
@@ -332,23 +333,22 @@ def checkpoint_small(df: DataFrame) -> DataFrame:
 
 
 def checkpoint_sublinear(df: DataFrame) -> DataFrame:
-    """Materialize-and-truncate for SUBLINEAR (vocabulary-grain)
-    intermediates: ``localCheckpoint(eager=True)`` WITHOUT the
-    ``coalesce(1)`` of :func:`checkpoint_small`.
+    """Cut a SUBLINEAR intermediate (see the module docstring):
+    ``localCheckpoint(eager=True)`` WITHOUT the ``coalesce(1)`` of
+    :func:`checkpoint_small`.
 
     Round-15 (guide §5): the unigram-EM loop's word-frequency, piece-
     cost and Viterbi tables are vocabulary-grain — tiny at the bench
     SFs (31 words / 228 pieces) but corpus-DEPENDENT (a web-scale
-    corpus has a 10⁵-10⁶-row vocabulary), so neither materialization
-    extreme fits: a parquet spill pays a write job + commit + re-list +
-    scan per table (6 per EM run — the measured job floor of the
-    operator), while checkpoint_small's coalesce(1) would serialize the
-    per-word Viterbi DP into ONE task at real vocabulary sizes. This
-    keeps the input's (AQE-coalesced) partitioning — one partition at
-    bench scale, many at cluster scale — and cuts lineage in the block
-    manager with no storage round-trip. Blocks are reference-counted
-    and swept by the ContextCleaner, same lifecycle as
-    checkpoint_small/ops.pagerank."""
+    corpus has a 10⁵-10⁶-row vocabulary), so neither other class fits:
+    a parquet spill pays a write job + commit + re-list + scan per
+    table (6 per EM run — the measured job floor of the operator),
+    while checkpoint_small's coalesce(1) would serialize the per-word
+    Viterbi DP into ONE task at real vocabulary sizes. This keeps the
+    input's (AQE-coalesced) partitioning — one partition at bench
+    scale, many at cluster scale. The graph supersteps (ops.pagerank,
+    ops.kcore, the BFS/Bellman-Ford relax loop, connected components,
+    label propagation) cut their per-round state here too."""
     return df.localCheckpoint(eager=True)
 
 

@@ -198,9 +198,10 @@ def pagerank(
     (caller adds reverse edges for an undirected walk, as the catalog
     query does). Each round is one join + one shuffle keyed by node —
     the same key every round, so a cluster deployment pre-partitions
-    edges once and every iteration is co-located. localCheckpoint() per
-    round truncates lineage exactly like connected_components (the plan
-    otherwise doubles per iteration) — and buys AQE real sizes: fusing
+    edges once and every iteration is co-located. Each round's rank
+    table is a ``checkpoint_sublinear`` cut (storage policy: the
+    ``blow_spark.materialize`` docstring); the plan otherwise doubles per
+    iteration, and the cut buys AQE real sizes: fusing
     all rounds into one lazy plan was measured WORSE (8.6 s → 12.8 s at
     sf0.1, 3 iterations) because every round's exchange is then planned
     blind at full parallelism instead of coalescing against the
@@ -211,6 +212,8 @@ def pagerank(
     guarantees uniqueness (e.g. a distinct pair set unioned into two
     disjoint directions): at 10⁹ edges that is one full shuffle of the
     edge table saved."""
+    from blow_spark.materialize import checkpoint_sublinear
+
     e = edges.select(F.col("src"), F.col("dst"))
     if not assume_distinct:
         e = e.distinct()
@@ -239,7 +242,7 @@ def pagerank(
     n_nodes = nodes.count()
     outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
     contrib_edges = e.join(outdeg, "src").persist()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes)).localCheckpoint()
+    ranks = checkpoint_sublinear(nodes.withColumn("rank", F.lit(1.0 / n_nodes)))
     base = (1.0 - damping) / n_nodes
     for _ in range(iterations):
         inbound = (
@@ -248,15 +251,14 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("inflow"))
         )
-        ranks = (
-            nodes.join(inbound, nodes.node == inbound.dst, "left")
-            .select(
+        ranks = checkpoint_sublinear(
+            nodes.join(inbound, nodes.node == inbound.dst, "left").select(
                 "node",
                 (F.lit(base) + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))).alias(
                     "rank"
                 ),
             )
-        ).localCheckpoint()
+        )
     e.unpersist()
     contrib_edges.unpersist()
     nodes.unpersist()
@@ -370,8 +372,8 @@ def bfs_distances(edges: DataFrame, sources: DataFrame, max_hops: int = 3) -> Da
     iteration): each round relaxes dist(v) = min(dist(v),
     min_{u→v} dist(u)+1) — one join + one min-groupBy shuffle keyed by
     node, the SAME key every round, so a cluster deployment
-    pre-partitions edges once and every iteration is co-located.
-    localCheckpoint() truncates lineage per round. Fixed hop count keeps
+    pre-partitions edges once and every iteration is co-located (the
+    loop is ``_min_relax``). Fixed hop count keeps
     the result a pure function of the edge set, so an unrolled-CTE SQL
     oracle can replay it. The reference's single-pass channel dataflow
     (maps/maps.go:34-37) cannot express any multi-pass operator.
@@ -380,22 +382,7 @@ def bfs_distances(edges: DataFrame, sources: DataFrame, max_hops: int = 3) -> Da
     join key ONCE and cached for the loop's lifetime (released before
     return): every expansion join reuses the cached distribution and
     shuffles only the frontier."""
-    edges = edges.repartition(F.col("src")).persist()
-    dist = (
-        sources.select("node").distinct().withColumn("dist", F.lit(0)).localCheckpoint()
-    )
-    for _ in range(max_hops):
-        expanded = edges.join(dist, edges.src == dist.node).select(
-            F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist")
-        )
-        dist = (
-            dist.union(expanded)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-    edges.unpersist()
-    return dist
+    return _min_relax(edges, sources, "dist", F.lit(0), F.col("dist") + 1, max_hops)
 
 
 def bellman_ford(
@@ -412,24 +399,30 @@ def bellman_ford(
     per-node MIN is engine-deterministic with no float-order caveats;
     bounded rounds also make negative weights well-defined (cheapest
     ≤k-edge walk), though the catalog uses non-negative costs."""
-    edges = edges.repartition(F.col("src")).persist()
-    cost = (
-        sources.select("node").distinct()
-        .withColumn("cost", F.lit(0).cast("long"))
-        .localCheckpoint()
+    return _min_relax(
+        edges, sources, "cost", F.lit(0).cast("long"), F.col("cost") + F.col("w"), rounds
     )
+
+
+def _min_relax(
+    edges: DataFrame, sources: DataFrame, col: str, start: Column, step: Column, rounds: int
+) -> DataFrame:
+    """bfs_distances/bellman_ford's loop: state ``(node, col)`` starts at
+    ``start`` on each source; each round unions ``step`` over every edge
+    out of a state row into the state and keeps the per-node MIN."""
+    from blow_spark.materialize import checkpoint_sublinear
+
+    edges = edges.repartition(F.col("src")).persist()
+    state = checkpoint_sublinear(sources.select("node").distinct().withColumn(col, start))
     for _ in range(rounds):
-        relaxed = edges.join(cost, edges.src == cost.node).select(
-            F.col("dst").alias("node"), (F.col("cost") + F.col("w")).alias("cost")
+        relaxed = edges.join(state, edges.src == state.node).select(
+            F.col("dst").alias("node"), step.alias(col)
         )
-        cost = (
-            cost.union(relaxed)
-            .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
-            .localCheckpoint()
+        state = checkpoint_sublinear(
+            state.union(relaxed).groupBy("node").agg(F.min(col).alias(col))
         )
     edges.unpersist()
-    return cost
+    return state
 
 
 # --------------------------------------------------------------------------
@@ -931,30 +924,32 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 16) -> DataFrame:
     dedup.connected_components.cc_strategy).
 
     Scale shape: each round is ONE node-keyed shuffle (two semi-joins of
-    the adjacency against the alive set + a degree aggregate);
-    localCheckpoint truncates the growing lineage per round exactly as
-    pagerank/connected-components do. Peeling converges in at most
+    the adjacency against the alive set + a degree aggregate); each
+    round's alive set is a ``checkpoint_sublinear`` cut, as in pagerank
+    and connected_components. Peeling converges in at most
     "degeneracy layers" rounds — small for real graphs; the loop raises
     if max_iter is hit without convergence rather than returning a
     non-fixpoint."""
+    from blow_spark.materialize import checkpoint_sublinear
+
     adj = (
         edges.select("u", "v")
         .unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .persist()
     )
-    alive = adj.select(F.col("u").alias("n")).distinct().localCheckpoint()
+    alive = checkpoint_sublinear(adj.select(F.col("u").alias("n")).distinct())
     n_in = alive.count()
     rounds = 0
     converged = False
     for _ in range(max_iter):
-        survivors = (
+        survivors = checkpoint_sublinear(
             adj.join(alive.select(F.col("n").alias("u")), "u")
             .join(alive.select(F.col("n").alias("v")), "v")
             .groupBy("u")
             .agg(F.count("*").alias("d"))
             .filter(F.col("d") >= k)
             .select(F.col("u").alias("n"))
-        ).localCheckpoint()
+        )
         rounds += 1
         n_new, n_old = survivors.count(), alive.count()
         alive = survivors
@@ -966,13 +961,14 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 16) -> DataFrame:
             f"kcore did not converge within {max_iter} rounds — raise max_iter "
             f"(and the oracle's unroll depth) together"
         )
-    out = (
+    # materialize BEFORE unpersisting the adjacency
+    out = checkpoint_sublinear(
         adj.join(alive.select(F.col("n").alias("u")), "u")
         .join(alive.select(F.col("n").alias("v")), "v")
         .groupBy("u")
         .agg(F.count("*").cast("bigint").alias("core_degree"))
         .select(F.col("u").cast("bigint").alias("node"), "core_degree")
-    ).localCheckpoint()  # materialize BEFORE unpersisting the adjacency
+    )
     adj.unpersist()
     out.kcore_info = {"rounds": rounds, "n_nodes_in": n_in, "n_nodes_out": alive.count()}
     return out

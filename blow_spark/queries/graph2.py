@@ -220,7 +220,7 @@ def graph_ktruss_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast of the co-occurrence-bounded edge list, same plan as
     graph_triangle_count) plus an edge-keyed support aggregate; edge
     sets SPILL per round so round r+1 rereads a small parquet instead
-    of recomputing the chain (the pagerank localCheckpoint lesson,
+    of recomputing the chain (the pagerank lineage-cut lesson,
     SCALE.md:437-480). At 100 TB the degree-ordered orientation bounds
     wedge fan-out by arboricity — same note as graph_triangle_count."""
     from blow_spark.materialize import spill_to_parquet
@@ -340,8 +340,8 @@ def graph_closeness_centrality_bfs(spark: SparkSession, sf_dir: str) -> DataFram
     the spilled edge table (re-read, never recomputed: the
     linkage._purchase_edges spill discipline). Per-level distinct keeps
     the frontier a SET, so path multiplicity never amplifies rows —
-    the same localCheckpoint-free small-table iteration the k-core and
-    pagerank family uses. Reference analog: none (blow has no joins)."""
+    the same small-table iteration the k-core and pagerank family
+    uses. Reference analog: none (blow has no joins)."""
     from blow_spark.queries.linkage import _purchase_edges
 
     edges = _purchase_edges(spark, sf_dir)
@@ -375,7 +375,8 @@ def graph_closeness_centrality_bfs(spark: SparkSession, sf_dir: str) -> DataFram
         # Round-15 REVERT of the round-14 per-level checkpoint_small
         # truncation (round-14 verdict item #2's criterion: revert if
         # its 32-core wall cost is >=10% real). Interleaved same-
-        # session A/B at sf0.1 (scripts/ab_r15.py, min-of-4):
+        # session A/B at sf0.1 (scripts/ab_r15.py at commit accceb5,
+        # min-of-4):
         # untruncated 5.77 s, eager checkpoint 6.51 s (+13%), lazy
         # checkpoint 6.87 s — the truncation's stage-count savings
         # (26 vs 30 scheduled stages) never translate to wall at this

@@ -1019,7 +1019,7 @@ def ml_ransac_line_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation into 24 groups), and the winner broadcasts back for
     ONE refit pass — two linear scans total, zero fact-table
     shuffles, the textbook 100 TB RANSAC shape. The 24-row hypothesis
-    and ranked tables are localCheckpoint-truncated (round-14: were
+    and ranked tables are ``checkpoint_small`` cuts (round-14: were
     parquet spills — a write job + commit + scan each, pure overhead
     at constant size; guide §5)."""
     from blow_spark.materialize import checkpoint_small

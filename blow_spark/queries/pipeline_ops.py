@@ -1107,15 +1107,16 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     orientation (point each edge low-degree→high-degree) which bounds
     wedge counts by arboricity — noted in SCALE.md. Reference has no
     multi-input operators at all (SURVEY.md §2.2)."""
+    from blow_spark.materialize import checkpoint_sublinear
+
     li = read_table(spark, sf_dir, "lineitem")
     sp = li.select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")).distinct()
-    e = (
+    e = checkpoint_sublinear(
         sp.alias("a")
         .join(sp.alias("b"), (F.col("a.p") == F.col("b.p")) & (F.col("a.s") < F.col("b.s")))
         .select(F.col("a.s").alias("u"), F.col("b.s").alias("v"))
         .distinct()
     )
-    e.cache()
     tri = (
         e.alias("e1")
         .join(F.broadcast(e.alias("e2")), F.col("e2.u") == F.col("e1.v"))
@@ -1997,7 +1998,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pair counts are one (u,v)-keyed shuffle over the order×order
     self-join (bounded by basket sizes); threshold selection is a
     15-candidate aggregate over the pair table; each peel round is one
-    node-keyed shuffle with localCheckpoint lineage truncation."""
+    node-keyed shuffle (ops.kcore)."""
     from blow_spark import ops
 
     li = read_table(spark, sf_dir, "lineitem")
@@ -2365,11 +2366,13 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted once — every round co-locates against it, the same
     pre-partitioned-edges pattern measured at 1.64x/10x for pagerank —
     followed by a (node, label)-keyed count and a per-node argmax window
-    bounded by degree, never data-scale. localCheckpoint truncates the
-    per-round lineage. Async LPA converges faster but is
+    bounded by degree, never data-scale. Each round's label table is a
+    ``checkpoint_sublinear`` cut. Async LPA converges faster but is
     order-dependent; synchronous rounds are the price of determinism
     (documented trade-off, same stance as the unrolled BFS/Bellman-Ford
     family)."""
+    from blow_spark.materialize import checkpoint_sublinear
+
     li = read_table(spark, sf_dir, "lineitem")
     sp = li.select(
         F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
@@ -2399,7 +2402,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         # identical COUNT-desc/label-asc winner inside an ordinary
         # hash aggregate — same tie-break (max c, then max(-label) =
         # min label), one sort less per round
-        labels = (
+        labels = checkpoint_sublinear(
             cnt.groupBy("node")
             .agg(
                 F.max(
@@ -2407,7 +2410,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("m")
             )
             .select("node", (-F.col("m.nl")).alias("label"))
-            .localCheckpoint()
         )
     out = labels.groupBy(F.col("label").cast("bigint").alias("label")).agg(
         F.count("*").cast("bigint").alias("n_nodes")
@@ -2500,17 +2502,20 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedge-join shape (each triangle counted once as a<b<c, so the 3×
     factor restores per-wedge closure counting).
 
-    Scale: the edge list is cached once and feeds the degree census
-    (one map-side-combinable groupBy over 2|E| endpoint rows) and the
-    two broadcast wedge joins; d(d−1)/2 widens to DECIMAL(38,0)/
-    HUGEINT before summing (a 10^6-degree hub alone contributes 5·10^11
-    wedges). At 100 TB the wedge join flips to degree-ordered
-    orientation exactly as graph_triangle_count's docstring notes."""
+    Scale: the edge list is cut once (``checkpoint_sublinear``) and
+    feeds the degree census (one map-side-combinable groupBy over 2|E|
+    endpoint rows) and the two broadcast wedge joins; d(d−1)/2 widens
+    to DECIMAL(38,0)/HUGEINT before summing (a 10^6-degree hub alone
+    contributes 5·10^11 wedges). At 100 TB the wedge join flips to
+    degree-ordered orientation exactly as graph_triangle_count's
+    docstring notes."""
+    from blow_spark.materialize import checkpoint_sublinear
+
     li = read_table(spark, sf_dir, "lineitem")
     sp = li.select(
         F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
     ).distinct()
-    e = (
+    e = checkpoint_sublinear(
         sp.alias("a")
         .join(
             sp.alias("b"),
@@ -2519,7 +2524,6 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.s").alias("u"), F.col("b.s").alias("v"))
         .distinct()
     )
-    e.cache()
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))

@@ -272,10 +272,10 @@ def rank_bradley_terry_mm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE order-keyed shuffle with basket-bounded fan-out (same bound as
     recsys_item_item_cosine); each MM round is arithmetic over the
     pair and item tables — sizes set by the ITEM DOMAIN, not the
-    corpus. Each 25-row iterate is localCheckpoint-truncated so round
-    t+1 rereads materialized blocks instead of recomputing the chain
-    (round-14: was a parquet spill per iterate — a write job + scan of
-    pure overhead at this size; guide §5)."""
+    corpus. Each 25-row iterate is a ``checkpoint_small`` cut
+    (storage policy: the ``blow_spark.materialize`` docstring; round-14:
+    was a parquet spill per iterate — a write job + scan of pure
+    overhead at this size; guide §5)."""
     from blow_spark.materialize import checkpoint_small, spill_to_parquet
 
     li = read_table(spark, sf_dir, "lineitem").select(
@@ -321,7 +321,7 @@ def rank_bradley_terry_mm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("w").cast("bigint").alias("wtot"))
     )
     # round-14 optimization: the per-round iterate tables are ITEM-
-    # DOMAIN-sized (~25 rows) — localCheckpoint truncation instead of a
+    # DOMAIN-sized (~25 rows) — a checkpoint_small cut instead of a
     # parquet spill per table saves a write job + scan per round
     # (guide §5); `games` stays a parquet spill (pair-grain, the
     # mergeable unit a cluster run would keep on shared storage)

@@ -2943,8 +2943,8 @@ def layout_hilbert_locality_vs_zorder(spark: SparkSession, sf_dir: str) -> DataF
             ]
         df = df.select(items)
     # round-14 optimization: the 16384-row grid tables are GRID-bounded
-    # (2^14 rows at any data size) — localCheckpoint truncation instead
-    # of parquet spills saves two write jobs + scans (guide §5)
+    # (2^14 rows at any data size) — checkpoint_small cuts instead of
+    # parquet spills save two write jobs + scans (guide §5)
     from blow_spark.materialize import checkpoint_small
 
     hcells = checkpoint_small(df.select("xa", "ya", "d0", "d1", "d2"))

@@ -309,12 +309,14 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     |Q|-proportional and the candidate pair-similarity table is built
     ONCE over distinct co-occurring pairs (≤ |Q|·C²/2 rows, queries
     pooled). Each step references the selection set twice (anti-join +
-    penalty join), so the raw lineage is exponential in steps —
-    ``localCheckpoint`` per step truncates it exactly as the graph
-    iterations do (ops.py pagerank/BFS); the checkpointed frames are
+    penalty join), so the raw lineage is exponential in steps — each
+    step is a ``checkpoint_small`` cut, as the graph iterations cut
+    theirs (ops.py pagerank/BFS); the checkpointed frames are
     ≤ |Q|·steps rows. The oracle replays the full selection trajectory
     through the same unrolled integer arithmetic, so a tie-break slip
     or a penalty miscount in ANY step turns the row red."""
+    from blow_spark.materialize import checkpoint_small
+
     e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < _N_QUERIES)
     cand = similarity.brute_force_topk(q, e, k=_MMR_CANDS).select(
@@ -323,11 +325,11 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("cos_sim") * 1_000_000).cast("long").alias("rel_mu"),
     )
     # Truncate the brute-force-topk lineage once: cand is |Q|·25 rows
-    # and is referenced by every unrolled step below. coalesce(1) first:
-    # every downstream job over these constant-size frames then runs
-    # single-task instead of shuffle_partitions tasks — at 5 unrolled
-    # steps the scheduling overhead is the whole cost of this operator.
-    cand = cand.coalesce(1).localCheckpoint()
+    # and is referenced by every unrolled step below. checkpoint_small's
+    # coalesce(1) makes every downstream job over these constant-size
+    # frames single-task — at 5 unrolled steps the scheduling overhead
+    # of shuffle_partitions tasks is the whole cost of this operator.
+    cand = checkpoint_small(cand)
     # unordered co-occurring candidate pairs → exact µ-unit cosine table
     a, b = cand.alias("a"), cand.alias("b")
     upair = (
@@ -339,15 +341,12 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    simtab = (
-        similarity._rescore_candidates(upair, e)
-        .select(
+    simtab = checkpoint_small(
+        similarity._rescore_candidates(upair, e).select(
             F.col("query_id").alias("a_id"),
             F.col("neighbor_id").alias("b_id"),
             F.round(F.col("cos_sim") * 1_000_000).cast("long").alias("sim_mu"),
         )
-        .coalesce(1)
-        .localCheckpoint()
     )
 
     def argmax(df: DataFrame, score_col: str, step: int) -> DataFrame:
@@ -395,11 +394,7 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (7 * F.col("rel_mu") - 3 * F.col("maxsim_mu")).alias("sc"),
             )
         )
-        selected = (
-            selected.unionAll(argmax(scored, "sc", step))
-            .coalesce(1)
-            .localCheckpoint()
-        )
+        selected = checkpoint_small(selected.unionAll(argmax(scored, "sc", step)))
     return selected.select(
         "query_id", F.col("sel_id").alias("doc_id"), "step", "score_mu"
     )

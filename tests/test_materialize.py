@@ -14,6 +14,10 @@ against an ISOLATED registry — the ``own_registry`` fixture snapshots
 and drains the shared state (without touching foreign dirs on disk)
 and restores it afterwards. Stale same-prefix dirs from PRIOR crashed
 processes are reaped up front for the same reason.
+
+The last three tests pin the storage policy in the materialize module
+docstring: no lineage cut outside it, no session cache left behind by
+the graph edge-list queries, and a lost block survived or named.
 """
 
 from __future__ import annotations
@@ -251,3 +255,110 @@ def test_registered_paths_survive_janitor(spark, own_registry):
     M.reap_orphan_scratch(max_age_hours=0)  # maximally aggressive
     assert os.path.isdir(d)
     assert sp.count() == 2  # the spill dir is still readable
+
+
+def test_graph_edge_queries_leave_no_session_cache(spark, sf_dir):
+    """graph_triangle_count and graph_clustering_coefficient cut their
+    edge list through materialize instead of ``DataFrame.cache()``, which
+    no caller could release: after one collect of each, the session's
+    CacheManager holds nothing."""
+    from blow_spark.queries import queries
+
+    qs = queries()
+    spark.catalog.clearCache()
+    for name in ("graph_triangle_count", "graph_clustering_coefficient"):
+        assert qs[name](spark, sf_dir).collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
+
+
+def test_no_lineage_cut_outside_materialize():
+    """Every lineage cut goes through the materialize helpers: no module
+    of the package but materialize.py calls ``.localCheckpoint()`` or
+    ``.cache()``."""
+    import ast
+
+    pkg = os.path.dirname(M.__file__)
+    offenders = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        if os.path.samefile(path, M.__file__):
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        offenders += [
+            f"{os.path.relpath(path, pkg)}:{node.lineno} .{node.func.attr}()"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("localCheckpoint", "cache")
+        ]
+    assert not offenders, offenders
+
+
+_LOST_BLOCK_SCRIPT = r"""
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .appName("lost_block_test")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.shuffle.partitions", "4")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("OFF")
+
+from blow_spark import materialize as M
+
+src = (
+    spark.range(100)
+    .select((F.col("id") % 10).alias("k"), "id")
+    .groupBy("k")
+    .agg(F.sum("id").alias("s"))
+)
+want = sorted(map(tuple, src.collect()))
+cuts = {
+    name: getattr(M, name)(src)
+    for name in ("spill_to_parquet", "checkpoint_small", "checkpoint_sublinear")
+}
+for name, df in cuts.items():
+    assert sorted(map(tuple, df.collect())) == want, name
+sc = spark.sparkContext
+for rdd in list(sc._jsc.getPersistentRDDs().values()):
+    rdd.unpersist(True)
+assert sc._jsc.getPersistentRDDs().isEmpty()
+for name, df in cuts.items():
+    try:
+        got = sorted(map(tuple, df.collect()))
+    except Exception as exc:
+        named = "CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND" in str(exc)
+        print(name, "NAMED" if named else "OTHER_ERROR")
+    else:
+        print(name, "ROWS" if got == want else "WRONG_ROWS")
+spark.stop()
+"""
+
+
+def test_lost_block_is_survived_or_named():
+    """A lost block is survived or named, never answered wrong: once
+    every persistent RDD is unpersisted, a parquet spill still returns
+    its rows, and a localCheckpoint cut (both block-manager classes)
+    fails with Spark's CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Runs in its
+    own session so the shared one keeps its blocks."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pythonpath = os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))
+    env = dict(os.environ, PYTHONPATH=pythonpath)
+    out = subprocess.run(
+        [sys.executable, "-c", _LOST_BLOCK_SCRIPT],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=env,
+    )
+    assert out.returncode == 0, f"stdout={out.stdout[-2000:]}\nstderr={out.stderr[-2000:]}"
+    lines = out.stdout.split("\n")
+    assert "spill_to_parquet ROWS" in lines, out.stdout
+    assert "checkpoint_small NAMED" in lines, out.stdout
+    assert "checkpoint_sublinear NAMED" in lines, out.stdout

@@ -476,9 +476,9 @@ BENCH_EXCHANGE_PINS = {
     "timeseries_dtw_band_distance": (11, 6),
     # round-15 REVERT of the round-14 per-level checkpoint truncation:
     # an interleaved A/B measured the truncation a real +13% wall at
-    # 32 cores (scripts/ab_r15.py — the round-14 verdict's revert
-    # criterion), so the lazy round-13 chain stands; the counts are
-    # the replayed per-level join+distinct branches again
+    # 32 cores (scripts/ab_r15.py at commit accceb5 — the round-14
+    # verdict's revert criterion), so the lazy round-13 chain stands;
+    # the counts are the replayed per-level join+distinct branches again
     "graph_closeness_centrality_bfs": (18, 10),
     "graph_modularity_score": (8, 5),
     "finance_sharpe_sortino": (3, 1),
