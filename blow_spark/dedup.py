@@ -957,14 +957,6 @@ def _cc_local(edges: DataFrame) -> DataFrame:
     return edges.coalesce(1).mapInPandas(unionfind, f"node {node_t}, comp {node_t}")
 
 
-#: Edge-count cutoff below which connected_components collapses the whole
-#: graph in one union-find task instead of the distributed loop. Sized so
-#: the single task holds the edge list comfortably (~16 B/edge → ~32 MB)
-#: and finishes in ~seconds; near-dup candidate graphs are SPARSE relative
-#: to the corpus (4.1 k edges from 2 k vectors at sf0.1; the LSH cap bounds
-#: bucket fan-out), so even 10⁸-doc runs usually land under it.
-CC_LOCAL_EDGE_CUTOFF = 2_000_000
-
 #: Observability CONVENIENCE: which physical strategy the last
 #: connected_components call picked ("local" union-find task or
 #: "distributed" min-label loop) and at what measured edge count.
@@ -978,7 +970,7 @@ LAST_CC_STRATEGY: dict = {"strategy": None, "n_edges": None}
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 25,
-    local_edge_cutoff: int = CC_LOCAL_EDGE_CUTOFF,
+    local_edge_cutoff: int | None = None,
 ) -> DataFrame:
     """(id_a, id_b) edges → (node, comp) with comp = min node id in the
     connected component: turns pairwise near-dup hits into duplicate
@@ -986,16 +978,22 @@ def connected_components(
     dedup pipeline).
 
     TWO physical strategies behind one contract, picked by measured edge
-    count — the adaptive design a 100 TB run needs in the OTHER
-    direction than usual: dedup candidate graphs are tiny relative to
-    the corpus (the expensive part was producing the pairs), and below
-    ``local_edge_cutoff`` edges the distributed loop's per-round
-    scheduling floor dominates by 10×+ (measured 15.5 s for a 4.1 k-edge
-    graph that union-find closes in milliseconds). Small graphs collapse
-    in one union-find task (_cc_local); past the cutoff the alternating
-    star algorithm below engages. Both compute the identical fixpoint
-    (min node id per component — independent of strategy), so the
-    DuckDB recursive-CTE oracle covers whichever path runs.
+    count against the cutoff the graph loops share,
+    ``ops.LOCAL_EDGE_CUTOFF`` (``local_edge_cutoff`` overrides it; 0
+    forces the distributed loop) — the adaptive design a 100 TB run
+    needs in the OTHER direction than usual: dedup candidate graphs are
+    tiny relative to the corpus (the expensive part was producing the
+    pairs; 4.1 k edges from 2 k vectors at sf0.1, and the LSH cap bounds
+    bucket fan-out, so even 10⁸-doc runs usually land under it), and
+    below the cutoff the distributed loop's per-round scheduling floor
+    dominates by 10×+ (measured 15.5 s for a 4.1 k-edge graph that
+    union-find closes in milliseconds). At or below it the graph
+    collapses in one union-find task (_cc_local) whose output is spilled
+    as data; past it the alternating star algorithm below engages, with
+    each round a ``checkpoint_sublinear`` cut. Both compute the
+    identical fixpoint (min node id per component — independent of
+    strategy), so the DuckDB recursive-CTE oracle covers whichever path
+    runs.
 
     Distributed path (round-12, replacing O(diameter) min-label
     propagation — round-11 verdict item #5): ALTERNATING LARGE-STAR /
@@ -1025,39 +1023,38 @@ def connected_components(
     exposure), and the terminal state is asserted to be a star forest
     (every child appears exactly once, no parent is a child) — a
     violated assertion falls back to continued iteration rather than
-    wrong output. Each round's edge set is a ``checkpoint_sublinear``
-    cut (storage policy: the ``blow_spark.materialize`` docstring). The
+    wrong output (storage policy of the cuts: the
+    ``blow_spark.materialize`` docstring). The
     reference has no multi-pass operator at all (single-pass channel
     dataflow, maps/maps.go:34-37); this is the iterative-algorithm
     pattern the brief calls out, kept deterministic (the fixpoint —
     min node id per component — is independent of round structure) so
     a DuckDB recursive CTE can oracle it."""
-    from blow_spark.materialize import checkpoint_sublinear, spill_to_parquet
+    from blow_spark import ops
+    from blow_spark.materialize import checkpoint_sublinear, reused, spill_to_parquet
 
-    raw = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")).persist()
-    n_edges = raw.count()  # materializes the (expensive) pair plan ONCE
-    LAST_CC_STRATEGY["n_edges"] = n_edges
-    if n_edges <= local_edge_cutoff:
-        LAST_CC_STRATEGY["strategy"] = "local"
-        out = spill_to_parquet(_cc_local(raw), "blow_spark_cc_")
-        raw.unpersist()
-        # race-free per-call record (the global is single-threaded-only)
-        out.cc_strategy = {"strategy": "local", "n_edges": n_edges}
-        return out
-    LAST_CC_STRATEGY["strategy"] = "distributed"
-    # node universe up front: star rewrites drop nodes that collapse
-    # into their root, and self-loop-only nodes never enter the loop
-    nodes = checkpoint_sublinear(
-        raw.select(F.col("a").alias("node"))
-        .union(raw.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    e = checkpoint_sublinear(
-        raw.filter(F.col("a") != F.col("b"))
-        .select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .distinct()
-    )
-    raw.unpersist()
+    with reused(pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))) as raw:
+        n_edges = raw.count()  # materializes the (expensive) pair plan ONCE
+        LAST_CC_STRATEGY["n_edges"] = n_edges
+        if n_edges <= ops._edge_cutoff(local_edge_cutoff):
+            LAST_CC_STRATEGY["strategy"] = "local"
+            out = spill_to_parquet(_cc_local(raw), "blow_spark_cc_")
+            # race-free per-call record (the global is single-threaded-only)
+            out.cc_strategy = {"strategy": "local", "n_edges": n_edges}
+            return out
+        LAST_CC_STRATEGY["strategy"] = "distributed"
+        # node universe up front: star rewrites drop nodes that collapse
+        # into their root, and self-loop-only nodes never enter the loop
+        nodes = checkpoint_sublinear(
+            raw.select(F.col("a").alias("node"))
+            .union(raw.select(F.col("b").alias("node")))
+            .distinct()
+        )
+        e = checkpoint_sublinear(
+            raw.filter(F.col("a") != F.col("b"))
+            .select(F.col("a").alias("u"), F.col("b").alias("v"))
+            .distinct()
+        )
     e_cnt = e.count()
     converged = False
     for _ in range(max_iter):

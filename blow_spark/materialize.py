@@ -18,7 +18,15 @@ DataFrame whose plan no longer contains the upstream.
 * **sublinear** — :func:`checkpoint_sublinear`: vocabulary- or node-grain
   tables that grow with the corpus but far slower than it (graph
   supersteps, vocabularies, edge lists). ``localCheckpoint(eager=True)``
-  with the input's partitioning kept.
+  with the input's partitioning kept. The graph supersteps cut here:
+  the rank table of ``ops.pagerank``, the alive set of ``ops.kcore``,
+  the distance/cost state of ``ops._min_relax`` (BFS and Bellman-Ford)
+  and the edge set of ``dedup.connected_components``. Each of these
+  operators has two paths behind one contract: at or below
+  ``ops.LOCAL_EDGE_CUTOFF`` edges it computes the whole fixpoint in one
+  ``coalesce(1).mapInPandas`` task and cuts that task's output once
+  (connected components spills it as **data**); above the cutoff it
+  runs its distributed loop and cuts every round.
 * **data** — :func:`spill_to_parquet`: data-proportional tables
   (candidate sets, signature tables). Written to a temp parquet dir and
   read back as a plain file scan; at cluster scale that dir is a table
@@ -26,6 +34,12 @@ DataFrame whose plan no longer contains the upstream.
   block manager (``getPersistentRDDs()`` stays empty; pinned in
   tests/test_dedup.py and tests/test_similarity.py) and, unlike
   ``DataFrame.checkpoint()``, needs no session checkpoint dir.
+
+Operator-scoped reuse is not a cut: a table an operator reads several
+times while it runs (the edge list of a graph loop, a candidate base)
+is cached with :func:`reused`, which persists on entry and always
+unpersists on exit, also when the operator raises, so no cache outlives
+the call that made it (pinned by tests/test_graph_paths.py).
 
 What a lost block does: the two ``localCheckpoint`` classes keep their
 partitions in the block manager (MEMORY_AND_DISK) and drop the lineage
@@ -60,6 +74,8 @@ import shutil
 import tempfile
 import time
 from collections import OrderedDict
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -297,6 +313,21 @@ def cleanup_stale_siblings(
         except OSError:
             pass  # vanished or unreadable: fall through to removal
         _remove_path(p)
+
+
+@contextmanager
+def reused(*dfs: DataFrame) -> Iterator[DataFrame | tuple[DataFrame, ...]]:
+    """Persist ``dfs`` for the body of a ``with`` block and unpersist
+    them when it exits, normally or by an exception. Yields the one
+    DataFrame, or the tuple of them when given several. The cache is
+    filled by the first action over it, as with a bare ``persist()``."""
+    for df in dfs:
+        df.persist()
+    try:
+        yield dfs[0] if len(dfs) == 1 else dfs
+    finally:
+        for df in dfs:
+            df.unpersist()
 
 
 def checkpoint_small(df: DataFrame) -> DataFrame:

@@ -8,6 +8,9 @@ plus a DuckDB oracle.
 
 from __future__ import annotations
 
+import functools
+import json
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -181,6 +184,75 @@ def interval_overlap_join(
 
 
 # --------------------------------------------------------------------------
+# Iterative graph loops: local finish below one edge cutoff
+# --------------------------------------------------------------------------
+
+#: Edge count at or below which the fixed-round graph loops (pagerank,
+#: kcore, bfs_distances/bellman_ford through ``_min_relax``) and
+#: dedup.connected_components compute their whole fixpoint in ONE task
+#: (coalesce(1) + mapInPandas over the cached edge list, numpy doing
+#: each round) instead of one distributed superstep per round. Below it
+#: the per-superstep scheduling floor dominates: a 4.1 k-edge component
+#: graph took 15.5 s distributed and milliseconds of union-find, and
+#: pagerank over ~80 k edges spent 2.6 s of 2.7 s in 24 jobs with the
+#: executors 26% busy. Sized so the one task holds the edge list
+#: comfortably (~16 B/edge, ~32 MB) and finishes in seconds. Every
+#: operator reads it at call time, so patching this attribute moves all
+#: four; each also takes a ``local_edge_cutoff=`` override (0 forces the
+#: distributed loop on any non-empty graph).
+LOCAL_EDGE_CUTOFF = 2_000_000
+
+
+def _edge_cutoff(local_edge_cutoff: int | None) -> int:
+    return LOCAL_EDGE_CUTOFF if local_edge_cutoff is None else local_edge_cutoff
+
+
+def _in_one_task(df: DataFrame, fn, schema) -> DataFrame:
+    """``fn(pandas frame of all of df)`` in ONE task (coalesce(1) +
+    mapInPandas). ``coalesce(1)`` is narrow, so ``df`` must be cached
+    first or its whole last stage would run in that one task too."""
+    from blow_spark.shipping import ensure_package_shipped
+
+    ensure_package_shipped(df.sparkSession)
+    columns = df.columns
+
+    def run(batches):
+        import pandas as pd
+
+        frames = list(batches)
+        yield fn(pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(columns=columns))
+
+    return df.coalesce(1).mapInPandas(run, schema)
+
+
+def _node_codes(*cols):
+    """Factorize node-id columns jointly → (codes per column, node values,
+    null slot). A null id gets the extra code ``len(values)``: it is a
+    node of its own that no join ever matches, as in the distributed
+    loops' equi-joins."""
+    import numpy as np
+    import pandas as pd
+
+    # concat skips empty columns (pandas would let them set the dtype);
+    # the split below still hands each one its zero-length slice
+    codes, values = pd.factorize(pd.concat([c for c in cols if len(c)] or cols, ignore_index=True))
+    null = len(values)
+    codes = np.where(codes < 0, null, codes)
+    splits = np.cumsum([len(c) for c in cols])[:-1]
+    return np.split(codes, splits), values, null
+
+
+def _node_column(values, null: int, idx):
+    """Node ids for codes ``idx`` (the null slot decodes to None)."""
+    import numpy as np
+
+    nodes = np.asarray(values)
+    if (idx == null).any():
+        nodes = np.append(nodes.astype(object), None)
+    return nodes[idx]
+
+
+# --------------------------------------------------------------------------
 # PageRank (iterative)
 # --------------------------------------------------------------------------
 
@@ -190,29 +262,39 @@ def pagerank(
     iterations: int = 3,
     damping: float = 0.85,
     assume_distinct: bool = False,
+    local_edge_cutoff: int | None = None,
 ) -> DataFrame:
     """Power-iteration PageRank over (src, dst) edges → (node, rank).
 
     Node set = src ∪ dst; uniform init 1/N; per round
     r'(v) = (1−d)/N + d·Σ_{u→v} r(u)/outdeg(u). Dangling mass is dropped
     (caller adds reverse edges for an undirected walk, as the catalog
-    query does). Each round is one join + one shuffle keyed by node —
-    the same key every round, so a cluster deployment pre-partitions
-    edges once and every iteration is co-located. Each round's rank
-    table is a ``checkpoint_sublinear`` cut (storage policy: the
-    ``blow_spark.materialize`` docstring); the plan otherwise doubles per
-    iteration, and the cut buys AQE real sizes: fusing
-    all rounds into one lazy plan was measured WORSE (8.6 s → 12.8 s at
+    query does). Fixed iteration count keeps the result a pure function
+    of the edge set, so an unrolled-CTE SQL oracle can replay it.
+    ``assume_distinct=True`` skips the defensive edge dedup — pass it
+    when the caller's construction already guarantees uniqueness (e.g. a
+    distinct pair set unioned into two disjoint directions): at 10⁹
+    edges that is one full shuffle of the edge table saved.
+
+    Two paths behind one contract, picked by the edge count against
+    ``LOCAL_EDGE_CUTOFF`` (``local_edge_cutoff`` overrides it). At or
+    below it every round runs in one task as a numpy ``bincount`` over
+    the edges (``_pagerank_task``); above it each round is one join +
+    one shuffle keyed by node — the same key every round, so a cluster
+    deployment pre-partitions edges once and every iteration is
+    co-located. Either way the returned rank table is a
+    ``checkpoint_sublinear`` cut (storage policy: the
+    ``blow_spark.materialize`` docstring). Both compute the same
+    per-edge terms; only the order of each node's floating-point sum
+    differs, so the ranks agree to ~1e-15 relative.
+
+    Distributed path: each round's rank table is cut; the plan otherwise
+    doubles per iteration, and the cut buys AQE real sizes: fusing all
+    rounds into one lazy plan was measured WORSE (8.6 s → 12.8 s at
     sf0.1, 3 iterations) because every round's exchange is then planned
     blind at full parallelism instead of coalescing against the
-    materialized rank table. Fixed iteration count keeps the
-    result a pure function of the edge set, so an unrolled-CTE SQL
-    oracle can replay it. ``assume_distinct=True`` skips the defensive
-    edge dedup — pass it when the caller's construction already
-    guarantees uniqueness (e.g. a distinct pair set unioned into two
-    disjoint directions): at 10⁹ edges that is one full shuffle of the
-    edge table saved."""
-    from blow_spark.materialize import checkpoint_sublinear
+    materialized rank table."""
+    from blow_spark.materialize import checkpoint_sublinear, reused
 
     e = edges.select(F.col("src"), F.col("dst"))
     if not assume_distinct:
@@ -232,37 +314,54 @@ def pagerank(
     # catalog query measured 11.1 s → 7.2 s at sf0.1 / 1.17 M edges,
     # and the shared-exchange form removes two more edge-table
     # shuffles from the derivation. Per-iteration cost is ~1.3 s.
-    e = e.repartition(F.col("src")).persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n_nodes = nodes.count()
-    outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    contrib_edges = e.join(outdeg, "src").persist()
-    ranks = checkpoint_sublinear(nodes.withColumn("rank", F.lit(1.0 / n_nodes)))
-    base = (1.0 - damping) / n_nodes
+    with reused(e.repartition(F.col("src"))) as e:
+        node_ids = e.select(F.col("src").alias("node")).union(e.select(F.col("dst").alias("node")))
+        if e.count() <= _edge_cutoff(local_edge_cutoff):
+            node_t = node_ids.schema["node"].dataType.simpleString()
+            task = functools.partial(_pagerank_task, iterations=iterations, damping=damping)
+            return checkpoint_sublinear(_in_one_task(e, task, f"node {node_t}, rank double not null"))
+        outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
+        with reused(node_ids.distinct(), e.join(outdeg, "src")) as (nodes, contrib_edges):
+            n_nodes = nodes.count()
+            ranks = checkpoint_sublinear(nodes.withColumn("rank", F.lit(1.0 / max(n_nodes, 1))))
+            base = (1.0 - damping) / max(n_nodes, 1)
+            for _ in range(iterations):
+                inbound = (
+                    contrib_edges.join(ranks, contrib_edges.src == ranks.node)
+                    .select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("c"))
+                    .groupBy("dst")
+                    .agg(F.sum("c").alias("inflow"))
+                )
+                ranks = checkpoint_sublinear(
+                    nodes.join(inbound, nodes.node == inbound.dst, "left").select(
+                        "node",
+                        (F.lit(base) + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))).alias(
+                            "rank"
+                        ),
+                    )
+                )
+            return ranks
+
+
+def _pagerank_task(pdf, iterations: int, damping: float):
+    """pagerank's local path over the whole (src, dst) edge frame: the
+    distributed rounds' arithmetic, with each node's inflow a
+    ``bincount`` over the edges. Out-degree counts every edge of a
+    non-null src; an edge with a null endpoint carries no rank."""
+    import numpy as np
+    import pandas as pd
+
+    (s, d), values, null = _node_codes(pdf["src"], pdf["dst"])
+    n = null + int((s == null).any() or (d == null).any())
+    outdeg = np.bincount(s[s != null], minlength=null)
+    flows = (s != null) & (d != null)
+    s, d = s[flows], d[flows]
+    rank = np.full(n, 1.0 / max(n, 1))
+    base = (1.0 - damping) / max(n, 1)
     for _ in range(iterations):
-        inbound = (
-            contrib_edges.join(ranks, contrib_edges.src == ranks.node)
-            .select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = checkpoint_sublinear(
-            nodes.join(inbound, nodes.node == inbound.dst, "left").select(
-                "node",
-                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))).alias(
-                    "rank"
-                ),
-            )
-        )
-    e.unpersist()
-    contrib_edges.unpersist()
-    nodes.unpersist()
-    return ranks
+        inflow = np.bincount(d, weights=rank[s] / outdeg[s], minlength=n)
+        rank = base + damping * inflow
+    return pd.DataFrame({"node": _node_column(values, null, np.arange(n)), "rank": rank})
 
 
 # --------------------------------------------------------------------------
@@ -364,7 +463,12 @@ def salted_join(
     return out.drop("_salt")
 
 
-def bfs_distances(edges: DataFrame, sources: DataFrame, max_hops: int = 3) -> DataFrame:
+def bfs_distances(
+    edges: DataFrame,
+    sources: DataFrame,
+    max_hops: int = 3,
+    local_edge_cutoff: int | None = None,
+) -> DataFrame:
     """Multi-source BFS over (src, dst) edges → (node, dist): minimum hop
     count from any source node, truncated at ``max_hops`` (unreached
     nodes are absent). The frontier-expansion member of the iterative
@@ -373,56 +477,138 @@ def bfs_distances(edges: DataFrame, sources: DataFrame, max_hops: int = 3) -> Da
     min_{u→v} dist(u)+1) — one join + one min-groupBy shuffle keyed by
     node, the SAME key every round, so a cluster deployment
     pre-partitions edges once and every iteration is co-located (the
-    loop is ``_min_relax``). Fixed hop count keeps
-    the result a pure function of the edge set, so an unrolled-CTE SQL
-    oracle can replay it. The reference's single-pass channel dataflow
-    (maps/maps.go:34-37) cannot express any multi-pass operator.
+    loop and its one-task local path are ``_min_relax``). Fixed hop
+    count keeps the result a pure function of the edge set, so an
+    unrolled-CTE SQL oracle can replay it. The reference's single-pass
+    channel dataflow (maps/maps.go:34-37) cannot express any multi-pass
+    operator.
 
     Like pagerank, the edge table is hash-partitioned by the per-round
-    join key ONCE and cached for the loop's lifetime (released before
+    join key ONCE and cached for the operator's lifetime (released before
     return): every expansion join reuses the cached distribution and
     shuffles only the frontier."""
-    return _min_relax(edges, sources, "dist", F.lit(0), F.col("dist") + 1, max_hops)
+    return _min_relax(edges, sources, "dist", None, max_hops, local_edge_cutoff)
 
 
 def bellman_ford(
-    edges: DataFrame, sources: DataFrame, rounds: int = 3
+    edges: DataFrame,
+    sources: DataFrame,
+    rounds: int = 3,
+    local_edge_cutoff: int | None = None,
 ) -> DataFrame:
     """Bounded Bellman-Ford over WEIGHTED (src, dst, w) edges → (node,
     cost): cheapest path cost from any source using at most ``rounds``
     edges (unreached nodes absent). The weighted member of the iterative
     family: each round relaxes cost(v) = min(cost(v), min_{u→v} cost(u)
     + w(u,v)) — the same one-join + min-groupBy shuffle per round as
-    bfs_distances, same pre-partitioned cached edge table, same
-    unrolled-CTE oracle strategy. With INTEGER weights (the catalog
-    query uses fixed-point cents) every candidate cost is exact, so the
-    per-node MIN is engine-deterministic with no float-order caveats;
-    bounded rounds also make negative weights well-defined (cheapest
-    ≤k-edge walk), though the catalog uses non-negative costs."""
-    return _min_relax(
-        edges, sources, "cost", F.lit(0).cast("long"), F.col("cost") + F.col("w"), rounds
-    )
+    bfs_distances, same pre-partitioned cached edge table, same local
+    path below the edge cutoff, same unrolled-CTE oracle strategy. With
+    INTEGER weights (the catalog query uses fixed-point cents) every
+    candidate cost is exact, so the per-node MIN is engine-deterministic
+    with no float-order caveats; bounded rounds also make negative
+    weights well-defined (cheapest ≤k-edge walk), though the catalog
+    uses non-negative costs."""
+    return _min_relax(edges, sources, "cost", "w", rounds, local_edge_cutoff)
 
 
 def _min_relax(
-    edges: DataFrame, sources: DataFrame, col: str, start: Column, step: Column, rounds: int
+    edges: DataFrame,
+    sources: DataFrame,
+    col: str,
+    weight: str | None,
+    rounds: int,
+    local_edge_cutoff: int | None,
 ) -> DataFrame:
     """bfs_distances/bellman_ford's loop: state ``(node, col)`` starts at
-    ``start`` on each source; each round unions ``step`` over every edge
-    out of a state row into the state and keeps the per-node MIN."""
-    from blow_spark.materialize import checkpoint_sublinear
+    0 on each source; each round unions ``col`` + the edge's ``weight``
+    column (+1 when ``weight`` is None) over every edge out of a state
+    row into the state and keeps the per-node MIN.
 
-    edges = edges.repartition(F.col("src")).persist()
-    state = checkpoint_sublinear(sources.select("node").distinct().withColumn(col, start))
+    Two paths behind one contract, picked by the edge count against
+    ``LOCAL_EDGE_CUTOFF`` (``local_edge_cutoff`` overrides it): at or
+    below it every round runs in one task over factorized node ids
+    (``_min_relax_task``); above it each round is one distributed
+    superstep. Either way the state is a ``checkpoint_sublinear`` cut.
+    Decimal costs always take the distributed loop (numpy has no exact
+    decimal)."""
+    from pyspark.sql.types import DecimalType, FractionalType
+
+    from blow_spark.materialize import checkpoint_sublinear, reused
+
+    start = F.lit(0) if weight is None else F.lit(0).cast("long")
+    w = F.lit(1) if weight is None else F.col(weight)
+    step = F.col(col) + w
+    seeds = sources.select("node").distinct()
+    with reused(edges.repartition(F.col("src"))) as edges:
+
+        def relax(state: DataFrame) -> DataFrame:
+            relaxed = edges.join(state, edges.src == state.node).select(
+                F.col("dst").alias("node"), step.alias(col)
+            )
+            return state.union(relaxed).groupBy("node").agg(F.min(col).alias(col))
+
+        n_edges = edges.count()
+        out_t = relax(seeds.withColumn(col, start)).schema
+        value_t = out_t[col].dataType
+        if n_edges <= _edge_cutoff(local_edge_cutoff) and not isinstance(value_t, DecimalType):
+            tagged = edges.select("src", "dst", w.alias("w"), F.lit(False).alias("is_source")).unionByName(
+                seeds.select(
+                    F.col("node").alias("src"),
+                    F.lit(None).alias("dst"),
+                    F.lit(None).alias("w"),
+                    F.lit(True).alias("is_source"),
+                )
+            )
+            task = functools.partial(
+                _min_relax_task,
+                col=col,
+                rounds=rounds,
+                fractional=isinstance(value_t, FractionalType),
+            )
+            return checkpoint_sublinear(_in_one_task(tagged, task, out_t))
+        state = checkpoint_sublinear(seeds.withColumn(col, start))
+        for _ in range(rounds):
+            state = checkpoint_sublinear(relax(state))
+        return state
+
+
+def _min_relax_task(pdf, col: str, rounds: int, fractional: bool):
+    """_min_relax's local path over the tagged frame (edge rows, then one
+    row per source with ``is_source``). Mirrors the distributed round's
+    SQL: a null src joins nothing, a null dst is a node of its own, a
+    null weight makes a null candidate that MIN ignores, and a node
+    whose candidates are all null is present with a null value."""
+    import numpy as np
+    import pandas as pd
+
+    is_source = pdf["is_source"].to_numpy(bool)
+    e = pdf[~is_source]
+    (s, d, seeds), values, null = _node_codes(e["src"], e["dst"], pdf["src"][is_source])
+    dtype = np.float64 if fractional else np.int64
+    has_w = e["w"].notna().to_numpy()
+    w = e["w"].fillna(0).to_numpy(dtype)
+    joins = s != null
+    s, d, w, has_w = s[joins], d[joins], w[joins], has_w[joins]
+    present = np.zeros(null + 1, bool)
+    present[seeds] = True
+    has = present.copy()
+    # "no value" sentinel: NaN for floats (fmin skips it, and Spark's MIN
+    # ranks NaN above every number), the int64 max for integers
+    val = np.where(has, 0, np.nan if fractional else np.iinfo(np.int64).max).astype(dtype)
     for _ in range(rounds):
-        relaxed = edges.join(state, edges.src == state.node).select(
-            F.col("dst").alias("node"), step.alias(col)
-        )
-        state = checkpoint_sublinear(
-            state.union(relaxed).groupBy("node").agg(F.min(col).alias(col))
-        )
-    edges.unpersist()
-    return state
+        hit = present[s]
+        to, ok = d[hit], has[s[hit]] & has_w[hit]
+        cand = val[s[hit]][ok] + w[hit][ok]
+        # every read above sees the previous round's state
+        present[to] = True
+        has[to[ok]] = True
+        np.fmin.at(val, to[ok], cand)
+    idx = np.flatnonzero(present)
+    out = val[idx]
+    if not has[idx].all():
+        masked = pd.arrays.FloatingArray if fractional else pd.arrays.IntegerArray
+        out = masked(np.where(has[idx], out, 0).astype(dtype), ~has[idx])
+    return pd.DataFrame({"node": _node_column(values, null, idx), col: out})
 
 
 # --------------------------------------------------------------------------
@@ -909,7 +1095,9 @@ def pack_bins_best_fit(
     )
 
 
-def kcore(edges: DataFrame, k: int, max_iter: int = 16) -> DataFrame:
+def kcore(
+    edges: DataFrame, k: int, max_iter: int = 16, local_edge_cutoff: int | None = None
+) -> DataFrame:
     """k-core decomposition by iterative peeling: repeatedly drop nodes
     whose degree (within the surviving subgraph) is below ``k`` until a
     fixpoint — the maximal subgraph where every node keeps >= k
@@ -921,57 +1109,114 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 16) -> DataFrame:
     (node, core_degree) for the surviving nodes, with the DataFrame
     carrying a race-free per-call ``kcore_info`` record {rounds,
     n_nodes_in, n_nodes_out} (same convention as
-    dedup.connected_components.cc_strategy).
+    dedup.connected_components.cc_strategy). Peeling converges in at
+    most "degeneracy layers" rounds — small for real graphs; the
+    operator raises if max_iter is hit without convergence rather than
+    returning a non-fixpoint.
 
-    Scale shape: each round is ONE node-keyed shuffle (two semi-joins of
-    the adjacency against the alive set + a degree aggregate); each
-    round's alive set is a ``checkpoint_sublinear`` cut, as in pagerank
-    and connected_components. Peeling converges in at most
-    "degeneracy layers" rounds — small for real graphs; the loop raises
-    if max_iter is hit without convergence rather than returning a
-    non-fixpoint."""
-    from blow_spark.materialize import checkpoint_sublinear
+    Two paths behind one contract, picked by the edge count against
+    ``LOCAL_EDGE_CUTOFF`` (``local_edge_cutoff`` overrides it), with the
+    same rounds and the same ``kcore_info``. At or below it the peel
+    runs in one task over a boolean alive mask (``_kcore_task``), whose
+    output is one ``checkpoint_sublinear`` cut. Above it each round is
+    ONE node-keyed shuffle (two semi-joins of the adjacency against the
+    alive set + a degree aggregate), and each round's alive set is a
+    ``checkpoint_sublinear`` cut, as in pagerank."""
+    from blow_spark.materialize import checkpoint_sublinear, reused
 
-    adj = (
-        edges.select("u", "v")
-        .unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .persist()
+    adj = edges.select("u", "v").unionAll(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    alive = checkpoint_sublinear(adj.select(F.col("u").alias("n")).distinct())
-    n_in = alive.count()
-    rounds = 0
-    converged = False
-    for _ in range(max_iter):
-        survivors = checkpoint_sublinear(
-            adj.join(alive.select(F.col("n").alias("u")), "u")
-            .join(alive.select(F.col("n").alias("v")), "v")
-            .groupBy("u")
-            .agg(F.count("*").alias("d"))
-            .filter(F.col("d") >= k)
-            .select(F.col("u").alias("n"))
-        )
-        rounds += 1
-        n_new, n_old = survivors.count(), alive.count()
-        alive = survivors
-        if n_new == n_old:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"kcore did not converge within {max_iter} rounds — raise max_iter "
-            f"(and the oracle's unroll depth) together"
-        )
-    # materialize BEFORE unpersisting the adjacency
-    out = checkpoint_sublinear(
-        adj.join(alive.select(F.col("n").alias("u")), "u")
-        .join(alive.select(F.col("n").alias("v")), "v")
-        .groupBy("u")
-        .agg(F.count("*").cast("bigint").alias("core_degree"))
-        .select(F.col("u").cast("bigint").alias("node"), "core_degree")
+    not_converged = (
+        f"kcore did not converge within {max_iter} rounds — raise max_iter "
+        f"(and the oracle's unroll depth) together"
     )
-    adj.unpersist()
-    out.kcore_info = {"rounds": rounds, "n_nodes_in": n_in, "n_nodes_out": alive.count()}
+    with reused(adj) as adj:
+        if adj.count() // 2 <= _edge_cutoff(local_edge_cutoff):
+            node_t = adj.schema["u"].dataType.simpleString()
+            task = functools.partial(_kcore_task, k=k, max_iter=max_iter)
+            cut = checkpoint_sublinear(
+                _in_one_task(adj, task, f"node {node_t}, core_degree bigint not null, info string")
+            )
+            info = json.loads(cut.filter(F.col("info").isNotNull()).head()["info"])
+            if not info.pop("converged"):
+                raise RuntimeError(not_converged)
+            out = cut.filter(F.col("info").isNull()).select(
+                F.col("node").cast("bigint").alias("node"), "core_degree"
+            )
+        else:
+            alive = checkpoint_sublinear(adj.select(F.col("u").alias("n")).distinct())
+            n_in = n_old = alive.count()
+            rounds = 0
+            for _ in range(max_iter):
+                alive = checkpoint_sublinear(
+                    adj.join(alive.select(F.col("n").alias("u")), "u")
+                    .join(alive.select(F.col("n").alias("v")), "v")
+                    .groupBy("u")
+                    .agg(F.count("*").alias("d"))
+                    .filter(F.col("d") >= k)
+                    .select(F.col("u").alias("n"))
+                )
+                rounds += 1
+                # the survivors are a subset of the previous alive set,
+                # whose count is the last round's: equal counts = fixpoint
+                n_new = alive.count()
+                if n_new == n_old:
+                    break
+                n_old = n_new
+            else:
+                raise RuntimeError(not_converged)
+            # materialize BEFORE the adjacency is unpersisted
+            out = checkpoint_sublinear(
+                adj.join(alive.select(F.col("n").alias("u")), "u")
+                .join(alive.select(F.col("n").alias("v")), "v")
+                .groupBy("u")
+                .agg(F.count("*").cast("bigint").alias("core_degree"))
+                .select(F.col("u").cast("bigint").alias("node"), "core_degree")
+            )
+            info = {"rounds": rounds, "n_nodes_in": n_in, "n_nodes_out": n_new}
+    out.kcore_info = info
     return out
+
+
+def _kcore_task(pdf, k: int, max_iter: int):
+    """kcore's local path over the whole adjacency (both directions of
+    every edge): the distributed peel's rounds on a boolean alive mask,
+    degrees a ``bincount`` over the edges with both ends alive. Emits the
+    core's (node, core_degree) rows plus one row whose ``info`` holds the
+    run's JSON record, so the record survives an empty core."""
+    import numpy as np
+    import pandas as pd
+
+    (a, b), values, null = _node_codes(pdf["u"], pdf["v"])
+    n_in = null + int((a == null).any())
+    both = (a != null) & (b != null)
+    a, b = a[both], b[both]
+    alive = np.ones(null, bool)
+    n_old, rounds, converged = n_in, 0, False
+    while rounds < max_iter and not converged:
+        live = alive[a] & alive[b]
+        # a node with no live edge has no degree row, whatever k is
+        alive = np.bincount(a[live], minlength=null) >= max(k, 1)
+        rounds += 1
+        n_new = int(alive.sum())
+        converged, n_old = n_new == n_old, n_new
+    live = alive[a] & alive[b]
+    degree = np.bincount(a[live], minlength=null)
+    idx = np.flatnonzero(alive)
+    info = {
+        "rounds": rounds,
+        "n_nodes_in": n_in,
+        "n_nodes_out": n_old,
+        "converged": converged,
+    }
+    return pd.DataFrame(
+        {
+            "node": _node_column(values, null, np.append(idx, null)),
+            "core_degree": np.append(degree[idx], 0),
+            "info": [None] * len(idx) + [json.dumps(info)],
+        }
+    )
 
 
 # --------------------------------------------------------------------------

@@ -1,7 +1,8 @@
 """Two-point linearity measurement for the graph/iterative family
-(round-3 verdict item #5): pagerank and connected_components at 1x and
-10x edges, plus the union-find-vs-distributed slope on EACH side of the
-CC strategy cutoff over the same graph family.
+(round-3 verdict item #5): pagerank's distributed loop at 1x and 10x
+edges, plus the local-vs-distributed slope of pagerank and
+connected_components on the local side of their shared edge cutoff
+(``ops.LOCAL_EDGE_CUTOFF``) over the same graph family.
 
 Methodology matches SCALE.md's round-3 dedup/ANN table: seeded synthetic
 inputs materialized to parquet first (so the measured operator excludes
@@ -15,13 +16,14 @@ Run: python scripts/scale_graph.py            (full, ~10 min)
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def random_edges(spark, n_edges: int, avg_degree: int = 10, seed: int = 7):
@@ -62,23 +64,38 @@ def main() -> None:
 
     sizes = (100_000, 1_000_000) if quick else (1_000_000, 10_000_000)
 
-    # ---- pagerank: 1x vs 10x edges, 3 iterations ----
+    # ---- pagerank: 1x vs 10x edges, 3 iterations, distributed loop ----
+    # cutoff=0 forces the distributed loop: graphs of up to
+    # LOCAL_EDGE_CUTOFF edges would otherwise run in one local task
     paths = {n: random_edges(spark, n) for n in sizes}
-    # warm (codegen/JIT) on a small set
+    # warm (codegen/JIT) on a small set, both paths
     warm = spark.read.parquet(random_edges(spark, 50_000))
     ops.pagerank(warm, iterations=3, assume_distinct=True).count()
+    ops.pagerank(warm, iterations=3, assume_distinct=True, local_edge_cutoff=0).count()
     for n, p in paths.items():
         e = spark.read.parquet(p)
         results[f"pagerank_{n}"] = best_of(
-            lambda e=e: ops.pagerank(e, iterations=3, assume_distinct=True).count()
+            lambda e=e: ops.pagerank(
+                e, iterations=3, assume_distinct=True, local_edge_cutoff=0
+            ).count()
         )
 
-    # ---- connected components: same graph family, both strategies ----
-    # CC edge sizes chosen to straddle nothing by default (both under the
+    # ---- both graph loops, local path vs distributed, under the cutoff ----
+    # Edge sizes chosen to straddle nothing by default (both under the
     # 2M cutoff) so the LOCAL path measures its own slope; the cutoff=0
     # override then forces the DISTRIBUTED path on identical graphs.
     cc_sizes = (20_000, 200_000) if quick else (200_000, 2_000_000)
     cc_paths = {n: random_edges(spark, n) for n in cc_sizes}
+    for n, p in cc_paths.items():
+        e = spark.read.parquet(p)
+        results[f"pagerank_local_{n}"] = best_of(
+            lambda e=e: ops.pagerank(e, iterations=3, assume_distinct=True).count()
+        )
+        results[f"pagerank_distributed_{n}"] = best_of(
+            lambda e=e: ops.pagerank(
+                e, iterations=3, assume_distinct=True, local_edge_cutoff=0
+            ).count()
+        )
     wpairs = warm.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
     dedup.connected_components(wpairs).count()                      # warm local
     dedup.connected_components(wpairs, local_edge_cutoff=0).count() # warm dist
