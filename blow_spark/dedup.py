@@ -916,45 +916,44 @@ def ppjoin_pairs(
 
 
 def _cc_local(edges: DataFrame) -> DataFrame:
-    """Union-find over the whole edge list in ONE task (coalesce(1) +
-    mapInPandas): path-compressed, union-by-min so every root IS the
-    component's min node id — the same fixpoint the iterative path
-    computes, so the two paths are interchangeable under the oracle.
-    Python-loop cost is ~1 µs/edge; at the 2 M-edge cutoff that is ~2 s
-    in one task, far below the per-round scheduling floor of the
+    """Union-find over the whole edge list in ONE task
+    (``ops._in_one_task``): path-compressed, union-by-min so every root
+    IS the component's min node id — the same fixpoint the iterative
+    path computes, so the two paths are interchangeable under the
+    oracle. Python-loop cost is ~1 µs/edge; at the 2 M-edge cutoff that
+    is ~2 s in one task, far below the per-round scheduling floor of the
     distributed loop at that size."""
-    from blow_spark.shipping import ensure_package_shipped
+    from blow_spark.ops import _in_one_task
 
-    ensure_package_shipped(edges.sparkSession)
     node_t = edges.schema["a"].dataType.simpleString()
+    return _in_one_task(edges, _union_find, f"node {node_t}, comp {node_t}")
 
-    def unionfind(batches):
-        import pandas as pd
 
-        parent: dict = {}
+def _union_find(pdf):
+    """_cc_local's task over the whole (a, b) edge frame → (node, comp)."""
+    import pandas as pd
 
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != root:
-                parent[x], x = root, parent[x]
-            return root
+    parent: dict = {}
 
-        nodes = set()
-        for pdf in batches:
-            for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
-                nodes.add(a)
-                nodes.add(b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # union-by-min: the larger root points at the smaller,
-                    # so find() always lands on the component's min id
-                    parent[max(ra, rb)] = min(ra, rb)
-        out = sorted(nodes)
-        yield pd.DataFrame({"node": out, "comp": [find(n) for n in out]})
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != root:
+            parent[x], x = root, parent[x]
+        return root
 
-    return edges.coalesce(1).mapInPandas(unionfind, f"node {node_t}, comp {node_t}")
+    nodes = set()
+    for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
+        nodes.add(a)
+        nodes.add(b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union-by-min: the larger root points at the smaller,
+            # so find() always lands on the component's min id
+            parent[max(ra, rb)] = min(ra, rb)
+    out = sorted(nodes)
+    return pd.DataFrame({"node": out, "comp": [find(n) for n in out]})
 
 
 #: Observability CONVENIENCE: which physical strategy the last
@@ -1036,7 +1035,8 @@ def connected_components(
     with reused(pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))) as raw:
         n_edges = raw.count()  # materializes the (expensive) pair plan ONCE
         LAST_CC_STRATEGY["n_edges"] = n_edges
-        if n_edges <= ops._edge_cutoff(local_edge_cutoff):
+        cutoff = ops.LOCAL_EDGE_CUTOFF if local_edge_cutoff is None else local_edge_cutoff
+        if n_edges <= cutoff:
             LAST_CC_STRATEGY["strategy"] = "local"
             out = spill_to_parquet(_cc_local(raw), "blow_spark_cc_")
             # race-free per-call record (the global is single-threaded-only)

@@ -190,21 +190,20 @@ def interval_overlap_join(
 #: Edge count at or below which the fixed-round graph loops (pagerank,
 #: kcore, bfs_distances/bellman_ford through ``_min_relax``) and
 #: dedup.connected_components compute their whole fixpoint in ONE task
-#: (coalesce(1) + mapInPandas over the cached edge list, numpy doing
-#: each round) instead of one distributed superstep per round. Below it
-#: the per-superstep scheduling floor dominates: a 4.1 k-edge component
-#: graph took 15.5 s distributed and milliseconds of union-find, and
-#: pagerank over ~80 k edges spent 2.6 s of 2.7 s in 24 jobs with the
-#: executors 26% busy. Sized so the one task holds the edge list
-#: comfortably (~16 B/edge, ~32 MB) and finishes in seconds. Every
-#: operator reads it at call time, so patching this attribute moves all
-#: four; each also takes a ``local_edge_cutoff=`` override (0 forces the
-#: distributed loop on any non-empty graph).
+#: (coalesce(1) + mapInPandas over the cached edge list, numpy or
+#: union-find doing each round) instead of one distributed superstep
+#: per round. Below it the per-superstep scheduling floor dominates: a
+#: 4.1 k-edge component graph took 15.5 s distributed and milliseconds
+#: of union-find, and pagerank over ~80 k edges spent 2.6 s of 2.7 s in
+#: 24 jobs with the executors 26% busy. Measured at the cutoff
+#: (scripts/scale_graph.py, 2 M random edges, 4 vCPUs, SCALE.md), local
+#: vs forced-distributed wall and the one task's peak Python-worker RSS:
+#: pagerank 2.0 vs 5.8 s, 265 MB; kcore (4 M adjacency rows) 4.0 vs
+#: 21.1 s, 388 MB; BFS with string ids (object columns) 4.0 vs 5.9 s,
+#: 641 MB; connected components 6.1 vs 22.3 s, 357 MB. Every operator
+#: reads it at call time, so patching this attribute moves every one
+#: (0 forces the distributed loops on any non-empty graph).
 LOCAL_EDGE_CUTOFF = 2_000_000
-
-
-def _edge_cutoff(local_edge_cutoff: int | None) -> int:
-    return LOCAL_EDGE_CUTOFF if local_edge_cutoff is None else local_edge_cutoff
 
 
 def _in_one_task(df: DataFrame, fn, schema) -> DataFrame:
@@ -262,7 +261,6 @@ def pagerank(
     iterations: int = 3,
     damping: float = 0.85,
     assume_distinct: bool = False,
-    local_edge_cutoff: int | None = None,
 ) -> DataFrame:
     """Power-iteration PageRank over (src, dst) edges → (node, rank).
 
@@ -277,12 +275,11 @@ def pagerank(
     edges that is one full shuffle of the edge table saved.
 
     Two paths behind one contract, picked by the edge count against
-    ``LOCAL_EDGE_CUTOFF`` (``local_edge_cutoff`` overrides it). At or
-    below it every round runs in one task as a numpy ``bincount`` over
-    the edges (``_pagerank_task``); above it each round is one join +
-    one shuffle keyed by node — the same key every round, so a cluster
-    deployment pre-partitions edges once and every iteration is
-    co-located. Either way the returned rank table is a
+    ``LOCAL_EDGE_CUTOFF``. At or below it every round runs in one task as
+    a numpy ``bincount`` over the edges (``_pagerank_task``); above it
+    each round is one join + one shuffle keyed by node — the same key
+    every round, so a cluster deployment pre-partitions edges once and
+    every iteration is co-located. Either way the returned rank table is a
     ``checkpoint_sublinear`` cut (storage policy: the
     ``blow_spark.materialize`` docstring). Both compute the same
     per-edge terms; only the order of each node's floating-point sum
@@ -316,7 +313,7 @@ def pagerank(
     # shuffles from the derivation. Per-iteration cost is ~1.3 s.
     with reused(e.repartition(F.col("src"))) as e:
         node_ids = e.select(F.col("src").alias("node")).union(e.select(F.col("dst").alias("node")))
-        if e.count() <= _edge_cutoff(local_edge_cutoff):
+        if e.count() <= LOCAL_EDGE_CUTOFF:
             node_t = node_ids.schema["node"].dataType.simpleString()
             task = functools.partial(_pagerank_task, iterations=iterations, damping=damping)
             return checkpoint_sublinear(_in_one_task(e, task, f"node {node_t}, rank double not null"))
@@ -467,7 +464,6 @@ def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 3,
-    local_edge_cutoff: int | None = None,
 ) -> DataFrame:
     """Multi-source BFS over (src, dst) edges → (node, dist): minimum hop
     count from any source node, truncated at ``max_hops`` (unreached
@@ -487,14 +483,13 @@ def bfs_distances(
     join key ONCE and cached for the operator's lifetime (released before
     return): every expansion join reuses the cached distribution and
     shuffles only the frontier."""
-    return _min_relax(edges, sources, "dist", None, max_hops, local_edge_cutoff)
+    return _min_relax(edges, sources, "dist", None, max_hops)
 
 
 def bellman_ford(
     edges: DataFrame,
     sources: DataFrame,
     rounds: int = 3,
-    local_edge_cutoff: int | None = None,
 ) -> DataFrame:
     """Bounded Bellman-Ford over WEIGHTED (src, dst, w) edges → (node,
     cost): cheapest path cost from any source using at most ``rounds``
@@ -508,7 +503,7 @@ def bellman_ford(
     with no float-order caveats; bounded rounds also make negative
     weights well-defined (cheapest ≤k-edge walk), though the catalog
     uses non-negative costs."""
-    return _min_relax(edges, sources, "cost", "w", rounds, local_edge_cutoff)
+    return _min_relax(edges, sources, "cost", "w", rounds)
 
 
 def _min_relax(
@@ -517,7 +512,6 @@ def _min_relax(
     col: str,
     weight: str | None,
     rounds: int,
-    local_edge_cutoff: int | None,
 ) -> DataFrame:
     """bfs_distances/bellman_ford's loop: state ``(node, col)`` starts at
     0 on each source; each round unions ``col`` + the edge's ``weight``
@@ -525,10 +519,9 @@ def _min_relax(
     row into the state and keeps the per-node MIN.
 
     Two paths behind one contract, picked by the edge count against
-    ``LOCAL_EDGE_CUTOFF`` (``local_edge_cutoff`` overrides it): at or
-    below it every round runs in one task over factorized node ids
-    (``_min_relax_task``); above it each round is one distributed
-    superstep. Either way the state is a ``checkpoint_sublinear`` cut.
+    ``LOCAL_EDGE_CUTOFF``: at or below it every round runs in one task
+    over factorized node ids (``_min_relax_task``); above it each round
+    is one distributed superstep. Either way the state is a ``checkpoint_sublinear`` cut.
     Decimal costs always take the distributed loop (numpy has no exact
     decimal)."""
     from pyspark.sql.types import DecimalType, FractionalType
@@ -550,7 +543,7 @@ def _min_relax(
         n_edges = edges.count()
         out_t = relax(seeds.withColumn(col, start)).schema
         value_t = out_t[col].dataType
-        if n_edges <= _edge_cutoff(local_edge_cutoff) and not isinstance(value_t, DecimalType):
+        if n_edges <= LOCAL_EDGE_CUTOFF and not isinstance(value_t, DecimalType):
             tagged = edges.select("src", "dst", w.alias("w"), F.lit(False).alias("is_source")).unionByName(
                 seeds.select(
                     F.col("node").alias("src"),
@@ -1095,9 +1088,7 @@ def pack_bins_best_fit(
     )
 
 
-def kcore(
-    edges: DataFrame, k: int, max_iter: int = 16, local_edge_cutoff: int | None = None
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int, max_iter: int = 16) -> DataFrame:
     """k-core decomposition by iterative peeling: repeatedly drop nodes
     whose degree (within the surviving subgraph) is below ``k`` until a
     fixpoint — the maximal subgraph where every node keeps >= k
@@ -1115,10 +1106,11 @@ def kcore(
     returning a non-fixpoint.
 
     Two paths behind one contract, picked by the edge count against
-    ``LOCAL_EDGE_CUTOFF`` (``local_edge_cutoff`` overrides it), with the
-    same rounds and the same ``kcore_info``. At or below it the peel
-    runs in one task over a boolean alive mask (``_kcore_task``), whose
-    output is one ``checkpoint_sublinear`` cut. Above it each round is
+    ``LOCAL_EDGE_CUTOFF`` (the undirected edge count, so the one task
+    holds up to twice that many adjacency rows), with the same rounds and
+    the same ``kcore_info``. At or below it the peel runs in one task
+    over a boolean alive mask (``_kcore_task``), whose output is one
+    ``checkpoint_sublinear`` cut. Above it each round is
     ONE node-keyed shuffle (two semi-joins of the adjacency against the
     alive set + a degree aggregate), and each round's alive set is a
     ``checkpoint_sublinear`` cut, as in pagerank."""
@@ -1132,7 +1124,7 @@ def kcore(
         f"(and the oracle's unroll depth) together"
     )
     with reused(adj) as adj:
-        if adj.count() // 2 <= _edge_cutoff(local_edge_cutoff):
+        if adj.count() // 2 <= LOCAL_EDGE_CUTOFF:
             node_t = adj.schema["u"].dataType.simpleString()
             task = functools.partial(_kcore_task, k=k, max_iter=max_iter)
             cut = checkpoint_sublinear(

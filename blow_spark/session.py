@@ -75,3 +75,20 @@ def get_spark(
 
     reap_orphan_scratch()
     return spark
+
+
+def count_jobs(spark: SparkSession, fn):
+    """Run ``fn()`` under a fresh job group → (its result, the number of
+    Spark jobs it started). The job group is cleared afterwards, so later
+    jobs of the session are not counted."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -37,7 +37,6 @@ import os
 import statistics
 import sys
 import time
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -53,25 +52,25 @@ def parse_patch(spec: str) -> tuple[str, str, object]:
 
 def run_once(spark, build, patches) -> tuple[int, float, str, dict]:
     """One patched build + collect → (jobs, seconds, rows sha256, records)."""
+    from blow_spark.session import count_jobs
+
     saved = []
     for module, attr, value in patches:
         mod = importlib.import_module(module)
         saved.append((mod, attr, getattr(mod, attr)))
         setattr(mod, attr, value)
-    sc = spark.sparkContext
-    group = f"ab-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
+
+    def build_and_collect():
         t0 = time.perf_counter()
         df = build()
         rows = df.collect()
-        seconds = time.perf_counter() - t0
+        return df, rows, time.perf_counter() - t0
+
+    try:
+        (df, rows, seconds), jobs = count_jobs(spark, build_and_collect)
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
         for mod, attr, value in reversed(saved):
             setattr(mod, attr, value)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     digest = hashlib.sha256("\n".join(sorted(repr(tuple(r)) for r in rows)).encode()).hexdigest()
     records = {
         k: v for k, v in vars(df).items() if not k.startswith("_") and k != "is_cached"

@@ -4,22 +4,23 @@ At or below ``ops.LOCAL_EDGE_CUTOFF`` edges, pagerank, kcore and
 bfs_distances/bellman_ford (``ops._min_relax``) compute their fixpoint in
 one task; above it they run one distributed superstep per round. No
 catalog query at the test scale factors reaches the distributed loops,
-so these tests force it with ``local_edge_cutoff=0`` (or -1 for an
-empty graph) and check both paths give the same rows on the catalog's
-own edge sets and on the edge cases. The job-count pins bound the four
+so these tests force it by patching ``ops.LOCAL_EDGE_CUTOFF`` to 0 (or
+-1 for an empty graph) for one call and check both paths give the same
+rows on the catalog's own edge sets and on the edge cases. The job-count pins bound the four
 graph rows; the leak tests check that an operator raising mid-run
 leaves no cache behind on either path.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
 import pytest
-from test_schema_reuse import _jobs
 
 from blow_spark import materialize, ops
 from blow_spark.queries import queries
+from blow_spark.session import count_jobs
 
 ALL_QUERIES = queries()
 
@@ -30,6 +31,15 @@ GRAPH_ROWS = [
     ("graph_bfs_hops", "bfs_distances"),
     ("graph_cheapest_path_bounded", "bellman_ford"),
 ]
+
+
+def _distributed(fn, *args, cutoff=0, **kwargs):
+    """``fn(*args, **kwargs)`` with ``ops.LOCAL_EDGE_CUTOFF`` patched to
+    ``cutoff`` for this call only (0 forces the distributed loop on any
+    non-empty graph, -1 even on an empty one)."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ops, "LOCAL_EDGE_CUTOFF", cutoff)
+        return fn(*args, **kwargs)
 
 
 def _rows(df) -> list[tuple]:
@@ -72,8 +82,8 @@ def test_paths_agree_on_catalog_edges(spark, sf_dir, monkeypatch, query, op):
     tasks = _one_task_calls(monkeypatch)
     local = fn(*args, **kwargs)
     assert len(tasks) == 1, "the catalog edge set should take the local path"
-    dist = fn(*args, **kwargs, local_edge_cutoff=0)
-    assert len(tasks) == 1, "local_edge_cutoff=0 should force the distributed loop"
+    dist = _distributed(fn, *args, **kwargs)
+    assert len(tasks) == 1, "a cutoff of 0 should force the distributed loop"
     assert local.schema == dist.schema
     a, b = _rows(local), _rows(dist)
     assert a, f"{query}: empty result proves nothing"
@@ -89,7 +99,7 @@ def test_paths_agree_on_catalog_edges(spark, sf_dir, monkeypatch, query, op):
 def _both(fn, *args, **kwargs):
     """(local rows, distributed rows); -1 forces even an empty graph
     onto the distributed loop."""
-    local, dist = fn(*args, **kwargs), fn(*args, **kwargs, local_edge_cutoff=-1)
+    local, dist = fn(*args, **kwargs), _distributed(fn, *args, cutoff=-1, **kwargs)
     assert local.schema == dist.schema
     return local, dist
 
@@ -147,9 +157,9 @@ def test_kcore_core_empties(spark):
 
 def test_kcore_raises_without_convergence_on_both_paths(spark):
     pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4), (4, 5)], "u bigint, v bigint")
-    for cutoff in (None, 0):
+    for run in (ops.kcore, functools.partial(_distributed, ops.kcore)):
         with pytest.raises(RuntimeError, match="did not converge within 2 rounds"):
-            ops.kcore(pairs, 2, max_iter=2, local_edge_cutoff=cutoff)
+            run(pairs, 2, max_iter=2)
 
 
 def test_relax_null_ids_and_weights(spark):
@@ -194,7 +204,7 @@ def test_graph_row_job_pins(spark, sf_dir, query):
 
     for table in ("orders", "lineitem"):
         read_table(spark, sf_dir, table)
-    _, jobs = _jobs(spark, lambda: ALL_QUERIES[query](spark, sf_dir).collect())
+    _, jobs = count_jobs(spark, lambda: ALL_QUERIES[query](spark, sf_dir).collect())
     assert jobs <= GRAPH_ROW_JOBS[query], f"{query}: {jobs} jobs"
 
 
@@ -202,7 +212,7 @@ def _persistent_rdd_ids(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
 
-@pytest.mark.parametrize("cutoff", [None, 0], ids=["local", "distributed"])
+@pytest.mark.parametrize("cutoff", [ops.LOCAL_EDGE_CUTOFF, 0], ids=["local", "distributed"])
 def test_pagerank_raising_mid_run_leaves_no_cache(spark, monkeypatch, cutoff):
     """The first rank cut raises after the edge cache (and, on the
     distributed path, the node and contribution caches) are filled:
@@ -214,6 +224,7 @@ def test_pagerank_raising_mid_run_leaves_no_cache(spark, monkeypatch, cutoff):
 
     before = _persistent_rdd_ids(spark)
     monkeypatch.setattr(materialize, "checkpoint_sublinear", boom)
+    monkeypatch.setattr(ops, "LOCAL_EDGE_CUTOFF", cutoff)
     with pytest.raises(RuntimeError, match="cut failed"):
-        ops.pagerank(edges, local_edge_cutoff=cutoff)
+        ops.pagerank(edges)
     assert _persistent_rdd_ids(spark) <= before

@@ -14,8 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from blow_spark import multimodal
+from blow_spark.session import count_jobs
 from blow_spark.sources import read_table
-from tests.test_schema_reuse import _jobs
 
 
 def test_byte_features_match_numpy(spark, sf_dir):
@@ -298,8 +298,8 @@ def test_media_fixture_cache_lifecycle(spark, sf_dir, tmp_path, media_tmp):
     src.mkdir()
     docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
     pq.write_table(docs, src / "documents.parquet")
-    first, first_jobs = _jobs(spark, lambda: multimodal.png_corpus_fixture_dir(spark, str(src), n_docs=3))
-    again, again_jobs = _jobs(spark, lambda: multimodal.png_corpus_fixture_dir(spark, str(src), n_docs=3))
+    first, first_jobs = count_jobs(spark, lambda: multimodal.png_corpus_fixture_dir(spark, str(src), n_docs=3))
+    again, again_jobs = count_jobs(spark, lambda: multimodal.png_corpus_fixture_dir(spark, str(src), n_docs=3))
     assert first_jobs >= 1
     assert (again, again_jobs) == (first, 0)
     pq.write_table(docs.slice(0, docs.num_rows - 1), src / "documents.parquet")

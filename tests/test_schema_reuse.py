@@ -23,20 +23,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from blow_spark import sources
-
-
-def _jobs(spark, fn):
-    """Run ``fn`` under a fresh job group; return its result and the
-    number of Spark jobs it started."""
-    sc = spark.sparkContext
-    group = f"schema-reuse-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from blow_spark.session import count_jobs
 
 
 @pytest.fixture
@@ -46,8 +33,8 @@ def own_cache(monkeypatch):
 
 
 def test_second_read_table_starts_no_job(spark, sf_dir, own_cache):
-    first, first_jobs = _jobs(spark, lambda: sources.read_table(spark, sf_dir, "orders"))
-    second, second_jobs = _jobs(spark, lambda: sources.read_table(spark, sf_dir, "orders"))
+    first, first_jobs = count_jobs(spark, lambda: sources.read_table(spark, sf_dir, "orders"))
+    second, second_jobs = count_jobs(spark, lambda: sources.read_table(spark, sf_dir, "orders"))
     assert first_jobs >= 1  # the inference job the cache saves
     assert second_jobs == 0
     assert second.schema == first.schema
@@ -128,7 +115,7 @@ def test_spill_read_back_schema_equals_inferred(spark):
 def test_spill_starts_only_the_write_job(spark):
     from blow_spark.materialize import spill_to_parquet
 
-    _, jobs = _jobs(spark, lambda: spill_to_parquet(spark.range(0, 100), "blow_spark_schema_reuse_"))
+    _, jobs = count_jobs(spark, lambda: spill_to_parquet(spark.range(0, 100), "blow_spark_schema_reuse_"))
     assert jobs == 1
 
 
