@@ -14,13 +14,24 @@ Four families, each designed around its 100 TB shuffle profile:
   validated against in tests/test_dedup.py.
 * **clustering** — connected components over near-dup pairs (iterative
   min-label propagation), turning pairwise hits into keep/drop groups.
+* **exact substring / span excision** — character windows (exact, hash
+  then verify) or token n-grams (positional blocking) seen ``min_count``
+  times across the corpus are cut out of every document.
 
 The reference implements no dedup (SURVEY.md §2.2 "Extension ops"); these
-are first-class operators mandated by the task brief. All candidate
-generation is built-in DataFrame ops — no Python in the hot path.
+are first-class operators of this engine. Above a size
+cutoff all candidate generation is built-in DataFrame ops, with no
+Python per row. Two operators also have a one-task path for inputs at or
+below their cutoff, where the whole input fits one Python worker and the
+distributed plan's per-job scheduling floor costs more than the work:
+connected_components (union-find, ``ops.LOCAL_EDGE_CUTOFF`` edges) and
+exact_substring_excise (numpy window hashing, ``LOCAL_CHAR_CUTOFF``
+characters).
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
@@ -262,75 +273,72 @@ def minhash_lsh_pairs(
     base = _spread(df).select(F.col(id_col).alias("doc"), shingles.alias("shingles")).filter(
         F.size("shingles") > 0
     )
-    # Persist `base` (feeds the signature pipeline AND the verify-set
+    # Cache `base` (feeds the signature pipeline AND the verify-set
     # build — shingling would otherwise recompute per consumer) and `sig`
     # (one k-long row per doc, ~0.5 KB/doc: three consumers — the bucket
     # census and both self-join sides — would otherwise each re-run the
     # 64-min-agg signature pass, the most expensive stage in the plan;
     # caching it measured 47 s → 11 s at sf0.1). Both caches are
-    # OPERATOR-SCOPED: the candidate set and the candidate shingle-hash
-    # sets are spilled to temp parquet below and the caches freed before
-    # return, so nothing leaks into the caller's long-lived session
-    # (round-2 verdict "What's wrong" #2; pinned by
-    # tests/test_dedup.py::test_minhash_lsh_leaves_no_persisted_rdds).
+    # OPERATOR-SCOPED (materialize.reused): the candidate set and the
+    # candidate shingle-hash sets are spilled to temp parquet below and
+    # the caches freed when the block exits, also on an exception, so
+    # nothing leaks into the caller's long-lived session (pinned by
+    # tests/test_dedup.py::test_minhash_lsh_leaves_no_persisted_rdds and
+    # ::test_minhash_lsh_raising_leaves_no_persisted_rdds).
     # The EXPLODED banded form is deliberately not persisted — b rows/doc
     # costs more to materialize than the projection recompute. At cluster
     # scale the spills ARE the design: signatures/candidates land in
     # bucketed tables on shared storage, not executor memory.
-    base = base.persist()
-    sig = _signature_agg(base, num_hashes).persist()
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(F.concat_ws(",", *[F.col(f"mh_{b * rows_per_band + r}").cast("string") for r in range(rows_per_band)])).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sig.select("doc", F.explode(band_arr).alias("bb")).select(
-        "doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    oversized = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > max_bucket_docs)
-        .select("band", "bucket")
-    )
-    banded = banded.join(F.broadcast(oversized), ["band", "bucket"], "left_anti")
-    left = banded.alias("l")
-    right = banded.alias("r")
-    candidates = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc") < F.col("r.doc")),
+    from blow_spark.materialize import reused
+
+    with reused(base) as base, reused(_signature_agg(base, num_hashes)) as sig:
+        band_arr = F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.xxhash64(F.concat_ws(",", *[F.col(f"mh_{b * rows_per_band + r}").cast("string") for r in range(rows_per_band)])).alias("bucket"),
+                )
+                for b in range(bands)
+            ]
         )
-        .select(F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b"))
-        .distinct()
-    )
-    return _verify_and_release(candidates, base, threshold, release=[sig])
+        banded = sig.select("doc", F.explode(band_arr).alias("bb")).select(
+            "doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+        )
+        oversized = (
+            banded.groupBy("band", "bucket")
+            .agg(F.count("*").alias("n"))
+            .filter(F.col("n") > max_bucket_docs)
+            .select("band", "bucket")
+        )
+        banded = banded.join(F.broadcast(oversized), ["band", "bucket"], "left_anti")
+        left = banded.alias("l")
+        right = banded.alias("r")
+        candidates = (
+            left.join(
+                right,
+                (F.col("l.band") == F.col("r.band"))
+                & (F.col("l.bucket") == F.col("r.bucket"))
+                & (F.col("l.doc") < F.col("r.doc")),
+            )
+            .select(F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b"))
+            .distinct()
+        )
+        return _verify_spilled(candidates, base, threshold)
 
 
-def _verify_and_release(
-    candidates: DataFrame,
-    base: DataFrame,
-    threshold: float,
-    release: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Materialize candidates and their shingle-hash sets to temp parquet,
-    free every operator-scoped cache (``base`` + ``release``), and return
-    the lazy exact-Jaccard verify over the spilled tables.
+def _verify_spilled(candidates: DataFrame, base: DataFrame, threshold: float) -> DataFrame:
+    """Materialize candidates and their shingle-hash sets to temp parquet
+    and return the lazy exact-Jaccard verify over the spilled tables.
 
     Sequencing is the lifecycle fix: (1) spilling candidates runs the
-    expensive signature/bucket stages once while ``sig`` is cached;
-    (2) the shingle-hash sets are built from ``base`` restricted by
-    semi-join to candidate docs only — the spill is O(candidates), not
-    O(corpus); (3) everything unpersists BEFORE return, so the returned
-    plan is two small parquet scans + one join and the caller's session
-    holds no hidden cache. At 100 TB the two spills are the bucketed
-    intermediate tables the cluster design calls for."""
+    expensive signature/bucket stages once while the caller's caches
+    are live; (2) the shingle-hash sets are built from ``base``
+    restricted by semi-join to candidate docs only — the spill is
+    O(candidates), not O(corpus); (3) the returned plan reads only the
+    two spills, so the caller's ``reused`` block can free its caches as
+    this returns: two small parquet scans + one join, and the caller's
+    session holds no hidden cache. At 100 TB the two spills are the
+    bucketed intermediate tables the cluster design calls for."""
     from blow_spark.materialize import spill_to_parquet
 
     cand = spill_to_parquet(candidates, "blow_spark_lsh_cand_")
@@ -347,9 +355,6 @@ def _verify_and_release(
         .agg(F.collect_list("h").alias("hs"), F.count("*").alias("n_sh"))
     )
     hashed = spill_to_parquet(hashed, "blow_spark_lsh_sets_")
-    base.unpersist()
-    for df in release or []:
-        df.unpersist()
     # Round-14 (guide §2.5 "input skew: one huge unsplittable file"): the
     # spilled candidate table is a few MB of (id_a, id_b) longs — one
     # parquet split — and Catalyst broadcasts it while STREAMING the
@@ -384,7 +389,7 @@ def _verify_jaccard(candidates: DataFrame, hashed: DataFrame, threshold: float) 
     computes the string form and hash-matches).
 
     Callers that verify from a SPILLED candidate table ``_spread`` it
-    first (see ``_verify_and_release``); this function leaves lazy
+    first (see ``_verify_spilled``); this function leaves lazy
     candidate plans alone — inserting a repartition barrier into the
     incremental path's live banded-join plan measured 4.6 → 8.4 s."""
     a = hashed.select(F.col("doc").alias("id_a"), F.col("hs").alias("hs_a"), F.col("n_sh").alias("n_a"))
@@ -430,35 +435,35 @@ def ngram_containment_pairs(
     shingles = word_shingles(F.col(text_col), shingle_n)
     base = _spread(df).select(F.col(id_col).alias("doc"), shingles.alias("shingles")).filter(
         F.size("shingles") > 0
-    ).persist()
-    exploded = base.select("doc", F.explode("shingles").alias("g"))
-    rare = exploded.groupBy("g").agg(F.count("*").alias("df_")).filter(
-        F.col("df_") <= max_shingle_freq
     )
-    blocked = exploded.join(rare.select("g"), "g")
-    l, r = blocked.alias("l"), blocked.alias("r")
-    candidates = (
-        l.join(r, (F.col("l.g") == F.col("r.g")) & (F.col("l.doc") < F.col("r.doc")))
-        .select(F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b"))
-        .distinct()
-    )
-    from blow_spark.materialize import spill_to_parquet
+    from blow_spark.materialize import reused, spill_to_parquet
 
-    cand = spill_to_parquet(candidates, "blow_spark_cont_cand_")
-    ids = (
-        cand.select(F.col("id_a").alias("doc"))
-        .union(cand.select(F.col("id_b").alias("doc")))
-        .distinct()
-    )
-    hashed = (
-        base.select("doc", F.explode("shingles").alias("g"))
-        .select("doc", F.xxhash64("g").alias("h"))
-        .join(ids, "doc", "left_semi")
-        .groupBy("doc")
-        .agg(F.collect_list("h").alias("hs"), F.count("*").alias("n_sh"))
-    )
-    hashed = spill_to_parquet(hashed, "blow_spark_cont_sets_")
-    base.unpersist()
+    with reused(base) as base:
+        exploded = base.select("doc", F.explode("shingles").alias("g"))
+        rare = exploded.groupBy("g").agg(F.count("*").alias("df_")).filter(
+            F.col("df_") <= max_shingle_freq
+        )
+        blocked = exploded.join(rare.select("g"), "g")
+        l, r = blocked.alias("l"), blocked.alias("r")
+        candidates = (
+            l.join(r, (F.col("l.g") == F.col("r.g")) & (F.col("l.doc") < F.col("r.doc")))
+            .select(F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b"))
+            .distinct()
+        )
+        cand = spill_to_parquet(candidates, "blow_spark_cont_cand_")
+        ids = (
+            cand.select(F.col("id_a").alias("doc"))
+            .union(cand.select(F.col("id_b").alias("doc")))
+            .distinct()
+        )
+        hashed = (
+            base.select("doc", F.explode("shingles").alias("g"))
+            .select("doc", F.xxhash64("g").alias("h"))
+            .join(ids, "doc", "left_semi")
+            .groupBy("doc")
+            .agg(F.collect_list("h").alias("hs"), F.count("*").alias("n_sh"))
+        )
+        hashed = spill_to_parquet(hashed, "blow_spark_cont_sets_")
     # same single-split fix as _verify_jaccard: fan the per-pair set
     # intersections out before the verify joins (volume-sized, round 15)
     cand = _spread(cand, per_part_rows=_SPREAD_PAIRS_PER_PART)
@@ -704,19 +709,22 @@ def ngram_jaccard_pairs(
     shingles = word_shingles(F.col(text_col), shingle_n)
     base = _spread(df).select(F.col(id_col).alias("doc"), shingles.alias("shingles")).filter(
         F.size("shingles") > 0
-    ).persist()
-    exploded = base.select("doc", F.explode("shingles").alias("g"))
-    rare = exploded.groupBy("g").agg(F.count("*").alias("df_")).filter(
-        F.col("df_") <= max_shingle_freq
     )
-    blocked = exploded.join(rare.select("g"), "g")
-    l, r = blocked.alias("l"), blocked.alias("r")
-    candidates = (
-        l.join(r, (F.col("l.g") == F.col("r.g")) & (F.col("l.doc") < F.col("r.doc")))
-        .select(F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b"))
-        .distinct()
-    )
-    return _verify_and_release(candidates, base, threshold)
+    from blow_spark.materialize import reused
+
+    with reused(base) as base:
+        exploded = base.select("doc", F.explode("shingles").alias("g"))
+        rare = exploded.groupBy("g").agg(F.count("*").alias("df_")).filter(
+            F.col("df_") <= max_shingle_freq
+        )
+        blocked = exploded.join(rare.select("g"), "g")
+        l, r = blocked.alias("l"), blocked.alias("r")
+        candidates = (
+            l.join(r, (F.col("l.g") == F.col("r.g")) & (F.col("l.doc") < F.col("r.doc")))
+            .select(F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b"))
+            .distinct()
+        )
+        return _verify_spilled(candidates, base, threshold)
 
 
 def jaccard_prefix_filter_pairs(
@@ -753,46 +761,49 @@ def jaccard_prefix_filter_pairs(
     shingles = word_shingles(F.col(text_col), shingle_n)
     base = _spread(df).select(F.col(id_col).alias("doc"), shingles.alias("shingles")).filter(
         F.size("shingles") > 0
-    ).persist()
-    exploded = base.select(
-        "doc", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("g")
     )
-    freq = exploded.groupBy("g").agg(F.count("*").alias("df_"))
-    win = W.partitionBy("doc").orderBy("df_", "g")
-    # Exact rational ceil(t*s), never IEEE: float ceil(0.55*100) gives 56
-    # (0.55*100 = 55.000000000000007) — one shingle too short a prefix,
-    # silently dropping qualifying pairs and breaking the lossless
-    # guarantee (round-3 advice). Scale the threshold to integer
-    # micro-units and ceil in pure bigint arithmetic. The scaling is
-    # FLOOR-biased, not rounded: t_micro ≤ t ⇒ ceil(t_micro·s/10⁶) ≤
-    # ceil(t·s) ⇒ the prefix is never shorter than the AllPairs bound
-    # (rounding UP would re-introduce the bug for thresholds like 2/3,
-    # where round(t·10⁶)=666667 exceeds the double and can shave one
-    # prefix shingle at s≡0 (mod 3)). The only cost of the floor bias
-    # is an occasional one-longer prefix — more candidates, never lost
-    # pairs.
-    # Fraction(float) is the double's EXACT binary value, so this floor
-    # is guaranteed — `math.floor(float(t) * 1e6)` computes an IEEE
-    # product first, which can round UP across an integer boundary when
-    # t sits within half an ulp below k/1e6, reintroducing the shaved
-    # prefix in principle (round-4 advice).
-    import math
-    from fractions import Fraction
+    from blow_spark.materialize import reused
 
-    t_micro = math.floor(Fraction(float(threshold)) * 1_000_000)
-    ceil_ts = F.expr(f"(CAST({t_micro} AS BIGINT) * n_sh + 999999) div 1000000")
-    ranked = exploded.join(freq, "g").select(
-        "doc", "g", F.row_number().over(win).alias("rn"),
-        (F.col("n_sh") - ceil_ts + 1).alias("plen"),
-    )
-    prefix = ranked.filter(F.col("rn") <= F.col("plen")).select("doc", "g")
-    l, r = prefix.alias("l"), prefix.alias("r")
-    candidates = (
-        l.join(r, (F.col("l.g") == F.col("r.g")) & (F.col("l.doc") < F.col("r.doc")))
-        .select(F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b"))
-        .distinct()
-    )
-    return _verify_and_release(candidates, base, threshold)
+    with reused(base) as base:
+        exploded = base.select(
+            "doc", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("g")
+        )
+        freq = exploded.groupBy("g").agg(F.count("*").alias("df_"))
+        win = W.partitionBy("doc").orderBy("df_", "g")
+        # Exact rational ceil(t*s), never IEEE: float ceil(0.55*100) gives 56
+        # (0.55*100 = 55.000000000000007) — one shingle too short a prefix,
+        # silently dropping qualifying pairs and breaking the lossless
+        # guarantee. Scale the threshold to integer
+        # micro-units and ceil in pure bigint arithmetic. The scaling is
+        # FLOOR-biased, not rounded: t_micro ≤ t ⇒ ceil(t_micro·s/10⁶) ≤
+        # ceil(t·s) ⇒ the prefix is never shorter than the AllPairs bound
+        # (rounding UP would re-introduce the bug for thresholds like 2/3,
+        # where round(t·10⁶)=666667 exceeds the double and can shave one
+        # prefix shingle at s≡0 (mod 3)). The only cost of the floor bias
+        # is an occasional one-longer prefix — more candidates, never lost
+        # pairs.
+        # Fraction(float) is the double's EXACT binary value, so this floor
+        # is guaranteed — `math.floor(float(t) * 1e6)` computes an IEEE
+        # product first, which can round UP across an integer boundary when
+        # t sits within half an ulp below k/1e6, reintroducing the shaved
+        # prefix in principle.
+        import math
+        from fractions import Fraction
+
+        t_micro = math.floor(Fraction(float(threshold)) * 1_000_000)
+        ceil_ts = F.expr(f"(CAST({t_micro} AS BIGINT) * n_sh + 999999) div 1000000")
+        ranked = exploded.join(freq, "g").select(
+            "doc", "g", F.row_number().over(win).alias("rn"),
+            (F.col("n_sh") - ceil_ts + 1).alias("plen"),
+        )
+        prefix = ranked.filter(F.col("rn") <= F.col("plen")).select("doc", "g")
+        l, r = prefix.alias("l"), prefix.alias("r")
+        candidates = (
+            l.join(r, (F.col("l.g") == F.col("r.g")) & (F.col("l.doc") < F.col("r.doc")))
+            .select(F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b"))
+            .distinct()
+        )
+        return _verify_spilled(candidates, base, threshold)
 
 
 def ppjoin_pairs(
@@ -837,65 +848,65 @@ def ppjoin_pairs(
     import math
     from fractions import Fraction
 
-    from blow_spark.materialize import spill_to_parquet
+    from blow_spark.materialize import reused, spill_to_parquet
 
     shingles = word_shingles(F.col(text_col), shingle_n)
     base = (
         _spread(df)
         .select(F.col(id_col).alias("doc"), shingles.alias("shingles"))
         .filter(F.size("shingles") > 0)
-        .persist()
     )
-    exploded = base.select(
-        "doc", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("g")
-    )
-    freq = exploded.groupBy("g").agg(F.count("*").alias("df_"))
-    win = W.partitionBy("doc").orderBy("df_", "g")
-    t_micro = math.floor(Fraction(float(threshold)) * 1_000_000)
-    ceil_ts = F.expr(f"(CAST({t_micro} AS BIGINT) * n_sh + 999999) div 1000000")
-    ranked = exploded.join(freq, "g").select(
-        "doc",
-        "g",
-        "n_sh",
-        F.row_number().over(win).alias("rn"),
-        (F.col("n_sh") - ceil_ts + 1).alias("plen"),
-    )
-    prefix = ranked.filter(F.col("rn") <= F.col("plen")).select(
-        "doc", "g", "rn", "n_sh"
-    )
-    l, r = prefix.alias("l"), prefix.alias("r")
-    # one prefix self-join feeds the AllPairs count, the PPJoin filters,
-    # and the audit comparison — spill once
-    joined = spill_to_parquet(
-        l.join(r, (F.col("l.g") == F.col("r.g")) & (F.col("l.doc") < F.col("r.doc")))
-        .select(
-            F.col("l.doc").alias("id_a"),
-            F.col("r.doc").alias("id_b"),
-            F.col("l.rn").alias("lrn"),
-            F.col("r.rn").alias("rrn"),
-            F.col("l.n_sh").alias("na"),
-            F.col("r.n_sh").alias("nb"),
-        ),
-        "blow_spark_ppjoin_",
-    )
-    allpairs_cand = joined.select("id_a", "id_b").distinct()
-    first = joined.groupBy("id_a", "id_b", "na", "nb").agg(
-        F.min("lrn").alias("fr_a"), F.min("rrn").alias("fr_b")
-    )
-    alpha = F.expr(
-        f"(CAST({t_micro} AS BIGINT) * (na + nb) + {1_000_000 + t_micro - 1})"
-        f" div {1_000_000 + t_micro}"
-    )
-    length_ok = F.expr(
-        f"1000000 * least(na, nb) >= CAST({t_micro} AS BIGINT) * greatest(na, nb)"
-    )
-    pos_ok = (
-        1 + F.least(F.col("na") - F.col("fr_a"), F.col("nb") - F.col("fr_b"))
-    ) >= alpha
-    pp_cand = first.filter(length_ok & pos_ok).select("id_a", "id_b")
-    n_all = allpairs_cand.agg(F.count("*").cast("bigint").alias("n_cand_allpairs"))
-    n_pp = pp_cand.agg(F.count("*").cast("bigint").alias("n_cand_ppjoin"))
-    verified = _verify_and_release(pp_cand, base, threshold)
+    with reused(base) as base:
+        exploded = base.select(
+            "doc", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("g")
+        )
+        freq = exploded.groupBy("g").agg(F.count("*").alias("df_"))
+        win = W.partitionBy("doc").orderBy("df_", "g")
+        t_micro = math.floor(Fraction(float(threshold)) * 1_000_000)
+        ceil_ts = F.expr(f"(CAST({t_micro} AS BIGINT) * n_sh + 999999) div 1000000")
+        ranked = exploded.join(freq, "g").select(
+            "doc",
+            "g",
+            "n_sh",
+            F.row_number().over(win).alias("rn"),
+            (F.col("n_sh") - ceil_ts + 1).alias("plen"),
+        )
+        prefix = ranked.filter(F.col("rn") <= F.col("plen")).select(
+            "doc", "g", "rn", "n_sh"
+        )
+        l, r = prefix.alias("l"), prefix.alias("r")
+        # one prefix self-join feeds the AllPairs count, the PPJoin filters,
+        # and the audit comparison — spill once
+        joined = spill_to_parquet(
+            l.join(r, (F.col("l.g") == F.col("r.g")) & (F.col("l.doc") < F.col("r.doc")))
+            .select(
+                F.col("l.doc").alias("id_a"),
+                F.col("r.doc").alias("id_b"),
+                F.col("l.rn").alias("lrn"),
+                F.col("r.rn").alias("rrn"),
+                F.col("l.n_sh").alias("na"),
+                F.col("r.n_sh").alias("nb"),
+            ),
+            "blow_spark_ppjoin_",
+        )
+        allpairs_cand = joined.select("id_a", "id_b").distinct()
+        first = joined.groupBy("id_a", "id_b", "na", "nb").agg(
+            F.min("lrn").alias("fr_a"), F.min("rrn").alias("fr_b")
+        )
+        alpha = F.expr(
+            f"(CAST({t_micro} AS BIGINT) * (na + nb) + {1_000_000 + t_micro - 1})"
+            f" div {1_000_000 + t_micro}"
+        )
+        length_ok = F.expr(
+            f"1000000 * least(na, nb) >= CAST({t_micro} AS BIGINT) * greatest(na, nb)"
+        )
+        pos_ok = (
+            1 + F.least(F.col("na") - F.col("fr_a"), F.col("nb") - F.col("fr_b"))
+        ) >= alpha
+        pp_cand = first.filter(length_ok & pos_ok).select("id_a", "id_b")
+        n_all = allpairs_cand.agg(F.count("*").cast("bigint").alias("n_cand_allpairs"))
+        n_pp = pp_cand.agg(F.count("*").cast("bigint").alias("n_cand_ppjoin"))
+        verified = _verify_spilled(pp_cand, base, threshold)
     return (
         verified.crossJoin(F.broadcast(n_all))
         .crossJoin(F.broadcast(n_pp))
@@ -1159,62 +1170,242 @@ def duplicate_span_excise(
     groups the literal strings, so the gate also checks that identity.
 
     Returns (id_col, clean_text, n_tokens_kept, n_tokens_removed)."""
+    from blow_spark.materialize import reused, spill_to_parquet
+
     toks = tokenize_ws(F.lower(F.col(text_col)))
-    base = _spread(df).select(
-        F.col(id_col).alias("doc"), toks.alias("t")
-    ).persist()
+    base = _spread(df).select(F.col(id_col).alias("doc"), toks.alias("t"))
+    with reused(base) as base:
+        grams = base.filter(F.size("t") >= n).select(
+            "doc",
+            F.explode(
+                F.expr(
+                    f"transform(sequence(1, size(t) - {n} + 1), "
+                    f"i -> struct(i AS pos, xxhash64(concat_ws(' ', slice(t, i, {n}))) AS h))"
+                )
+            ).alias("g"),
+        ).select("doc", "g.pos", "g.h")
 
-    grams = base.filter(F.size("t") >= n).select(
-        "doc",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(t) - {n} + 1), "
-                f"i -> struct(i AS pos, xxhash64(concat_ws(' ', slice(t, i, {n}))) AS h))"
-            )
-        ).alias("g"),
-    ).select("doc", "g.pos", "g.h")
-
-    dup = grams.groupBy("h").agg(F.count("*").alias("cnt")).filter(
-        F.col("cnt") >= min_count
-    )
-    covered = (
-        grams.join(dup.select("h"), "h")
-        .select("doc", F.explode(F.sequence("pos", F.col("pos") + (n - 1))).alias("p"))
-        .distinct()
-    )
-    tokens = base.select(
-        "doc", F.posexplode("t").alias("p0", "tok")
-    ).select("doc", (F.col("p0") + 1).alias("p"), "tok")
-    kept = tokens.join(covered, ["doc", "p"], "left_anti")
-    rebuilt = kept.groupBy("doc").agg(
-        F.concat_ws(
-            " ",
-            F.expr("transform(array_sort(collect_list(struct(p, tok))), x -> x.tok)"),
-        ).alias("clean_text"),
-        F.count("*").alias("n_tokens_kept"),
-    )
-    out = (
-        base.select("doc", F.size("t").alias("n_total"))
-        .join(rebuilt, "doc", "left")
-        .select(
-            F.col("doc").alias(id_col),
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            F.coalesce("n_tokens_kept", F.lit(0)).cast("bigint").alias("n_tokens_kept"),
-            (F.col("n_total") - F.coalesce("n_tokens_kept", F.lit(0)))
-            .cast("bigint")
-            .alias("n_tokens_removed"),
+        dup = grams.groupBy("h").agg(F.count("*").alias("cnt")).filter(
+            F.col("cnt") >= min_count
         )
-    )
-    from blow_spark.materialize import spill_to_parquet
-
-    spilled = spill_to_parquet(out, "blow_spark_span_")
-    base.unpersist()
-    return spilled
+        covered = (
+            grams.join(dup.select("h"), "h")
+            .select("doc", F.explode(F.sequence("pos", F.col("pos") + (n - 1))).alias("p"))
+            .distinct()
+        )
+        tokens = base.select(
+            "doc", F.posexplode("t").alias("p0", "tok")
+        ).select("doc", (F.col("p0") + 1).alias("p"), "tok")
+        kept = tokens.join(covered, ["doc", "p"], "left_anti")
+        rebuilt = kept.groupBy("doc").agg(
+            F.concat_ws(
+                " ",
+                F.expr("transform(array_sort(collect_list(struct(p, tok))), x -> x.tok)"),
+            ).alias("clean_text"),
+            F.count("*").alias("n_tokens_kept"),
+        )
+        out = (
+            base.select("doc", F.size("t").alias("n_total"))
+            .join(rebuilt, "doc", "left")
+            .select(
+                F.col("doc").alias(id_col),
+                F.coalesce("clean_text", F.lit("")).alias("clean_text"),
+                F.coalesce("n_tokens_kept", F.lit(0)).cast("bigint").alias("n_tokens_kept"),
+                (F.col("n_total") - F.coalesce("n_tokens_kept", F.lit(0)))
+                .cast("bigint")
+                .alias("n_tokens_removed"),
+            )
+        )
+        return spill_to_parquet(out, "blow_spark_span_")
 
 
 # --------------------------------------------------------------------------
 # EXACT duplicate-substring excision (character-level, hash + verify)
 # --------------------------------------------------------------------------
+
+#: Corpus size in characters (Spark's code-point ``length``) at or
+#: below which exact_substring_excise computes the whole excision in ONE
+#: task (``_excise_task``) instead of the distributed hash+verify plan.
+#: Below it the distributed plan's 11 jobs are mostly scheduling floor:
+#: the 149 k-character sf0.01 corpus took 1.4 s there and 0.5 s in one
+#: task. Measured by scripts/scale_families.py (4 vCPUs, local[4],
+#: SCALE.md) on the sf0.1 documents and 5 and 10 verbatim replicas of
+#: them (every window duplicated, the verify step's worst case), one
+#: task vs forced distributed plan, and the one task's peak
+#: Python-worker RSS: 1.49 M chars 0.7 vs 3.9 s, 187 MB; 7.4 M chars
+#: 3.3 vs 19.7 s, 434 MB; 14.9 M chars 6.9 vs 39.3 s, 682 MB. The one
+#: task wins on wall time at every size measured; memory sets the
+#: cutoff: 8 M keeps the worst case near 0.45 GB, under the 0.64 GB of
+#: the largest graph one-task path (``ops.LOCAL_EDGE_CUTOFF``). Read at
+#: call time, so patching it moves the path (0 forces the distributed
+#: plan on any non-empty corpus, -1 on an empty one too).
+LOCAL_CHAR_CUTOFF = 8_000_000
+
+
+def _fits_one_task(df: DataFrame, text_col: str) -> bool:
+    """Whether ``df`` holds at most ``LOCAL_CHAR_CUTOFF`` characters in at
+    most ``LOCAL_CHAR_CUTOFF // 64`` documents. One job of one task:
+    ``coalesce(1)`` is narrow, so no exchange is planned, and the limit
+    stops the scan one document past that count, so a large corpus is
+    never read in full. The document bound caps both this probe and the
+    one task's per-document overhead; a corpus of more, shorter
+    documents takes the distributed plan."""
+    cutoff = LOCAL_CHAR_CUTOFF
+    max_docs = cutoff // 64
+    n_docs, n_chars = (
+        df.coalesce(1)
+        .select(F.length(text_col).alias("n"))
+        .limit(max_docs + 1)
+        .agg(F.count("*"), F.sum("n"))
+        .first()
+    )
+    return n_docs <= max_docs and (n_chars or 0) <= cutoff
+
+
+#: Multiplier of the window hash: odd, hence invertible mod 2^64.
+_HASH_BASE = 0x9E3779B97F4A7C15
+
+
+def _powers(base: int, n: int):
+    """``base**i mod 2**64`` for i in [0, n) (uint64 products wrap)."""
+    import numpy as np
+
+    p = np.full(n, base, np.uint64)
+    if n:
+        p[0] = 1
+    return np.cumprod(p, out=p)
+
+
+def _window_hashes(buf, min_len: int, chunk: int = 1 << 20):
+    """Polynomial hash mod 2^64 of the length-``min_len`` window at every
+    start of the code-point array ``buf``: sum(buf[s+k] * B^-k). Over a
+    chunk starting at c, prefix sums S[i] = sum(buf[j] * B^-(j-c), j < i)
+    give the window at s as (S[s+L] - S[s]) * B^(s-c), the same value
+    in whichever chunk it lies, so the temporaries stay chunk-sized."""
+    import numpy as np
+
+    n_wins = max(len(buf) - min_len + 1, 0)
+    out = np.empty(n_wins, np.uint64)
+    inv = _powers(pow(_HASH_BASE, -1, 1 << 64), min(chunk, n_wins) + min_len - 1)
+    fwd = _powers(_HASH_BASE, min(chunk, n_wins))
+    for c in range(0, n_wins, chunk):
+        seg = buf[c : c + chunk + min_len - 1].astype(np.uint64)
+        prefix = np.zeros(len(seg) + 1, np.uint64)
+        np.cumsum(seg * inv[: len(seg)], out=prefix[1:])
+        out[c : c + chunk] = (prefix[min_len:] - prefix[:-min_len]) * fwd[: len(seg) - min_len + 1]
+    return out
+
+
+def _verified_starts(buf, starts, hashes, min_len: int, min_count: int):
+    """The ``starts`` whose literal window ``buf[s:s+min_len]`` occurs at
+    least ``min_count`` times among ``starts``: the verify step. The
+    input is grouped by hash (sorted by ``hashes``). Equal windows hash
+    equal, so each literal string lies inside one hash group. A group
+    whose every window equals its first holds one string, and its size
+    is that string's count; the rare group that mixes strings (a hash
+    collision) is recounted by its literal code points."""
+    import collections
+
+    import numpy as np
+    from numpy.lib.stride_tricks import sliding_window_view
+
+    if not len(starts):
+        return starts
+    first = np.ones(len(starts), bool)
+    first[1:] = hashes[1:] != hashes[:-1]
+    heads = np.flatnonzero(first)
+    grp = np.cumsum(first, dtype=np.int32) - 1
+    wins = sliding_window_view(buf, min_len)
+    same = np.ones(len(starts), bool)
+    for i in range(0, len(starts), 1 << 16):  # (chunk × L) copies
+        j = slice(i, i + (1 << 16))
+        same[j] = (wins[starts[j]] == wins[starts[heads[grp[j]]]]).all(axis=1)
+    mixed = np.zeros(len(heads), bool)
+    mixed[grp[~same]] = True
+    keep = (~mixed & (np.diff(np.r_[heads, len(starts)]) >= min_count))[grp]
+    idx = np.flatnonzero(mixed[grp])
+    if idx.size:
+        keys = [buf[s : s + min_len].tobytes() for s in starts[idx]]
+        counts = collections.Counter(keys)
+        keep[idx] = [counts[k] >= min_count for k in keys]
+    return starts[keep]
+
+
+def _excise_task(pdf, min_len: int, min_count: int):
+    """exact_substring_excise's one task over the whole (doc, text)
+    frame → (doc, clean_text, n_chars_kept, n_chars_removed). The
+    distributed plan's steps over one code-point array of the corpus:
+    hash every window, keep the hashes seen ``min_count`` times, verify
+    those windows by their literal strings, merge the covered
+    [p, p+L-1] intervals and cut them out. Rows with a null text or a
+    null id pass through untouched and count toward no window, as in
+    the distributed plan, whose candidate join drops null ids."""
+    import numpy as np
+    import pandas as pd
+
+    L = min_len
+    texts = pdf["text"].tolist()
+    live = [t is not None and has_id for t, has_id in zip(texts, pdf["doc"].notna().tolist())]
+    docs = [t for t, ok in zip(texts, live) if ok]
+    lens = np.fromiter(map(len, docs), np.int64, len(docs))
+    # documents in one array, each followed by its own separator above
+    # every code point, so a window across a boundary is unique and
+    # equals no window of text
+    ends = np.cumsum(lens)
+    code = np.frombuffer("".join(docs).encode("utf-32-le"), np.uint32)
+    buf = np.insert(code, ends, 0x110000 + np.arange(len(docs), dtype=np.uint32))
+    del code
+    begins = ends - lens + np.arange(len(docs))
+
+    # candidates: windows whose hash occurs min_count times, grouped by hash
+    hashes = _window_hashes(buf, L)
+    order = np.argsort(hashes)
+    hashes = hashes[order]
+    heads = np.flatnonzero(np.r_[True, hashes[1:] != hashes[:-1]])
+    sizes = np.diff(np.r_[heads, len(hashes)])
+    cand = np.repeat(sizes >= min_count, sizes)
+    if not cand.all():  # no copy when every window is a candidate
+        order, hashes = order[cand], hashes[cand]
+    del heads, sizes, cand
+    dup = np.sort(_verified_starts(buf, order, hashes, L, min_count))
+    del order, hashes
+
+    # drop windows across a boundary, then merge the covered intervals;
+    # merged intervals never cross a separator
+    doc = np.searchsorted(begins, dup, side="right") - 1
+    dup = dup[dup + L <= begins[doc] + lens[doc]]
+    lo = hi = dup
+    if len(dup):
+        reach = np.maximum.accumulate(dup + L)
+        new = np.flatnonzero(np.r_[True, dup[1:] > reach[:-1]])
+        lo, hi = dup[new], reach[np.r_[new[1:] - 1, len(dup) - 1]]
+    doc = np.searchsorted(begins, lo, side="right") - 1
+    cuts: dict = {}
+    for d, a, b in zip(doc.tolist(), (lo - begins[doc]).tolist(), (hi - begins[doc]).tolist()):
+        cuts.setdefault(d, []).append((a, b))
+    for d, spans in cuts.items():
+        text, pieces, at = docs[d], [], 0
+        for a, b in spans:
+            pieces.append(text[at:a])
+            at = b
+        pieces.append(text[at:])
+        docs[d] = "".join(pieces)
+
+    clean, kept, cut = [], [], []
+    cleaned = iter(docs)
+    for text, ok in zip(texts, live):
+        out = next(cleaned) if ok else text
+        clean.append(out)
+        kept.append(None if out is None else len(out))
+        cut.append(None if out is None else len(text) - len(out))
+    return pd.DataFrame(
+        {
+            "doc": pdf["doc"],
+            "clean_text": pd.Series(clean, dtype=object),
+            "n_chars_kept": pd.array(kept, dtype="Int64"),
+            "n_chars_removed": pd.array(cut, dtype="Int64"),
+        }
+    )
 
 
 def exact_substring_excise(
@@ -1267,6 +1458,18 @@ def exact_substring_excise(
     anti-joins — the blocking-free ground truth; a value-hash match is
     the machine-checked proof that the hash+verify path is exact.
 
+    Two paths behind this one contract, picked by a bounded probe of the
+    corpus size (``_fits_one_task``: one job, at most
+    ``LOCAL_CHAR_CUTOFF // 64 + 1`` documents read). At or below
+    ``LOCAL_CHAR_CUTOFF`` characters the whole excision runs in ONE task
+    (``_excise_task`` via ``ops._in_one_task``): a numpy polynomial hash
+    of every window, the hashes seen ≥ min_count times as candidates,
+    then the same verify as step 4 — the candidates' literal windows are
+    compared, so a hash collision never cuts text — and the merge of the
+    covered intervals. Above the cutoff the distributed plan of steps
+    1-5 runs. Both give identical rows; tests/test_dedup.py runs every
+    case on both paths.
+
     Returns (id_col, clean_text, n_chars_kept, n_chars_removed),
     one row per input document (short docs pass through unchanged).
 
@@ -1277,6 +1480,22 @@ def exact_substring_excise(
     from blow_spark.materialize import spill_to_parquet
 
     L = int(min_len)
+    if _fits_one_task(df, text_col):
+        from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+        from blow_spark.ops import _in_one_task
+
+        schema = StructType(
+            [
+                StructField("doc", df.schema[id_col].dataType),
+                StructField("clean_text", StringType()),
+                StructField("n_chars_kept", LongType()),
+                StructField("n_chars_removed", LongType()),
+            ]
+        )
+        task = functools.partial(_excise_task, min_len=L, min_count=min_count)
+        corpus = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("text"))
+        return _in_one_task(corpus, task, schema).withColumnRenamed("doc", id_col)
     base = spill_to_parquet(
         _spread(df).select(
             F.col(id_col).alias("doc"),

@@ -39,7 +39,8 @@ Operator-scoped reuse is not a cut: a table an operator reads several
 times while it runs (the edge list of a graph loop, a candidate base)
 is cached with :func:`reused`, which persists on entry and always
 unpersists on exit, also when the operator raises, so no cache outlives
-the call that made it (pinned by tests/test_graph_paths.py).
+the call that made it (pinned by tests/test_graph_paths.py and
+tests/test_dedup.py). No other module calls ``.persist()``.
 
 What a lost block does: the two ``localCheckpoint`` classes keep their
 partitions in the block manager (MEMORY_AND_DISK) and drop the lineage

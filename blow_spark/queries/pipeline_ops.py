@@ -2000,6 +2000,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     15-candidate aggregate over the pair table; each peel round is one
     node-keyed shuffle (ops.kcore)."""
     from blow_spark import ops
+    from blow_spark.materialize import reused
 
     li = read_table(spark, sf_dir, "lineitem")
     op = li.select(
@@ -2011,25 +2012,24 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(op.alias("b"), (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
         .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
         .agg(F.count("*").cast("bigint").alias("c"))
-        .persist()
     )
-    cands = spark.range(1).select(
-        F.explode(F.sequence(F.lit(2), F.lit(16))).alias("cand")
-    )
-    cand = pc.crossJoin(F.broadcast(cands)).filter(F.col("c") >= F.col("cand"))
-    ne_by_cand = cand.groupBy("cand").agg(F.count("*").alias("ne"))
-    tsel = (
-        ne_by_cand.crossJoin(F.broadcast(np_))
-        .filter(F.col("ne") <= 4 * F.col("n"))
-        .agg(F.min("cand").cast("bigint").alias("t"))
-    )
-    e = pc.crossJoin(F.broadcast(tsel)).filter(F.col("c") >= F.col("t")).select(
-        "u", "v", "t"
-    )
-    core = ops.kcore(e.select("u", "v"), k=_KCORE_K, max_iter=_KCORE_UNROLL)
+    with reused(pc) as pc:
+        cands = spark.range(1).select(
+            F.explode(F.sequence(F.lit(2), F.lit(16))).alias("cand")
+        )
+        cand = pc.crossJoin(F.broadcast(cands)).filter(F.col("c") >= F.col("cand"))
+        ne_by_cand = cand.groupBy("cand").agg(F.count("*").alias("ne"))
+        tsel = (
+            ne_by_cand.crossJoin(F.broadcast(np_))
+            .filter(F.col("ne") <= 4 * F.col("n"))
+            .agg(F.min("cand").cast("bigint").alias("t"))
+        )
+        e = pc.crossJoin(F.broadcast(tsel)).filter(F.col("c") >= F.col("t")).select(
+            "u", "v", "t"
+        )
+        core = ops.kcore(e.select("u", "v"), k=_KCORE_K, max_iter=_KCORE_UNROLL)
     out = core.crossJoin(F.broadcast(tsel.select(F.col("t").alias("co_threshold"))))
     out.kcore_info = core.kcore_info
-    pc.unpersist()
     return out
 
 
@@ -2371,7 +2371,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-dependent; synchronous rounds are the price of determinism
     (documented trade-off, same stance as the unrolled BFS/Bellman-Ford
     family)."""
-    from blow_spark.materialize import checkpoint_sublinear
+    from blow_spark.materialize import checkpoint_sublinear, reused
 
     li = read_table(spark, sf_dir, "lineitem")
     sp = li.select(
@@ -2386,35 +2386,34 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = (
         e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .repartition(F.col("v"))
-        .persist()
     )
-    labels = adj.select(F.col("u").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
-    for _ in range(_LPA_ROUNDS):
-        nbr = adj.join(labels, adj.v == labels.node).select(
-            F.col("u").alias("node"), "label"
+    with reused(adj) as adj:
+        labels = adj.select(F.col("u").alias("node")).distinct().withColumn(
+            "label", F.col("node")
         )
-        cnt = nbr.groupBy("node", "label").agg(F.count("*").alias("c"))
-        # round-14 optimization (guide §2.4): the per-node argmax used
-        # to be a row_number window (an extra sort after the (node,
-        # label) count shuffle); max(struct(c, -label)) computes the
-        # identical COUNT-desc/label-asc winner inside an ordinary
-        # hash aggregate — same tie-break (max c, then max(-label) =
-        # min label), one sort less per round
-        labels = checkpoint_sublinear(
-            cnt.groupBy("node")
-            .agg(
-                F.max(
-                    F.struct(F.col("c"), (-F.col("label")).alias("nl"))
-                ).alias("m")
+        for _ in range(_LPA_ROUNDS):
+            nbr = adj.join(labels, adj.v == labels.node).select(
+                F.col("u").alias("node"), "label"
             )
-            .select("node", (-F.col("m.nl")).alias("label"))
-        )
+            cnt = nbr.groupBy("node", "label").agg(F.count("*").alias("c"))
+            # round-14 optimization: the per-node argmax used
+            # to be a row_number window (an extra sort after the (node,
+            # label) count shuffle); max(struct(c, -label)) computes the
+            # identical COUNT-desc/label-asc winner inside an ordinary
+            # hash aggregate — same tie-break (max c, then max(-label) =
+            # min label), one sort less per round
+            labels = checkpoint_sublinear(
+                cnt.groupBy("node")
+                .agg(
+                    F.max(
+                        F.struct(F.col("c"), (-F.col("label")).alias("nl"))
+                    ).alias("m")
+                )
+                .select("node", (-F.col("m.nl")).alias("label"))
+            )
     out = labels.groupBy(F.col("label").cast("bigint").alias("label")).agg(
         F.count("*").cast("bigint").alias("n_nodes")
     )
-    adj.unpersist()
     return out
 
 

@@ -1309,7 +1309,12 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join rebuild — so the value-hash match IS the exactness proof
     (the join_spatial_grid_epsilon gate design). Upgrades
     dedup_span_excise (positional token 12-grams, approximate vs
-    Lee et al.) to the real thing. See dedup.exact_substring_excise."""
+    Lee et al.) to the real thing. Two paths, one contract: a corpus of
+    at most dedup.LOCAL_CHAR_CUTOFF characters (every fixture scale)
+    is excised in ONE task — numpy window hashes, then the same
+    literal-string verify of the candidates as the distributed plan —
+    and a larger one by the distributed hash+verify plan; the rows are
+    identical. See dedup.exact_substring_excise."""
     d = read_table(spark, sf_dir, "documents")
     return dedup.exact_substring_excise(
         d, text_col="text", id_col="doc_id", min_len=40, min_count=2

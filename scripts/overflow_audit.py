@@ -284,7 +284,7 @@ def main() -> None:
     from blow_spark.oracle import canonical_rows
     from blow_spark.session import get_spark
 
-    spark = get_spark(app_name="overflow_audit", master="local[32]")
+    spark = get_spark(app_name="overflow_audit")
     cat, oracles = E.queries(), E.oracle_sql()
     candidates = fixed_point_candidates(cat, oracles)
     print(f"{len(candidates)} fixed-point candidates", file=sys.stderr)

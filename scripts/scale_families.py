@@ -1,22 +1,34 @@
 """Two-point linearity measurements for the streaming, relational-core,
 text/tokenizer and span-dedup families (round 4 — backs the SCALE.md
-round-4 table rows; the graph family lives in scale_graph.py).
+round-4 table rows; the graph family lives in scale_graph.py), and the
+exact-substring excision's two paths.
 
 Methodology: seeded replicas of the sf0.1 fixtures materialized to
 parquet first (timings exclude input derivation), operators warmed per
-session, min-of-2 on local[32]. Replicas keep text identical (Zipf
-note: vocab does not grow — real corpora sit between that and linear).
+session, min-of-2 on get_spark's default local[N] (N = host cores or
+$SPARK_GRAFT_CPUS). Replicas keep text identical (Zipf note: vocab does
+not grow — real corpora sit between that and linear).
 
-Run: python scripts/scale_families.py [--streams-only|--batch-only]
+Exact-substring rows: dedup.exact_substring_excise over the sf0.1
+documents and over 5 and 10 verbatim replicas of them (every window of
+a replica is duplicated: the worst case for the verify step), each
+through the one-task path and the forced distributed plan
+(dedup.LOCAL_CHAR_CUTOFF patched to 0), consumed by a noop sink. The
+one task's peak Python-worker RSS is VmHWM read in a second session
+without worker reuse, as scale_graph.py does.
+
+Run: python scripts/scale_families.py [--streams-only|--batch-only|--substring-only]
 """
 
 from __future__ import annotations
 
+import shutil
 import sys
 import tempfile
 import time
 import uuid
 from functools import reduce
+from unittest import mock
 
 from pyspark.sql import functions as F
 
@@ -41,11 +53,13 @@ def main() -> None:
     from blow_spark.sources import read_table
     from blow_spark.streaming import EVENTS_SCHEMA
 
-    spark = get_spark(app_name="scale_families", master="local[32]")
+    spark = get_spark(app_name="scale_families")
     sf = "/root/testdata/sf0.1"
     cat = queries()
-    batch = "--streams-only" not in sys.argv
-    streams = "--batch-only" not in sys.argv
+    only = {"--streams-only", "--batch-only", "--substring-only"} & set(sys.argv)
+    batch = not only or "--batch-only" in only
+    streams = not only or "--streams-only" in only
+    substring = not only or "--substring-only" in only
 
     def noop(df) -> None:
         df.write.mode("overwrite").format("noop").save()
@@ -142,6 +156,60 @@ def main() -> None:
         print("tumbling 100x(10M)", bench(lambda: tumble(p100)))
         print("sessionizer 1x(100k)", bench(lambda: sess(p1)))
         print("sessionizer 100x(10M)", bench(lambda: sess(p100)))
+
+    if substring:
+        exact_substring_rows(spark, sf)
+
+
+def exact_substring_rows(spark, sf: str) -> None:
+    """Local vs forced-distributed exact-substring excision at 1x, 5x and
+    10x the sf0.1 documents, then the one task's peak worker RSS. Stops
+    ``spark``: the RSS runs need a session without worker reuse."""
+    from scale_graph import worker_peak_mb
+
+    from blow_spark import dedup
+    from blow_spark.session import get_spark
+
+    docs = spark.read.parquet(sf + "/documents.parquet").select("doc_id", "text")
+    corpora = {}
+    for k in (1, 5, 10):
+        path = tempfile.mkdtemp(prefix=f"scale_xsub{k}_")
+        reduce(
+            lambda a, b: a.union(b),
+            [docs.withColumn("doc_id", F.col("doc_id") + F.lit(i * 1_000_000)) for i in range(k)],
+        ).write.mode("overwrite").parquet(path)
+        corpora[k] = path
+
+    def excise(path: str) -> None:
+        df = spark.read.parquet(path)
+        dedup.exact_substring_excise(df, "text", "doc_id").write.mode("overwrite").format(
+            "noop"
+        ).save()
+
+    print("exact_substring LOCAL_CHAR_CUTOFF", dedup.LOCAL_CHAR_CUTOFF)
+    for k, path in corpora.items():
+        n_chars = spark.read.parquet(path).agg(F.sum(F.length("text"))).first()[0]
+        with mock.patch.object(dedup, "LOCAL_CHAR_CUTOFF", 10**9):
+            local = bench(lambda path=path: excise(path))
+        with mock.patch.object(dedup, "LOCAL_CHAR_CUTOFF", 0):
+            dist = bench(lambda path=path: excise(path))
+        probe = bench(lambda path=path: dedup._fits_one_task(spark.read.parquet(path), "text"))
+        print(
+            f"exact_substring {k}x ({n_chars} chars) local {local} s, distributed {dist} s,"
+            f" size probe {probe} s"
+        )
+
+    spark.stop()
+    spark = get_spark(
+        app_name="scale_families_rss", extra_conf={"spark.python.worker.reuse": "false"}
+    )
+    with mock.patch.object(dedup, "LOCAL_CHAR_CUTOFF", 10**9):
+        for k, path in corpora.items():
+            mb = worker_peak_mb(lambda path=path: excise(path))
+            print(f"exact_substring {k}x local worker peak {mb} MB")
+    spark.stop()
+    for path in corpora.values():
+        shutil.rmtree(path, ignore_errors=True)
 
 
 if __name__ == "__main__":

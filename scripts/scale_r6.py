@@ -8,7 +8,7 @@ erasure cascade, and the bitmap exact-distinct aggregate.
 
 Methodology (same as scale_families.py): seeded 10x replicas of the
 sf0.1 fixtures materialized to parquet first (timings exclude input
-derivation), operators warmed per session, min-of-2 on local[32],
+derivation), operators warmed per session, min-of-2 on get_spark's default local[N],
 results consumed through a noop sink so column pruning cannot blind the
 timing (see the round-5 measurement-trap note in SCALE.md).
 
@@ -64,7 +64,7 @@ def main() -> None:
     from blow_spark.session import get_spark
     from blow_spark.sources import read_table
 
-    spark = get_spark(app_name="scale_r6", master="local[32]")
+    spark = get_spark(app_name="scale_r6")
     sf = "/root/testdata/sf0.1"
     cat = queries()
 

@@ -160,7 +160,7 @@ def main() -> None:
     from blow_spark.queries import queries
     from blow_spark.session import get_spark
 
-    spark = get_spark(app_name="scale_sf1", master="local[32]")
+    spark = get_spark(app_name="scale_sf1")
     cat = queries()
 
     if "--reuse" in sys.argv:

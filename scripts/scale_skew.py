@@ -19,7 +19,7 @@ which is the quantity that actually OOMs/straggles at scale.
 
 Methodology matches SCALE.md's other tables: seeded synthetic parquet
 inputs (derivation excluded from timings), operators warmed once,
-best-of-2 on local[32]. Broadcast is disabled throughout — the scenario
+best-of-2 on get_spark's default local[N]. Broadcast is disabled throughout — the scenario
 is "dim too large to broadcast" (a broadcastable dim needs no skew
 mitigation at all).
 
@@ -139,7 +139,7 @@ def main() -> None:
     from blow_spark import ops
     from blow_spark.session import get_spark
 
-    spark = get_spark(app_name="scale_skew", master="local[32]")
+    spark = get_spark(app_name="scale_skew")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     def set_aqe(enabled: bool, skew: bool) -> None:

@@ -223,6 +223,31 @@ def test_minhash_lsh_leaves_no_persisted_rdds(spark, docs):
     assert after <= before, f"leaked persisted RDDs: {sorted(after - before)}"
 
 
+def test_minhash_lsh_raising_leaves_no_persisted_rdds(spark, docs, monkeypatch):
+    """The second spill (the candidates' shingle-hash sets) raises after
+    the first one filled the ``base`` and ``sig`` caches: both are
+    released anyway, and the session holds no new persisted RDD."""
+    from blow_spark import materialize
+
+    real = materialize.spill_to_parquet
+    cached = []
+
+    def spill_once(df, prefix="blow_spark_ckpt_"):
+        if cached:
+            raise RuntimeError("spill failed")
+        out = real(df, prefix)
+        cached.append(_persistent_rdd_ids(spark) - before)
+        return out
+
+    before = _persistent_rdd_ids(spark)
+    monkeypatch.setattr(materialize, "spill_to_parquet", spill_once)
+    with pytest.raises(RuntimeError, match="spill failed"):
+        dedup.minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.5)
+    assert cached and cached[0], "the caches were never filled"
+    after = _persistent_rdd_ids(spark)
+    assert after <= before, f"leaked persisted RDDs: {sorted(after - before)}"
+
+
 def test_incremental_lsh_equals_full_rebuild(spark, docs):
     """The incremental path (new batch vs persistent index) must emit
     exactly the full rebuild's pairs that touch a new doc — same bands,
@@ -404,3 +429,180 @@ def test_prefix_filter_lossless_at_awkward_thresholds(spark):
             ).collect()
         }
         assert got == brute(thr), f"threshold {thr}: {got} vs {brute(thr)}"
+
+
+# --- exact substring excision: the one-task path and the distributed plan ---
+#
+# At or below dedup.LOCAL_CHAR_CUTOFF characters exact_substring_excise
+# runs in one task; above it, the distributed hash+verify plan. Every
+# test below runs on both: "local" keeps the default cutoff, and
+# "distributed" patches it to 0 (-1 for an empty corpus). A spy on
+# ops._in_one_task checks which path ran.
+
+XSUB_PATHS = pytest.mark.parametrize("path", ["local", "distributed"])
+
+
+def _excise(df, path, monkeypatch, **kwargs) -> dict:
+    """exact_substring_excise(df) on ``path`` → {doc_id: row}."""
+    from blow_spark import ops
+
+    calls = []
+    real = ops._in_one_task
+
+    def spy(*args, **kw):
+        calls.append(args[1])
+        return real(*args, **kw)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(ops, "_in_one_task", spy)
+        if path == "distributed":
+            mp.setattr(dedup, "LOCAL_CHAR_CUTOFF", 0 if df.take(1) else -1)
+        rows = dedup.exact_substring_excise(df, "text", "doc_id", **kwargs).collect()
+    assert bool(calls) == (path == "local"), calls
+    return {r["doc_id"]: r for r in rows}
+
+
+def _excise_reference(rows, min_len=40, min_count=2) -> dict:
+    """Plain-Python ExactSubstr over (doc_id, text) rows: count every
+    literal length-``min_len`` window, drop each character covered by
+    one seen ``min_count`` times."""
+    import collections
+
+    counts = collections.Counter(
+        t[i : i + min_len] for _, t in rows if t is not None for i in range(len(t) - min_len + 1)
+    )
+    out = {}
+    for doc, t in rows:
+        if t is None:
+            out[doc] = (None, None, None)
+            continue
+        cut = set()
+        for i in range(len(t) - min_len + 1):
+            if counts[t[i : i + min_len]] >= min_count:
+                cut.update(range(i, i + min_len))
+        clean = "".join(c for k, c in enumerate(t) if k not in cut)
+        out[doc] = (clean, len(clean), len(t) - len(clean))
+    return out
+
+
+def _as_tuples(out: dict) -> dict:
+    return {d: (r["clean_text"], r["n_chars_kept"], r["n_chars_removed"]) for d, r in out.items()}
+
+
+@XSUB_PATHS
+def test_exact_substring_excise_constructed(spark, monkeypatch, path):
+    """Known-answer pin for dedup.exact_substring_excise on a crafted
+    corpus: a 60-char boilerplate shared by two docs is excised from
+    both (the full 60 chars, not just one 40-window), unique text
+    stays, and sub-threshold (<40 char) repeats survive."""
+    boiler = "B" * 25 + "OILERPLATE-LICENSE-HEADER-" + "B" * 9  # 60 chars
+    assert len(boiler) == 60
+    uniq_a = "alpha text that is entirely unique to document A here."
+    uniq_b = "totally different beta body for document B, also unique."
+    short_rep = "tiny-repeat "  # 12 chars, repeated but < 40: must stay
+    rows = [
+        (1, short_rep + boiler + uniq_a),
+        (2, uniq_b + boiler + short_rep),
+        (3, "no duplicates at all in this third document, short."),
+    ]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    out = _excise(df, path, monkeypatch, min_len=40, min_count=2)
+    assert out[1]["clean_text"] == short_rep + uniq_a
+    assert out[2]["clean_text"] == uniq_b + short_rep
+    assert out[3]["clean_text"] == rows[2][1]
+    for doc_id, text in rows:
+        r = out[doc_id]
+        assert r["n_chars_kept"] + r["n_chars_removed"] == len(text)
+    assert out[1]["n_chars_removed"] == 60
+    assert out[2]["n_chars_removed"] == 60
+    assert out[3]["n_chars_removed"] == 0
+
+
+@XSUB_PATHS
+def test_exact_substring_merges_overlapping_windows(spark, monkeypatch, path):
+    """A 100-char duplicated run is one merged interval: every one of
+    its 61 overlapping 40-windows is duplicated, and the interval fold
+    must excise exactly the 100-char union, splicing the remainder."""
+    dup = "".join(chr(ord("a") + (i * 7) % 26) for i in range(100))
+    rows = [(1, "head-" + dup + "-tail"), (2, dup)]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    out = _excise(df, path, monkeypatch, min_len=40, min_count=2)
+    assert out[1]["clean_text"] == "head--tail"
+    assert out[2]["clean_text"] == ""
+    assert out[2]["n_chars_kept"] == 0
+
+
+#: a 40-code-point run with characters outside the BMP (a UTF-16
+#: surrogate pair each): positions must follow Spark's code-point
+#: substring/length, not bytes or UTF-16 units
+_ASTRAL = "😀é𐍈-" * 10
+#: runs without a repeated 40-char window inside them
+_RUN40 = "".join(chr(0x3041 + i) for i in range(40))
+_RUN3 = "".join(chr(0x4E00 + i) for i in range(45))  # in three documents
+_RUN2 = "".join(chr(0x0410 + i) for i in range(41))  # in two documents
+
+_EDGE_ROWS = [
+    (1, None),  # null text: passes through as nulls
+    (2, "short"),  # shorter than the window: unchanged
+    (3, ""),
+    (4, "pre<" + _RUN40 + ">mid[" + _RUN40 + "]post"),  # repeats its own run
+    (5, "😀😀 " + _ASTRAL + " tail"),
+    (6, _ASTRAL + "!"),
+    (7, _RUN3 + "<seven>" + _RUN2),
+    (8, "eight(" + _RUN3 + "){" + _RUN2 + "}"),
+    (9, "nine[" + _RUN3 + "]"),
+]
+
+
+@XSUB_PATHS
+@pytest.mark.parametrize("min_count", [2, 3])
+def test_exact_substring_edge_cases(spark, monkeypatch, path, min_count):
+    """Null text, short and empty documents, a document repeating its
+    own run, non-BMP code points, and runs seen in two and three
+    documents, against a plain-Python ExactSubstr at min_count 2 and 3."""
+    df = spark.createDataFrame(_EDGE_ROWS, "doc_id long, text string")
+    out = _as_tuples(_excise(df, path, monkeypatch, min_count=min_count))
+    assert out == _excise_reference(_EDGE_ROWS, min_count=min_count)
+    assert out[1] == (None, None, None)
+    assert out[2] == ("short", 5, 0)
+    assert out[3] == ("", 0, 0)
+    assert out[9] == ("nine[]", 6, 45)
+    if min_count == 2:
+        assert out[4] == ("pre<>mid[]post", 14, 80)
+        assert out[5] == ("😀😀  tail", 8, 40)
+        assert out[7] == ("<seven>", 7, 86)
+    else:
+        assert out[4][2] == out[5][2] == 0
+        assert out[7] == ("<seven>" + _RUN2, 48, 45)
+
+
+@XSUB_PATHS
+def test_exact_substring_empty_corpus(spark, monkeypatch, path):
+    df = spark.createDataFrame([], "doc_id long, text string")
+    assert _excise(df, path, monkeypatch) == {}
+
+
+def test_exact_substring_distributed_plan_exchanges(spark, monkeypatch):
+    """The plan above the cutoff keeps its shape on the catalog's
+    documents table (3 shuffles, 2 broadcasts); at the fixture's size
+    the default cutoff picks the one-task plan, which has none."""
+    from conftest import SF_SMALL
+    from plan_guard import exchange_counts, physical_plan
+
+    d = read_table(spark, SF_SMALL, "documents")
+    assert exchange_counts(physical_plan(dedup.exact_substring_excise(d, "text", "doc_id"))) == (0, 0)
+    monkeypatch.setattr(dedup, "LOCAL_CHAR_CUTOFF", 0)
+    assert exchange_counts(physical_plan(dedup.exact_substring_excise(d, "text", "doc_id"))) == (3, 2)
+
+
+def test_exact_substring_verify_recounts_hash_collisions():
+    """The verify step of the one-task path, with every window forced
+    into one hash group: only the literal string seen twice survives,
+    so a collision can never cut text."""
+    import numpy as np
+
+    buf = np.frombuffer("abcabdabc".encode("utf-32-le"), np.uint32)
+    starts = np.array([0, 3, 6])
+    same_hash = np.zeros(3, np.uint64)
+    assert dedup._verified_starts(buf, starts, same_hash, 3, 2).tolist() == [0, 6]
+    assert dedup._verified_starts(buf, starts, same_hash, 3, 3).tolist() == []

@@ -7,7 +7,7 @@ catalog query at the test scale factors reaches the distributed loops,
 so these tests force it by patching ``ops.LOCAL_EDGE_CUTOFF`` to 0 (or
 -1 for an empty graph) for one call and check both paths give the same
 rows on the catalog's own edge sets and on the edge cases. The job-count pins bound the four
-graph rows; the leak tests check that an operator raising mid-run
+graph rows and dedup_exact_substring's one-task path; the leak tests check that an operator raising mid-run
 leaves no cache behind on either path.
 """
 
@@ -187,14 +187,17 @@ def test_kcore_empty_core_at_sf01_keeps_its_record(spark, sf_dir):
     assert df.kcore_info == {"rounds": 3, "n_nodes_in": 5922, "n_nodes_out": 0}
 
 
-#: Upper bounds on the jobs one build + collect of each graph row starts
-#: at sf0.001 with the table schemas already cached. The distributed
-#: loops ran 27, 74, 17 and 17.
+#: Upper bounds on the jobs one build + collect of each graph row, and of
+#: dedup_exact_substring (the other row that finishes a small input in
+#: one task), starts at sf0.001 with the table schemas already cached.
+#: The distributed loops ran 27, 74, 17 and 17; the distributed
+#: exact-substring plan 11 (now its size probe + the one task).
 GRAPH_ROW_JOBS = {
     "graph_pagerank_bipartite": 10,
     "graph_kcore_decomposition": 33,
     "graph_bfs_hops": 9,
     "graph_cheapest_path_bounded": 9,
+    "dedup_exact_substring": 2,
 }
 
 
@@ -202,7 +205,7 @@ GRAPH_ROW_JOBS = {
 def test_graph_row_job_pins(spark, sf_dir, query):
     from blow_spark.sources import read_table
 
-    for table in ("orders", "lineitem"):
+    for table in ("orders", "lineitem", "documents"):
         read_table(spark, sf_dir, table)
     _, jobs = count_jobs(spark, lambda: ALL_QUERIES[query](spark, sf_dir).collect())
     assert jobs <= GRAPH_ROW_JOBS[query], f"{query}: {jobs} jobs"

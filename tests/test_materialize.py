@@ -272,9 +272,10 @@ def test_graph_edge_queries_leave_no_session_cache(spark, sf_dir):
 
 
 def test_no_lineage_cut_outside_materialize():
-    """Every lineage cut goes through the materialize helpers: no module
-    of the package but materialize.py calls ``.localCheckpoint()`` or
-    ``.cache()``."""
+    """Every lineage cut and every cache goes through the materialize
+    helpers: no module of the package but materialize.py calls
+    ``.localCheckpoint()``, ``.cache()`` or ``.persist()`` (an operator
+    that reads a table several times caches it with ``reused``)."""
     import ast
 
     pkg = os.path.dirname(M.__file__)
@@ -289,7 +290,7 @@ def test_no_lineage_cut_outside_materialize():
             for node in ast.walk(tree)
             if isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
-            and node.func.attr in ("localCheckpoint", "cache")
+            and node.func.attr in ("localCheckpoint", "cache", "persist")
         ]
     assert not offenders, offenders
 

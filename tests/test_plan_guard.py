@@ -442,11 +442,12 @@ BENCH_EXCHANGE_PINS = {
     "tokenizer_wordpiece_greedy": (2, 3),
     "multimodal_png_header_meta": (1, 0),
     "corpus_length_kl_by_source": (6, 3),
-    # round 11 — exact substring dedup: shuffles are (h,s)-verify window,
-    # per-doc starts groupBy, and the candidate⋈doc join; broadcasts are
-    # the spilled dup-hash table joining the window stream and the
-    # per-doc starts joining back to base (dup-density-sized sides)
-    "dedup_exact_substring": (3, 2),
+    # exact substring dedup: at or below dedup.LOCAL_CHAR_CUTOFF
+    # characters (every fixture SF) the plan is the one task — scan,
+    # coalesce(1), mapInPandas — with no exchange. The distributed plan
+    # above the cutoff keeps its (3, 2), pinned in
+    # tests/test_dedup.py::test_exact_substring_distributed_plan_exchanges
+    "dedup_exact_substring": (0, 0),
     # map-only: binaryFile scan -> mapInPandas decode -> narrow stats
     "multimodal_jpeg_decode_stats": (0, 0),
     # audit/report query by design: 3 ANN methods + exact ground truth

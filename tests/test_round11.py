@@ -116,61 +116,6 @@ def test_macro_f1_excludes_absent_classes():
         assert macro[lang] == 1.0, out
 
 
-def test_exact_substring_excise_constructed(spark):
-    """Known-answer pin for dedup.exact_substring_excise on a crafted
-    corpus: a 60-char boilerplate shared by two docs is excised from
-    both (the full 60 chars, not just one 40-window), unique text
-    stays, and sub-threshold (<40 char) repeats survive."""
-    from blow_spark.dedup import exact_substring_excise
-
-    boiler = "B" * 25 + "OILERPLATE-LICENSE-HEADER-" + "B" * 9  # 60 chars
-    assert len(boiler) == 60
-    uniq_a = "alpha text that is entirely unique to document A here."
-    uniq_b = "totally different beta body for document B, also unique."
-    short_rep = "tiny-repeat "  # 12 chars, repeated but < 40: must stay
-    rows = [
-        (1, short_rep + boiler + uniq_a),
-        (2, uniq_b + boiler + short_rep),
-        (3, "no duplicates at all in this third document, short."),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {
-        r["doc_id"]: r
-        for r in exact_substring_excise(
-            df, "text", "doc_id", min_len=40, min_count=2
-        ).collect()
-    }
-    assert out[1]["clean_text"] == short_rep + uniq_a
-    assert out[2]["clean_text"] == uniq_b + short_rep
-    assert out[3]["clean_text"] == rows[2][1]
-    for doc_id, text in rows:
-        r = out[doc_id]
-        assert r["n_chars_kept"] + r["n_chars_removed"] == len(text)
-    assert out[1]["n_chars_removed"] == 60
-    assert out[2]["n_chars_removed"] == 60
-    assert out[3]["n_chars_removed"] == 0
-
-
-def test_exact_substring_merges_overlapping_windows(spark):
-    """A 100-char duplicated run is one merged interval: every one of
-    its 61 overlapping 40-windows is duplicated, and the interval fold
-    must excise exactly the 100-char union, splicing the remainder."""
-    from blow_spark.dedup import exact_substring_excise
-
-    dup = "".join(chr(ord("a") + (i * 7) % 26) for i in range(100))
-    rows = [(1, "head-" + dup + "-tail"), (2, dup)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {
-        r["doc_id"]: r
-        for r in exact_substring_excise(
-            df, "text", "doc_id", min_len=40, min_count=2
-        ).collect()
-    }
-    assert out[1]["clean_text"] == "head--tail"
-    assert out[2]["clean_text"] == ""
-    assert out[2]["n_chars_kept"] == 0
-
-
 # --- baseline JPEG codec pins (round 11) ----------------------------------
 
 
