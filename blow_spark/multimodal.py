@@ -17,15 +17,20 @@ What's REAL decode (round 3 — no external codec needed):
   decode real media payloads for real; ``multimodal_wav_decode_energy``
   runs the WAV path under the DuckDB oracle gate.
 
-What's REAL decode (round 11):
-  * JPEG: pure stdlib+numpy baseline-sequential codec — Annex K Huffman
-    + quant tables, FDCT/IDCT, DC prediction, restart markers; encoder
-    AND decoder (``encode_jpeg_baseline``/``_decode_jpeg``), so genuine
-    .jpg fixtures exist with a closed-form oracle (flat blocks at
-    quality 50: the DC round trip is exact integer arithmetic).
+What's REAL decode (rounds 11-14):
+  * JPEG: pure stdlib+numpy codec — Annex K Huffman + quant tables,
+    FDCT/IDCT, DC prediction, restart markers; baseline encoder AND
+    decoder at 4:4:4 and 4:2:0 (``encode_jpeg_baseline``/
+    ``_decode_jpeg``, which also reads 4:2:2/4:4:0), and progressive
+    encoder and decoders — full (``decode_jpeg_progressive``, spectral
+    selection and successive approximation) and first-DC-scan only
+    (``decode_jpeg_progressive_dc``). The three decoders share one
+    stream parser (``_jpeg_parse``), so genuine .jpg fixtures exist
+    with a closed-form oracle (flat blocks at quality 50: the DC round
+    trip is exact integer arithmetic).
 
 What's STUBBED (for formats whose codecs aren't shipped — MP3,
-progressive/subsampled JPEG, ...):
+arithmetic-coded or 12-bit JPEG, ...):
   * ``decode_image``/``decode_audio`` raise NotImplementedError unless
     PIL imports, with a deterministic fake available for tests
     (``fake_decode=True``).
@@ -33,8 +38,10 @@ progressive/subsampled JPEG, ...):
 
 from __future__ import annotations
 
+import re
 import struct
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -333,11 +340,13 @@ def decode_adpcm_ima(
 def decode_image(content: bytes, fake_decode: bool = False) -> np.ndarray:
     """Decode an image blob to an HxW[xC] array. PNG decodes FOR REAL
     with no external codec (stdlib zlib — _decode_png), and so do
-    baseline-sequential JPEG (_decode_jpeg, round 11), uncompressed
-    24-bit BMP (_decode_bmp, round 11), and QOI (decode_qoi, round 12);
-    other formats use PIL when it ships; the fake path derives a
-    deterministic 8x8x3 array from the bytes so non-image payload
-    plumbing stays testable."""
+    baseline-sequential JPEG at 1-2 sampling factors (_decode_jpeg),
+    uncompressed 24-bit BMP (_decode_bmp), and QOI (decode_qoi).
+    Progressive JPEG raises NotImplementedError here; it decodes with
+    decode_jpeg_progressive (in full) or decode_jpeg_progressive_dc
+    (first DC scan only). Other formats use PIL when it ships; the fake
+    path derives a deterministic 8x8x3 array from the bytes so
+    non-image payload plumbing stays testable."""
     if content[:8] == _PNG_MAGIC:
         return _decode_png(content)
     if content[:2] == _JPEG_MAGIC:
@@ -834,17 +843,17 @@ def png_corpus_fixture_dir(spark, sf_dir: str, n_docs: int = 50) -> str:
 
 
 # --------------------------------------------------------------------------
-# Baseline-sequential JPEG codec (pure stdlib+numpy — round 11)
+# JPEG codec (pure stdlib+numpy — rounds 11-14)
 # --------------------------------------------------------------------------
 # Closes the biggest multimodal asterisk the same way PNG was closed in
 # round 9: a REAL codec with no external dependency. Baseline DCT
-# sequential (SOF0), Huffman entropy coding with the ITU-T.81 Annex K
-# standard tables, 8-bit grayscale or YCbCr at any 1-2 sampling-factor
-# layout — 4:4:4 and, as of round 12, 4:2:0 (what cameras and the web
-# actually emit; round-11 verdict item #4), 4:2:2, 4:4:0. Progressive
-# (SOF2), arithmetic-coded, and 12-bit streams raise
-# NotImplementedError — a truthful feature gate, same policy as the PNG
-# subset note above.
+# sequential (SOF0) and progressive (SOF2), Huffman entropy coding with
+# the ITU-T.81 Annex K standard tables, 8-bit grayscale or YCbCr at any
+# 1-2 sampling-factor layout — 4:4:4 and 4:2:0 (what cameras and the web
+# actually emit), 4:2:2, 4:4:0. One parser (_jpeg_parse) walks a
+# stream's markers for all three decoders; arithmetic-coded and 12-bit
+# streams raise NotImplementedError — a truthful feature gate, same
+# policy as the PNG subset note above.
 
 _JPEG_MAGIC = b"\xff\xd8"
 
@@ -1514,6 +1523,47 @@ def _assemble_jpeg_progressive_sa(qblocks, planes, h, w, ql, qc) -> bytes:
     return out + b"\xff\xd9"
 
 
+class _BitReader:
+    def __init__(self, data: bytes) -> None:
+        self.data = data
+        self.pos = 0
+        self.acc = 0
+        self.n = 0
+
+    def _fill(self) -> None:
+        while self.n < 25 and self.pos < len(self.data):
+            b = self.data[self.pos]
+            self.pos += 1
+            if b == 0xFF:
+                if self.pos < len(self.data) and self.data[self.pos] == 0x00:
+                    self.pos += 1  # unstuff
+                else:
+                    self.pos -= 1  # a real marker: stop feeding
+                    b = None
+                    break
+            self.acc = (self.acc << 8) | b
+            self.n += 8
+
+    def read(self, length: int) -> int:
+        if length == 0:
+            return 0
+        self._fill()
+        if self.n < length:
+            # past the scan end: pad with 1s (spec padding)
+            self.acc = (self.acc << (length - self.n)) | ((1 << (length - self.n)) - 1)
+            self.n = length
+        v = (self.acc >> (self.n - length)) & ((1 << length) - 1)
+        self.n -= length
+        self.acc &= (1 << self.n) - 1
+        return v
+
+
+def _jpeg_extend(r: int, size: int) -> int:
+    if size == 0:
+        return 0
+    return r if r >= (1 << (size - 1)) else r - (1 << size) + 1
+
+
 def _read_huff_symbol(br: "_BitReader", table) -> int:
     code = lng = 0
     while lng < 16:
@@ -1524,220 +1574,271 @@ def _read_huff_symbol(br: "_BitReader", table) -> int:
     raise ValueError("bad Huffman code in JPEG scan")
 
 
-def decode_jpeg_progressive(
-    content: bytes, stats: dict | None = None
-) -> np.ndarray:
-    """FULL progressive (SOF2) JPEG decode — round-14 (r13 verdict item
-    #4, the IMPLEMENT decision for AC-refinement progressive): every
-    Huffman progressive scan kind per ISO 10918-1 G.1.2 — DC first, DC
-    refinement (raw bits), AC first with EOBn runs, AC refinement with
-    the correction-bit protocol — then dequantize + IDCT + level shift
-    exactly like the baseline decoder, so a progressive encoding of the
-    same quantized coefficients reconstructs PIXEL-IDENTICALLY to the
-    baseline encoding (pinned in tests/test_round14.py and realized as
-    a match column in multimodal_jpeg_progressive_ac_refine_stats).
+#: (rows, cols) index arrays of the zigzag order, for numpy fancy indexing
+_JZZ_IDX = tuple(np.array(_JZZ).T)
+#: the entropy-coded data of a scan ends at the first marker that is
+#: neither a stuffed 0xFF00 nor an RSTn; RSTn markers split it
+_JPEG_ECS_END = re.compile(rb"\xff[^\x00\xd0-\xd7]")
+_JPEG_RST = re.compile(rb"\xff[\xd0-\xd7]")
 
-    Subset gates (truthful, same policy as decode_image): 8-bit
-    precision, 1x1 sampling factors (4:4:4 / grayscale — our SA script;
-    use decode_jpeg_progressive_dc for DC-grade analytics over
-    subsampled progressive corpora). ``stats``, when given, is filled
-    with realized decode facts: per-scan (Ss, Se, Ah, Al) census plus
-    used_eobrun / used_zrl / used_newsig_refine / corr_bits counters —
-    the proof bits the oracle gate asserts."""
+_JPEG_12BIT = (
+    "JPEG subset: 8-bit precision only. 12-bit samples "
+    "(extended sequential/progressive, ISO 10918-1 Annex F "
+    "tables) are PERMANENTLY out of scope by decision "
+    "(round-14, the MP3 policy): 12-bit JPEG lives inside "
+    "medical DICOM toolchains and never appears in web or "
+    "photographic training corpora — the pipelines this "
+    "catalog serves; supporting it would double every "
+    "quant/Huffman table surface to decode files only this "
+    "repo could generate."
+)
+_JPEG_ARITHMETIC = (
+    "JPEG subset: arithmetic-coded streams (SOF9-11, SOF13-15) are "
+    "PERMANENTLY out of scope by decision (round-14, the MP3 "
+    "policy): the QM-coder was patent-encumbered for the "
+    "format's entire adoption window, so encoders (libjpeg "
+    "-turbo, mozjpeg) ship with it disabled and browsers do "
+    "not decode it — a training-data pipeline never meets an "
+    "arithmetic JPEG in the wild, and implementing the coder "
+    "only to decode files this repo itself generated would "
+    "certify nothing. Huffman baseline + full progressive "
+    "cover the real corpus."
+)
+
+
+class _JpegScan(NamedTuple):
+    """One SOS: ``comps`` holds (frame component index, DC decode map,
+    AC decode map) per scan component, a map None where the scan reads
+    no table of that class; ``restart`` is the DRI interval in force
+    (0 = none); ``segments`` is the entropy-coded data split at RSTn."""
+
+    comps: list
+    ss: int
+    se: int
+    ah: int
+    al: int
+    restart: int
+    segments: list
+
+
+class _JpegFrame(NamedTuple):
+    """A parsed JPEG stream: the SOF marker (0xC0 or 0xC2), the image
+    size, (id, quant table in natural order, h_i, v_i) per component,
+    and the scans in stream order."""
+
+    sof: int
+    h: int
+    w: int
+    comps: list
+    scans: list
+
+    def mcu_grid(self) -> tuple[int, int, int, int]:
+        """(MCU rows, MCU cols, h_max, v_max) of an interleaved scan."""
+        hmax = max(c[2] for c in self.comps)
+        vmax = max(c[3] for c in self.comps)
+        return -(-self.h // (8 * vmax)), -(-self.w // (8 * hmax)), hmax, vmax
+
+
+def _jpeg_parse(content: bytes) -> _JpegFrame:
+    """Walk the marker segments of a JPEG stream once (ISO 10918-1
+    Annex B) and return its frame and scans. Every decoder here starts
+    from this walk, so they share its gates: unsupported features raise
+    NotImplementedError (SOF other than 0/2, arithmetic coding, 12-bit
+    samples or quant tables, sampling factors outside 1-2, other than
+    1 or 3 components) and malformed streams raise ValueError (bad
+    magic or marker sync, a truncated segment or scan, no EOI, a scan
+    naming an unknown component or an undefined Huffman table, a
+    component without a quant table). Huffman tables are resolved when
+    each SOS is read, so a DHT between scans applies to later scans
+    only, as the spec has it."""
     if content[:2] != _JPEG_MAGIC:
         raise ValueError("not a JPEG stream")
-    st = stats if stats is not None else {}
-    st.setdefault("scans", [])
-    st.setdefault("used_eobrun", 0)
-    st.setdefault("used_zrl", 0)
-    st.setdefault("used_newsig_refine", 0)
-    st.setdefault("corr_bits", 0)
-    pos = 2
     qt: dict[int, np.ndarray] = {}
     huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    h = w = None
-    comps: list[tuple[int, int]] = []  # (comp_id, qtab)
-    restart_interval = 0
-    coefs: list[np.ndarray] | None = None
-    rows = cols = 0
-    while pos + 2 <= len(content):
+    frame = None  # (sof, h, w, [(comp_id, qtab id, h_i, v_i)])
+    restart = 0
+    scans: list[_JpegScan] = []
+    pos = 2
+    while content[pos : pos + 2] != b"\xff\xd9":  # EOI
+        if len(content) < pos + 4:
+            raise ValueError("truncated JPEG stream (no EOI marker)")
         if content[pos] != 0xFF:
             raise ValueError(f"bad marker sync at {pos}")
-        marker = content[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        (ln,) = struct.unpack(">H", content[pos : pos + 2])
-        payload = content[pos + 2 : pos + ln]
-        pos += ln
-        if marker == 0xDB:
+        marker, ln = content[pos + 1], int.from_bytes(content[pos + 2 : pos + 4], "big")
+        payload = content[pos + 4 : pos + 2 + ln]
+        if ln < 2 or len(payload) != ln - 2:
+            raise ValueError(f"truncated JPEG segment 0xFF{marker:02X}")
+        pos += 2 + ln
+        if marker == 0xDB:  # DQT (possibly several tables)
             p = 0
             while p < len(payload):
-                pq, tid = payload[p] >> 4, payload[p] & 0xF
-                if pq != 0:
+                if payload[p] >> 4:
                     raise NotImplementedError("JPEG subset: 8-bit quant tables")
+                if p + 65 > len(payload):
+                    raise ValueError("truncated JPEG DQT segment")
                 tbl = np.zeros((8, 8), dtype=np.int32)
-                for k, (r_, c_) in enumerate(_JZZ):
-                    tbl[r_, c_] = payload[p + 1 + k]
-                qt[tid] = tbl
+                tbl[_JZZ_IDX] = list(payload[p + 1 : p + 65])
+                qt[payload[p] & 0xF] = tbl
                 p += 65
-        elif marker == 0xC4:
+        elif marker == 0xC4:  # DHT (possibly several tables)
             p = 0
             while p < len(payload):
                 cls, tid = payload[p] >> 4, payload[p] & 0xF
                 bits = list(payload[p + 1 : p + 17])
-                nv = sum(bits)
-                vals = list(payload[p + 17 : p + 17 + nv])
+                vals = list(payload[p + 17 : p + 17 + sum(bits)])
+                # a DC symbol is a magnitude category: at most 15, as libjpeg checks
+                bad_dc = cls == 0 and max(vals, default=0) > 15
+                if cls > 1 or len(bits) < 16 or len(vals) < sum(bits) or bad_dc:
+                    raise ValueError("malformed JPEG DHT segment")
                 huff[(cls, tid)] = _huff_decode_map(bits, vals)
-                p += 17 + nv
-        elif marker == 0xC2:
+                p += 17 + len(vals)
+        elif marker in (0xC0, 0xC2):  # SOF0 baseline, SOF2 progressive
+            if frame is not None:
+                raise ValueError("JPEG stream has two frame headers")
+            if len(payload) < 6 or len(payload) != 6 + 3 * payload[5]:
+                raise ValueError("truncated JPEG frame header")
             prec, h, w, nc = struct.unpack(">BHHB", payload[:6])
             if prec != 8:
-                raise NotImplementedError(
-                    "JPEG subset: 8-bit precision only. 12-bit samples "
-                    "(extended sequential/progressive, ISO 10918-1 Annex F "
-                    "tables) are PERMANENTLY out of scope by decision "
-                    "(round-14, the MP3 policy): 12-bit JPEG lives inside "
-                    "medical DICOM toolchains and never appears in web or "
-                    "photographic training corpora — the pipelines this "
-                    "catalog serves; supporting it would double every "
-                    "quant/Huffman table surface to decode files only this "
-                    "repo could generate."
-                )
+                raise NotImplementedError(_JPEG_12BIT)
+            comps = []
             for i in range(nc):
                 cid, samp, tq = payload[6 + 3 * i : 9 + 3 * i]
-                if samp != 0x11:
+                hi, vi = samp >> 4, samp & 0xF
+                if hi not in (1, 2) or vi not in (1, 2):
                     raise NotImplementedError(
-                        "full progressive decode: 1x1 sampling factors "
-                        "(4:4:4 / grayscale) only — use "
-                        "decode_jpeg_progressive_dc for DC-grade analytics "
-                        "over subsampled progressive streams"
+                        "JPEG subset: sampling factors 1-2 "
+                        "(4:4:4 / 4:2:0 / 4:2:2 / 4:4:0)"
                     )
-                comps.append((cid, tq))
-            rows, cols = -(-h // 8), -(-w // 8)
-            coefs = [
-                np.zeros((rows * cols, 64), dtype=np.int64) for _ in comps
-            ]
-        elif marker == 0xC0:
-            raise ValueError(
-                "baseline (SOF0) stream: use decode_image, not the "
-                "progressive path"
-            )
-        elif marker in (0xC9, 0xCA, 0xCB):
+                comps.append((cid, tq, hi, vi))
+            if nc not in (1, 3):
+                raise NotImplementedError("JPEG subset: grayscale or 3-component YCbCr")
+            if not h or not w or len({c[0] for c in comps}) != nc:
+                raise ValueError("bad JPEG frame header (zero size or repeated component id)")
+            frame = (marker, h, w, comps)
+        elif marker in (0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
+            raise NotImplementedError(_JPEG_ARITHMETIC)
+        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7):
             raise NotImplementedError(
-                "JPEG subset: arithmetic-coded streams are PERMANENTLY "
-                "out of scope by decision (round-14, the MP3 policy — "
-                "see decode_image's SOF9-11 gate for the rationale)"
+                f"JPEG subset: baseline (SOF0) and progressive (SOF2) only, got SOF{marker & 0xF}"
             )
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", payload[:2])
-        elif marker == 0xDA:
-            if coefs is None:
-                raise ValueError("SOS before SOF2")
-            ns = payload[0]
-            scomp = []  # (comp_index, dc_table, ac_table)
+        elif marker == 0xDD:  # DRI
+            if ln != 4:
+                raise ValueError("malformed JPEG DRI segment")
+            restart = int.from_bytes(payload, "big")
+        elif marker == 0xDA:  # SOS
+            if frame is None:
+                raise ValueError("JPEG scan before the frame header")
+            ids = [c[0] for c in frame[3]]
+            ns = payload[0] if payload else 0
+            if not 1 <= ns <= len(ids) or len(payload) != 4 + 2 * ns:
+                raise ValueError("malformed JPEG scan header")
+            ss, se, ahal = payload[-3:]
+            ah, al = ahal >> 4, ahal & 0xF
+            if not ss <= se <= 63 or ah > 13 or al > 13:
+                raise ValueError("bad JPEG scan parameters")
+            scomps = []
             for i in range(ns):
                 cid, tsel = payload[1 + 2 * i], payload[2 + 2 * i]
-                ci = next(j for j, c in enumerate(comps) if c[0] == cid)
-                scomp.append((ci, tsel >> 4, tsel & 0xF))
-            ss, se, ahal = payload[1 + 2 * ns : 4 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0xF
-            p = pos
-            while p + 1 < len(content):
-                if content[p] == 0xFF and content[p + 1] != 0x00 and not (
-                    0xD0 <= content[p + 1] <= 0xD7
-                ):
-                    break
-                p += 1
-            data = content[pos:p]
-            pos = p
-            _jprog_scan(
-                coefs, scomp, huff, ss, se, ah, al, data,
-                restart_interval, rows * cols, st,
-            )
-            st["scans"].append((ss, se, ah, al))
-    if coefs is None or h is None:
-        raise ValueError("JPEG missing SOF2/SOS")
-    planes = []
-    for ci, (_cid, tq) in enumerate(comps):
-        plane = np.zeros((rows * 8, cols * 8), dtype=np.float64)
-        for bi in range(rows * cols):
-            fq = np.zeros((8, 8), dtype=np.float64)
-            for k2, (r_, c_) in enumerate(_JZZ):
-                fq[r_, c_] = coefs[ci][bi][k2] * qt[tq][r_, c_]
-            blk = _JM.T @ fq @ _JM + 128.0
-            by, bx = divmod(bi, cols)
-            plane[by * 8 : (by + 1) * 8, bx * 8 : (bx + 1) * 8] = blk
-        planes.append(plane[:h, :w])
-    if len(comps) == 1:
-        return np.clip(np.round(planes[0]), 0, 255).astype(np.uint8)
-    y, cb, cr = planes
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    return np.clip(np.round(np.stack([r, g, b], axis=-1)), 0, 255).astype(
-        np.uint8
-    )
+                if cid not in ids:
+                    raise ValueError(f"JPEG scan names unknown component {cid}")
+                ci = ids.index(cid)
+                if any(ci == c[0] for c in scomps):
+                    raise ValueError(f"JPEG scan names component {cid} twice")
+                # a DC first pass reads a DC table, any band past 0 an AC table
+                dc = (0, tsel >> 4) if ss == 0 and ah == 0 else None
+                ac = (1, tsel & 0xF) if se else None
+                if any(key and key not in huff for key in (dc, ac)):
+                    raise ValueError("JPEG scan uses an undefined Huffman table")
+                scomps.append((ci, huff.get(dc), huff.get(ac)))
+            end = _JPEG_ECS_END.search(content, pos)
+            if end is None:
+                raise ValueError("truncated JPEG scan (no marker after its data)")
+            segments = _JPEG_RST.split(content[pos : end.start()])
+            scans.append(_JpegScan(scomps, ss, se, ah, al, restart, segments))
+            pos = end.start()
+    if frame is None or not scans:
+        raise ValueError("JPEG stream has no frame header or no scan")
+    sof, h, w, comps = frame
+    if any(tq not in qt for _, tq, _, _ in comps):
+        raise ValueError("JPEG component uses an undefined quant table")
+    return _JpegFrame(sof, h, w, [(c, qt[tq], hi, vi) for c, tq, hi, vi in comps], scans)
 
 
-def _jprog_scan(
-    coefs, scomp, huff, ss, se, ah, al, data, ri, n_units, st
-) -> None:
-    """Run one progressive scan over the coefficient state. 1x1
-    sampling factors only, so the MCU raster equals every component's
-    block raster; RSTn resets the bit reader, DC predictors, and the
-    EOB run (spec E.2.4)."""
-    segments = []
-    if ri:
-        seg_b, q = bytearray(), 0
-        while q < len(data):
-            if (
-                data[q] == 0xFF
-                and q + 1 < len(data)
-                and 0xD0 <= data[q + 1] <= 0xD7
-            ):
-                segments.append(bytes(seg_b))
-                seg_b = bytearray()
-                q += 2
-            else:
-                seg_b.append(data[q])
-                q += 1
-        segments.append(bytes(seg_b))
+def _jpeg_intervals(fr: _JpegFrame, sc: _JpegScan):
+    """Yield ``(bit reader, blocks)`` per restart interval of a scan,
+    ``blocks`` listing the interval's (scan component, block row, block
+    col) in decode order (ISO 10918-1 A.2): MCU by MCU, and inside an
+    interleaved MCU each component's v_i x h_i blocks row-major; a
+    one-component scan is non-interleaved, one block per MCU over that
+    component's own block raster. Decoders reset their DC predictors
+    and EOB run at each interval (E.2.4)."""
+    rows, cols, hmax, vmax = fr.mcu_grid()
+    if len(sc.comps) == 1:
+        _, _, hi, vi = fr.comps[sc.comps[0][0]]
+        rows, cols = -(-fr.h * vi // (8 * vmax)), -(-fr.w * hi // (8 * hmax))
+        layout = [(0, 1, 1, 0, 0)]
     else:
-        segments = [data]
-    unit = 0
-    for seg_bytes in segments:
-        br = _BitReader(seg_bytes)
-        pred = [0] * len(scomp)
+        layout = [
+            (si, fr.comps[ci][3], fr.comps[ci][2], bv, bh)
+            for si, (ci, _, _) in enumerate(sc.comps)
+            for bv in range(fr.comps[ci][3])
+            for bh in range(fr.comps[ci][2])
+        ]
+    n = rows * cols
+    ri = sc.restart or n
+    for k, seg in enumerate(sc.segments[: -(-n // ri)]):
+        yield _BitReader(seg), [
+            (si, (u // cols) * vi + bv, (u % cols) * hi + bh)
+            for u in range(k * ri, min(k * ri + ri, n))
+            for si, vi, hi, bv, bh in layout
+        ]
+
+
+def _jpeg_coefs(fr: _JpegFrame, scans, st: dict) -> list[np.ndarray]:
+    """Entropy-decode ``scans`` into one (block rows, block cols, 64)
+    zigzag coefficient grid per component, padded to whole MCUs, and
+    count the decode facts in ``st`` (per-scan (Ss, Se, Ah, Al) census
+    and the used_eobrun / used_zrl / used_newsig_refine / corr_bits
+    counters)."""
+    st.setdefault("scans", [])
+    for key in ("used_eobrun", "used_zrl", "used_newsig_refine", "corr_bits"):
+        st.setdefault(key, 0)
+    rows, cols, _, _ = fr.mcu_grid()
+    coefs = [np.zeros((rows * vi, cols * hi, 64), dtype=np.int64) for _, _, hi, vi in fr.comps]
+    for sc in scans:
+        _jprog_scan(coefs, sc, fr, st)
+        st["scans"].append((sc.ss, sc.se, sc.ah, sc.al))
+    return coefs
+
+
+def _jprog_scan(coefs, sc: _JpegScan, fr: _JpegFrame, st: dict) -> None:
+    """Run one scan over the coefficient state: the DC coefficient when
+    Ss = 0 (first pass: Huffman-coded difference from the component's
+    predictor, then << Al; refinement: one raw bit) and the AC band
+    max(Ss, 1)..Se when Se > 0 (first pass or refinement, G.1.2). A
+    sequential scan (Ss=0, Se=63) is a DC first pass plus an AC first
+    pass at Al=0; a progressive scan is one or the other."""
+    for br, blocks in _jpeg_intervals(fr, sc):
+        pred = [0] * len(sc.comps)
         eobrun = 0
-        limit = min(unit + ri, n_units) if ri else n_units
-        while unit < limit:
-            if ss == 0:  # DC scan (first or refinement)
-                for si, (ci, dct, _act) in enumerate(scomp):
-                    blk = coefs[ci][unit]
-                    if ah == 0:
-                        size = _read_huff_symbol(br, huff[(0, dct)])
-                        diff = _jpeg_extend(br.read(size), size)
-                        pred[si] += diff
-                        blk[0] = pred[si] << al
-                    else:
-                        if br.read(1):
-                            blk[0] |= 1 << al
-            else:  # AC scan: single component by spec
-                ci, _dct, act = scomp[0]
-                blk = coefs[ci][unit]
+        for si, by, bx in blocks:
+            ci, dc_tbl, ac_tbl = sc.comps[si]
+            blk = coefs[ci][by, bx]
+            if sc.ss == 0:
+                if sc.ah == 0:
+                    size = _read_huff_symbol(br, dc_tbl)
+                    pred[si] += _jpeg_extend(br.read(size), size)
+                    blk[0] = pred[si] << sc.al
+                elif br.read(1):
+                    blk[0] |= 1 << sc.al
+            if sc.se:
                 before = eobrun
-                if ah == 0:
-                    eobrun = _dec_ac_first_stats(
-                        br, huff[(1, act)], blk, ss, se, al, eobrun, st
-                    )
-                else:
-                    eobrun = _dec_ac_refine_stats(
-                        br, huff[(1, act)], blk, ss, se, al, eobrun, st
-                    )
+                dec = _dec_ac_refine_stats if sc.ah else _dec_ac_first_stats
+                eobrun = dec(br, ac_tbl, blk, max(sc.ss, 1), sc.se, sc.al, eobrun, st)
                 if before > 0 or eobrun > 0:
+                    if sc.ss == 0:
+                        raise ValueError("EOB run in a sequential JPEG scan")
                     st["used_eobrun"] += 1
-            unit += 1
 
 
 def _dec_ac_first_stats(br, tbl, blk, ss, se, al, eobrun, st) -> int:
@@ -1808,6 +1909,117 @@ def _dec_ac_refine_stats(br, tbl, blk, ss, se, al, eobrun, st) -> int:
     return eobrun
 
 
+def _jpeg_idct_planes(fr: _JpegFrame, coefs) -> list[np.ndarray]:
+    """Dequantize, inverse-DCT and level-shift every block of each
+    component's coefficient grid into a float sample plane."""
+    planes = []
+    for (_, q, _, _), grid in zip(fr.comps, coefs):
+        qz = q[_JZZ_IDX]
+        rows, cols = grid.shape[:2]
+        plane = np.zeros((rows * 8, cols * 8), dtype=np.float64)
+        for by in range(rows):
+            for bx in range(cols):
+                fq = np.zeros((8, 8), dtype=np.float64)
+                fq[_JZZ_IDX] = grid[by, bx] * qz
+                plane[by * 8 : (by + 1) * 8, bx * 8 : (bx + 1) * 8] = _JM.T @ fq @ _JM + 128.0
+        planes.append(plane)
+    return planes
+
+
+def _jpeg_image(fr: _JpegFrame, planes) -> np.ndarray:
+    """Crop each MCU-padded plane to its component's size
+    (ceil(d * f_i / f_max)), upsample subsampled chroma by pixel
+    replication, convert YCbCr to RGB, round and clamp to uint8."""
+    _, _, hmax, vmax = fr.mcu_grid()
+    out = []
+    for pl, (_, _, hi, vi) in zip(planes, fr.comps):
+        pl = pl[: -(-fr.h * vi // vmax), : -(-fr.w * hi // hmax)]
+        out.append(pl.repeat(vmax // vi, axis=0).repeat(hmax // hi, axis=1)[: fr.h, : fr.w])
+    if len(out) == 1:
+        px = out[0]
+    else:
+        y, cb, cr = out
+        px = np.stack(
+            [
+                y + 1.402 * (cr - 128.0),
+                y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0),
+                y + 1.772 * (cb - 128.0),
+            ],
+            axis=-1,
+        )
+    return np.clip(np.round(px), 0, 255).astype(np.uint8)
+
+
+def _decode_jpeg(content: bytes) -> np.ndarray:
+    """Pure stdlib+numpy baseline JPEG decoder: SOF0, 8-bit, grayscale
+    or YCbCr at any 1-2 sampling-factor layout — 4:4:4, 4:2:0 (the
+    dominant real-world layout), 4:2:2, 4:4:0 — in one scan over
+    every component, with restart markers and pixel-replication chroma
+    upsampling. Progressive, arithmetic-coded and 12-bit streams, and
+    baseline streams split into several scans, raise
+    NotImplementedError (truthful feature gate, same policy as the PNG
+    subset); malformed streams raise ValueError."""
+    fr = _jpeg_parse(content)
+    if fr.sof != 0xC0:
+        raise NotImplementedError(
+            "JPEG subset: decode_image decodes baseline (SOF0) only. "
+            "Progressive (SOF2) streams decode exactly with "
+            "decode_jpeg_progressive (4:4:4 / grayscale), or from their "
+            "first DC scan alone with decode_jpeg_progressive_dc."
+        )
+    sc = fr.scans[0]
+    if len(fr.scans) != 1 or len(sc.comps) != len(fr.comps):
+        raise NotImplementedError(
+            "JPEG subset: baseline streams with one scan over every component"
+        )
+    if (sc.ss, sc.se, sc.ah, sc.al) != (0, 63, 0, 0):
+        raise ValueError("baseline JPEG scan must code the full band at full precision")
+    return _jpeg_image(fr, _jpeg_idct_planes(fr, _jpeg_coefs(fr, fr.scans, {})))
+
+
+def _jpeg_progressive_frame(content: bytes) -> _JpegFrame:
+    """Parse a stream for the two progressive decoders: SOF2 only, and
+    every scan a DC scan (Se=0) or a one-component AC scan (Ss>0)."""
+    fr = _jpeg_parse(content)
+    if fr.sof != 0xC2:
+        raise ValueError("baseline (SOF0) stream: use decode_image, not the progressive path")
+    if any((sc.ss == 0) != (sc.se == 0) or (sc.ss and len(sc.comps) != 1) for sc in fr.scans):
+        raise ValueError("progressive JPEG scan is neither a DC scan nor a one-component AC scan")
+    return fr
+
+
+def decode_jpeg_progressive(
+    content: bytes, stats: dict | None = None
+) -> np.ndarray:
+    """FULL progressive (SOF2) JPEG decode — round-14 (r13 verdict item
+    #4, the IMPLEMENT decision for AC-refinement progressive): every
+    Huffman progressive scan kind per ISO 10918-1 G.1.2 — DC first, DC
+    refinement (raw bits), AC first with EOBn runs, AC refinement with
+    the correction-bit protocol — then dequantize + IDCT + level shift
+    exactly like the baseline decoder, so a progressive encoding of the
+    same quantized coefficients reconstructs PIXEL-IDENTICALLY to the
+    baseline encoding (pinned in tests/test_jpeg.py and realized as
+    a match column in multimodal_jpeg_progressive_ac_refine_stats).
+
+    Subset gates (truthful, same policy as decode_image): 8-bit
+    precision, 1x1 sampling factors (4:4:4 / grayscale — our SA script;
+    use decode_jpeg_progressive_dc for DC-grade analytics over
+    subsampled progressive corpora). ``stats``, when given, is filled
+    with realized decode facts: per-scan (Ss, Se, Ah, Al) census plus
+    used_eobrun / used_zrl / used_newsig_refine / corr_bits counters —
+    the proof bits the oracle gate asserts."""
+    fr = _jpeg_progressive_frame(content)
+    if any((hi, vi) != (1, 1) for _, _, hi, vi in fr.comps):
+        raise NotImplementedError(
+            "full progressive decode: 1x1 sampling factors "
+            "(4:4:4 / grayscale) only — use "
+            "decode_jpeg_progressive_dc for DC-grade analytics "
+            "over subsampled progressive streams"
+        )
+    coefs = _jpeg_coefs(fr, fr.scans, stats if stats is not None else {})
+    return _jpeg_image(fr, _jpeg_idct_planes(fr, coefs))
+
+
 def decode_jpeg_progressive_dc(content: bytes) -> np.ndarray:
     """DC-SCAN-ONLY decode of a progressive (SOF2) JPEG — the round-12
     verdict item #4 decision, taken the IMPLEMENT way: the first scan
@@ -1823,422 +2035,18 @@ def decode_jpeg_progressive_dc(content: bytes) -> np.ndarray:
     decode_image's contract is exactness. Supports grayscale/YCbCr at
     1-2 sampling factors, restart markers, and successive-approximation
     DC (Ah=0 first scans, any Al). Raises on non-progressive input."""
-    if content[:2] != _JPEG_MAGIC:
-        raise ValueError("not a JPEG stream")
-    pos = 2
-    qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    h = w = None
-    comps: list[tuple[int, int, int, int]] = []
-    restart_interval = 0
-    scan_start = None
-    scan_dc_tabs: list[int] = []
-    al = 0
-    while pos + 4 <= len(content):
-        if content[pos] != 0xFF:
-            raise ValueError(f"bad marker sync at {pos}")
-        marker = content[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        (ln,) = struct.unpack(">H", content[pos : pos + 2])
-        payload = content[pos + 2 : pos + ln]
-        pos += ln
-        if marker == 0xDB:
-            p = 0
-            while p < len(payload):
-                pq, tid = payload[p] >> 4, payload[p] & 0xF
-                if pq != 0:
-                    raise NotImplementedError("JPEG subset: 8-bit quant tables")
-                tbl = np.zeros((8, 8), dtype=np.int32)
-                for k, (r, c) in enumerate(_JZZ):
-                    tbl[r, c] = payload[p + 1 + k]
-                qt[tid] = tbl
-                p += 65
-        elif marker == 0xC4:
-            p = 0
-            while p < len(payload):
-                cls, tid = payload[p] >> 4, payload[p] & 0xF
-                bits = list(payload[p + 1 : p + 17])
-                nv = sum(bits)
-                vals = list(payload[p + 17 : p + 17 + nv])
-                huff[(cls, tid)] = _huff_decode_map(bits, vals)
-                p += 17 + nv
-        elif marker == 0xC2:  # SOF2 progressive
-            prec, h, w, nc = struct.unpack(">BHHB", payload[:6])
-            if prec != 8:
-                raise NotImplementedError(
-                    "JPEG subset: 8-bit precision only. 12-bit samples "
-                    "(extended sequential/progressive, ISO 10918-1 Annex F "
-                    "tables) are PERMANENTLY out of scope by decision "
-                    "(round-14, the MP3 policy): 12-bit JPEG lives inside "
-                    "medical DICOM toolchains and never appears in web or "
-                    "photographic training corpora — the pipelines this "
-                    "catalog serves; supporting it would double every "
-                    "quant/Huffman table surface to decode files only this "
-                    "repo could generate."
-                )
-            for i in range(nc):
-                cid, samp, tq = payload[6 + 3 * i : 9 + 3 * i]
-                hi, vi = samp >> 4, samp & 0xF
-                if hi not in (1, 2) or vi not in (1, 2):
-                    raise NotImplementedError("JPEG subset: sampling factors 1-2")
-                comps.append((cid, tq, hi, vi))
-        elif marker == 0xC0:
-            raise ValueError(
-                "baseline (SOF0) stream: use decode_image, not the progressive path"
-            )
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", payload[:2])
-        elif marker == 0xDA:
-            ns = payload[0]
-            for i in range(ns):
-                scan_dc_tabs.append(payload[2 + 2 * i] >> 4)
-            ss, se, ahal = payload[1 + 2 * ns : 4 + 2 * ns]
-            if ss != 0 or se != 0 or (ahal >> 4) != 0:
-                raise ValueError("first progressive scan is not a first DC scan")
-            if ns != len(comps):
-                raise NotImplementedError(
-                    "JPEG subset: first DC scan must cover all components"
-                )
-            al = ahal & 0xF
-            scan_start = pos
-            break
-    if h is None or scan_start is None:
-        raise ValueError("JPEG missing SOF2/SOS")
-    p = scan_start
-    while p + 1 < len(content):
-        if content[p] == 0xFF and content[p + 1] not in (0x00,) and not (
-            0xD0 <= content[p + 1] <= 0xD7
-        ):
-            break
-        p += 1
-    hmax = max(c[2] for c in comps)
-    vmax = max(c[3] for c in comps)
-    mcu_rows, mcu_cols = -(-h // (8 * vmax)), -(-w // (8 * hmax))
-    n_mcu = mcu_rows * mcu_cols
-    planes = [
-        np.zeros((mcu_rows * 8 * vi, mcu_cols * 8 * hi), dtype=np.float64)
-        for (_, _, hi, vi) in comps
-    ]
-    scan_bytes = content[scan_start:p]
-    segments = []
-    if restart_interval:
-        seg_b, q = bytearray(), 0
-        while q < len(scan_bytes):
-            if (
-                scan_bytes[q] == 0xFF
-                and q + 1 < len(scan_bytes)
-                and 0xD0 <= scan_bytes[q + 1] <= 0xD7
-            ):
-                segments.append(bytes(seg_b))
-                seg_b = bytearray()
-                q += 2
-            else:
-                seg_b.append(scan_bytes[q])
-                q += 1
-        segments.append(bytes(seg_b))
-    else:
-        segments = [scan_bytes]
-    mcu_idx = 0
-    for seg_bytes in segments:
-        br = _BitReader(seg_bytes)
-        pred = [0] * len(comps)
-        limit = min(mcu_idx + restart_interval, n_mcu) if restart_interval else n_mcu
-        while mcu_idx < limit:
-            my, mx = divmod(mcu_idx, mcu_cols)
-            for ci, (cid, tq, hi, vi) in enumerate(comps):
-                dc_map = huff[(0, scan_dc_tabs[ci])]
-                for bv in range(vi):
-                    for bh in range(hi):
-                        code, lng = 0, 0
-                        size = None
-                        while lng < 16:
-                            code = (code << 1) | br.read(1)
-                            lng += 1
-                            if (lng, code) in dc_map:
-                                size = dc_map[(lng, code)]
-                                break
-                        if size is None:
-                            raise ValueError("bad Huffman code in DC scan")
-                        diff = _jpeg_extend(br.read(size), size)
-                        pred[ci] += diff
-                        # flat DC-only IDCT: every pixel = dequant/8 + 128
-                        val = (pred[ci] << al) * int(qt[tq][0, 0]) / 8.0 + 128.0
-                        ys, xs = (my * vi + bv) * 8, (mx * hi + bh) * 8
-                        planes[ci][ys : ys + 8, xs : xs + 8] = val
-            mcu_idx += 1
-    if len(comps) == 1:
-        return np.clip(np.round(planes[0][:h, :w]), 0, 255).astype(np.uint8)
-    up = []
-    for ci, (_, _, hi, vi) in enumerate(comps):
-        pl = planes[ci]
-        if hi < hmax or vi < vmax:
-            pl = pl.repeat(vmax // vi, axis=0).repeat(hmax // hi, axis=1)
-        up.append(pl[:h, :w])
-    y, cb, cr = up[0], up[1] - 128.0, up[2] - 128.0
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    b = y + 1.772 * cb
-    return np.clip(np.round(np.stack([r, g, b], axis=-1)), 0, 255).astype(np.uint8)
-
-
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def _fill(self) -> None:
-        while self.n < 25 and self.pos < len(self.data):
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                if self.pos < len(self.data) and self.data[self.pos] == 0x00:
-                    self.pos += 1  # unstuff
-                else:
-                    self.pos -= 1  # a real marker: stop feeding
-                    b = None
-                    break
-            self.acc = (self.acc << 8) | b
-            self.n += 8
-
-    def read(self, length: int) -> int:
-        if length == 0:
-            return 0
-        self._fill()
-        if self.n < length:
-            # past the scan end: pad with 1s (spec padding)
-            self.acc = (self.acc << (length - self.n)) | ((1 << (length - self.n)) - 1)
-            self.n = length
-        v = (self.acc >> (self.n - length)) & ((1 << length) - 1)
-        self.n -= length
-        self.acc &= (1 << self.n) - 1
-        return v
-
-
-def _jpeg_extend(r: int, size: int) -> int:
-    if size == 0:
-        return 0
-    return r if r >= (1 << (size - 1)) else r - (1 << size) + 1
-
-
-def _decode_jpeg(content: bytes) -> np.ndarray:
-    """Pure stdlib+numpy baseline JPEG decoder: SOF0, 8-bit, grayscale
-    or YCbCr at any 1-2 sampling-factor layout — 4:4:4, 4:2:0 (the
-    dominant real-world layout), 4:2:2, 4:4:0 — with generic MCU
-    interleaving, restart markers, and pixel-replication chroma
-    upsampling. Progressive/arithmetic/12-bit streams raise
-    NotImplementedError (truthful feature gate, same policy as the
-    PNG subset)."""
-    if content[:2] != _JPEG_MAGIC:
-        raise ValueError("not a JPEG stream")
-    pos = 2
-    qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    h = w = None
-    comps: list[tuple[int, int, int, int]] = []  # (comp_id, qtab, h_i, v_i)
-    restart_interval = 0
-    scan_start = None
-    scan_tabs: list[tuple[int, int]] = []
-    while pos + 4 <= len(content):
-        if content[pos] != 0xFF:
-            raise ValueError(f"bad marker sync at {pos}")
-        marker = content[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        (ln,) = struct.unpack(">H", content[pos : pos + 2])
-        payload = content[pos + 2 : pos + ln]
-        pos += ln
-        if marker == 0xDB:  # DQT (possibly several tables)
-            p = 0
-            while p < len(payload):
-                pq, tid = payload[p] >> 4, payload[p] & 0xF
-                if pq != 0:
-                    raise NotImplementedError("JPEG subset: 8-bit quant tables")
-                tbl = np.zeros((8, 8), dtype=np.int32)
-                for k, (r, c) in enumerate(_JZZ):
-                    tbl[r, c] = payload[p + 1 + k]
-                qt[tid] = tbl
-                p += 65
-        elif marker == 0xC4:  # DHT (possibly several tables)
-            p = 0
-            while p < len(payload):
-                cls, tid = payload[p] >> 4, payload[p] & 0xF
-                bits = list(payload[p + 1 : p + 17])
-                nv = sum(bits)
-                vals = list(payload[p + 17 : p + 17 + nv])
-                huff[(cls, tid)] = _huff_decode_map(bits, vals)
-                p += 17 + nv
-        elif marker == 0xC0:  # SOF0 baseline
-            prec, h, w, nc = struct.unpack(">BHHB", payload[:6])
-            if prec != 8:
-                raise NotImplementedError(
-                    "JPEG subset: 8-bit precision only. 12-bit samples "
-                    "(extended sequential/progressive, ISO 10918-1 Annex F "
-                    "tables) are PERMANENTLY out of scope by decision "
-                    "(round-14, the MP3 policy): 12-bit JPEG lives inside "
-                    "medical DICOM toolchains and never appears in web or "
-                    "photographic training corpora — the pipelines this "
-                    "catalog serves; supporting it would double every "
-                    "quant/Huffman table surface to decode files only this "
-                    "repo could generate."
-                )
-            for i in range(nc):
-                cid, samp, tq = payload[6 + 3 * i : 9 + 3 * i]
-                hi, vi = samp >> 4, samp & 0xF
-                if hi not in (1, 2) or vi not in (1, 2):
-                    raise NotImplementedError(
-                        "JPEG subset: sampling factors 1-2 "
-                        "(4:4:4 / 4:2:0 / 4:2:2 / 4:4:0)"
-                    )
-                comps.append((cid, tq, hi, vi))
-        elif marker == 0xC2:
-            raise NotImplementedError(
-                "JPEG subset: decode_image decodes baseline (SOF0) only. "
-                "Progressive (SOF2) DC-scan decode — exact for the analytics "
-                "this catalog runs on images, and exactly the first scan's "
-                "information — is implemented in decode_jpeg_progressive_dc "
-                "(round-12 verdict item #4); full progressive AC "
-                "reconstruction stays out of decode_image because its result "
-                "would be approximate there and decode_image's contract is "
-                "exactness."
-            )
-        elif marker in (0xC9, 0xCA, 0xCB):
-            raise NotImplementedError(
-                "JPEG subset: arithmetic-coded streams (SOF9-11) are "
-                "PERMANENTLY out of scope by decision (round-14, the MP3 "
-                "policy): the QM-coder was patent-encumbered for the "
-                "format's entire adoption window, so encoders (libjpeg "
-                "-turbo, mozjpeg) ship with it disabled and browsers do "
-                "not decode it — a training-data pipeline never meets an "
-                "arithmetic JPEG in the wild, and implementing the coder "
-                "only to decode files this repo itself generated would "
-                "certify nothing. Huffman baseline + full progressive "
-                "cover the real corpus."
-            )
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"JPEG subset: baseline sequential (SOF0) only, got SOF{marker & 0xF}"
-            )
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", payload[:2])
-        elif marker == 0xDA:  # SOS
-            ns = payload[0]
-            for i in range(ns):
-                cid, tsel = payload[1 + 2 * i], payload[2 + 2 * i]
-                scan_tabs.append((tsel >> 4, tsel & 0xF))
-            scan_start = pos
-            break
-    if h is None or scan_start is None:
-        raise ValueError("JPEG missing SOF0/SOS")
-    # isolate entropy-coded data: ends at the next non-RST marker
-    p = scan_start
-    while p + 1 < len(content):
-        if content[p] == 0xFF and content[p + 1] not in (0x00,) and not (
-            0xD0 <= content[p + 1] <= 0xD7
-        ):
-            break
-        p += 1
-    hmax = max(c[2] for c in comps)
-    vmax = max(c[3] for c in comps)
-    mcu_rows, mcu_cols = -(-h // (8 * vmax)), -(-w // (8 * hmax))
-    n_mcu = mcu_rows * mcu_cols
-    planes = [
-        np.zeros((mcu_rows * 8 * vi, mcu_cols * 8 * hi), dtype=np.float64)
-        for (_, _, hi, vi) in comps
-    ]
-    # split scan by restart markers so each segment starts byte-aligned
-    scan_bytes = content[scan_start:p]
-    segments = []
-    if restart_interval:
-        seg_b, q = bytearray(), 0
-        while q < len(scan_bytes):
-            if (
-                scan_bytes[q] == 0xFF
-                and q + 1 < len(scan_bytes)
-                and 0xD0 <= scan_bytes[q + 1] <= 0xD7
-            ):
-                segments.append(bytes(seg_b))
-                seg_b = bytearray()
-                q += 2
-            else:
-                seg_b.append(scan_bytes[q])
-                q += 1
-        segments.append(bytes(seg_b))
-    else:
-        segments = [scan_bytes]
-    mcu_idx = 0
-    for seg_bytes in segments:
-        br = _BitReader(seg_bytes)
-        pred = [0] * len(comps)
-        limit = (
-            min(mcu_idx + restart_interval, n_mcu) if restart_interval else n_mcu
-        )
-        while mcu_idx < limit:
-            my, mx = divmod(mcu_idx, mcu_cols)
-            for ci, (cid, tq, hi, vi) in enumerate(comps):
-                dc_map = huff[(0, scan_tabs[ci][0])]
-                ac_map = huff[(1, scan_tabs[ci][1])]
-
-                def read_symbol(table):
-                    code, lng = 0, 0
-                    while lng < 16:
-                        code = (code << 1) | br.read(1)
-                        lng += 1
-                        if (lng, code) in table:
-                            return table[(lng, code)]
-                    raise ValueError("bad Huffman code in JPEG scan")
-
-                for bv in range(vi):
-                    for bh in range(hi):
-                        size = read_symbol(dc_map)
-                        diff = _jpeg_extend(br.read(size), size)
-                        pred[ci] += diff
-                        zz = [0] * 64
-                        zz[0] = pred[ci]
-                        k = 1
-                        while k < 64:
-                            rs = read_symbol(ac_map)
-                            run, size = rs >> 4, rs & 0xF
-                            if size == 0:
-                                if run == 15:  # ZRL
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += run
-                            if k > 63:
-                                raise ValueError("JPEG AC run overflow")
-                            zz[k] = _jpeg_extend(br.read(size), size)
-                            k += 1
-                        fq = np.zeros((8, 8), dtype=np.float64)
-                        for k2, (r, c) in enumerate(_JZZ):
-                            fq[r, c] = zz[k2] * qt[tq][r, c]
-                        blk = _JM.T @ fq @ _JM + 128.0
-                        ys, xs = (my * vi + bv) * 8, (mx * hi + bh) * 8
-                        planes[ci][ys : ys + 8, xs : xs + 8] = blk
-            mcu_idx += 1
-    # crop each plane to its spec dimensions (ceil(d * f_i / f_max)),
-    # then upsample subsampled chroma by pixel replication
-    out_planes = []
-    for pl, (_, _, hi, vi) in zip(planes, comps):
-        ch, cw = -(-h * vi // vmax), -(-w * hi // hmax)
-        pl = pl[:ch, :cw]
-        if vi != vmax:
-            pl = np.repeat(pl, vmax // vi, axis=0)
-        if hi != hmax:
-            pl = np.repeat(pl, hmax // hi, axis=1)
-        out_planes.append(pl[:h, :w])
-    planes = out_planes
-    if len(comps) == 1:
-        return np.clip(np.round(planes[0]), 0, 255).astype(np.uint8)
-    y, cb, cr = planes
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    return np.clip(np.round(np.stack([r, g, b], axis=-1)), 0, 255).astype(np.uint8)
+    fr = _jpeg_progressive_frame(content)
+    sc = fr.scans[0]
+    if sc.ss != 0 or sc.ah != 0:
+        raise ValueError("first progressive scan is not a first DC scan")
+    if len(sc.comps) != len(fr.comps):
+        raise NotImplementedError("JPEG subset: first DC scan must cover all components")
+    planes = []
+    for (_, q, _, _), grid in zip(fr.comps, _jpeg_coefs(fr, [sc], {})):
+        # flat DC-only IDCT: every pixel = dequantized DC / 8 + 128
+        flat = grid[..., 0] * int(q[0, 0]) / 8.0 + 128.0
+        planes.append(flat.repeat(8, axis=0).repeat(8, axis=1))
+    return _jpeg_image(fr, planes)
 
 
 def _dithered_block_image(text) -> np.ndarray:
@@ -2434,7 +2242,7 @@ def jpeg_sa_fixture_block(k: int, v: int) -> np.ndarray:
     - k >= 61: Q(7,7)-crafted blocks 128 + q*99*B77 with q = 2, 3, 1 —
       quantizing to EXACTLY one coefficient at the last zigzag
       position (rounding noise is < half of every other quantizer, see
-      tests/test_round14.py), so every file forces first-scan ZRL runs
+      tests/test_jpeg.py), so every file forces first-scan ZRL runs
       (q=2,3: |1| after 57 zeros), a correction bit of 0 (q=2) AND 1
       (q=3), and a newly-significant ±1 in the refinement scan after a
       ZRL run (q=1 — invisible at Al=1)."""

@@ -834,7 +834,7 @@ def multimodal_jpeg_420_decode_stats(spark: SparkSession, sf_dir: str) -> DataFr
     (17), so luma rounds to the 4:4:4 fixture's identity and Cb
     reconstructs LOSSLESSLY (fixture docstring derives the full
     per-channel constants; validated exhaustively over all 512
-    (byte, parity) combos in tests/test_round12.py). Channel-separated
+    (byte, parity) combos in tests/test_jpeg.py). Channel-separated
     sums make every failure mode visible: a swapped chroma table,
     broken MCU interleave, bad upsample, or off-by-one DC prediction
     shifts r/g/b differently. Plan shape: parallel file scan ->
@@ -1036,7 +1036,7 @@ def _dhash_oracle() -> str:
     """DuckDB replay of the whole perceptual pipeline: fixture bytes ->
     both closed-form decodes (q50 rounds odd v<255 up to v+1, q75 is
     the identity — derived and exhaustively validated in
-    jpeg_requality_corpus_fixture_dir / tests/test_round13.py) ->
+    jpeg_requality_corpus_fixture_dir / tests/test_jpeg.py) ->
     8x8 grid (flat blocks: grid value = decoded value) -> row/column
     differencing bits -> 56+56-bit hash -> 8x14-bit banding ->
     Hamming <= tau. Every bit the Spark side realizes from REAL decoded

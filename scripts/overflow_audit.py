@@ -27,10 +27,12 @@ overflowed int64 at sf >= 1 while every sf0.01 compare stayed green
    int64 bound. Queries with < 10x headroom at sf100 are flagged even
    if their sf1 compare is green.
 
-Run:  python scripts/overflow_audit.py                 (~25 min incl. build)
+Run:  python scripts/overflow_audit.py --sf-dir DIR    (~25 min incl. build)
       python scripts/overflow_audit.py --reuse DIR     (skip build)
       python scripts/overflow_audit.py --only a,b --reuse DIR
       python scripts/overflow_audit.py --limit 60 --rowcap 300000
+``--sf-dir`` (the sf0.1 fixtures the sf1 dataset is built from and
+compared against) defaults to ``$SPARK_GRAFT_SF_DIR``.
 
 Prints one JSON document; also writes a ready-to-paste markdown table
 to /tmp/overflow_audit_table.md.
@@ -47,7 +49,7 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 INT64_MAX = 2**63 - 1
@@ -259,6 +261,9 @@ def summary_compare(
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument(
+        "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"), help="sf0.1 fixture dir"
+    )
     ap.add_argument("--reuse", help="existing sf1 dataset dir (skip build)")
     ap.add_argument("--limit", type=int, default=60, help="strict-compare count")
     ap.add_argument("--only", help="comma-separated query names (overrides --limit)")
@@ -277,9 +282,11 @@ def main() -> None:
     ap.add_argument("--rowcap", type=int, default=300_000)
     ap.add_argument("--budget", type=float, default=240.0, help="per-engine seconds")
     args = ap.parse_args()
+    if not args.sf_dir:
+        raise SystemExit("--sf-dir (or $SPARK_GRAFT_SF_DIR) is required")
 
     import __spark_entry__ as E
-    from scale_sf1 import SF01, build_sf1
+    from scale_sf1 import build_sf1
 
     from blow_spark.oracle import canonical_rows
     from blow_spark.session import get_spark
@@ -293,7 +300,7 @@ def main() -> None:
         sf1 = args.reuse
     else:
         t0 = time.time()
-        sf1 = build_sf1(spark)
+        sf1 = build_sf1(spark, args.sf_dir)
         print(f"built sf1 at {sf1} in {time.time() - t0:.0f}s", file=sys.stderr)
 
     scored = dict(candidates)
@@ -326,7 +333,7 @@ def main() -> None:
                 ext1 = spark_with_timeout(
                     spark, lambda: int_extrema(df1), args.budget, f"ext1_{name}"
                 )
-                df01 = cat[name](spark, SF01)
+                df01 = cat[name](spark, args.sf_dir)
                 ext01 = spark_with_timeout(
                     spark, lambda: int_extrema(df01), args.budget, f"ext01_{name}"
                 )

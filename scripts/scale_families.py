@@ -17,11 +17,14 @@ through the one-task path and the forced distributed plan
 one task's peak Python-worker RSS is VmHWM read in a second session
 without worker reuse, as scale_graph.py does.
 
-Run: python scripts/scale_families.py [--streams-only|--batch-only|--substring-only]
+Run: python scripts/scale_families.py --sf-dir DIR [--streams-only|--batch-only|--substring-only]
+``--sf-dir`` (the sf0.1 fixtures) defaults to ``$SPARK_GRAFT_SF_DIR``.
 """
 
 from __future__ import annotations
 
+import argparse
+import os
 import shutil
 import sys
 import tempfile
@@ -32,7 +35,7 @@ from unittest import mock
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def bench(fn, warm: int = 1, runs: int = 2) -> float:
@@ -47,6 +50,16 @@ def bench(fn, warm: int = 1, runs: int = 2) -> float:
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument(
+        "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"), help="sf0.1 fixture dir"
+    )
+    for flag in ("--streams-only", "--batch-only", "--substring-only"):
+        ap.add_argument(flag, action="store_true")
+    args = ap.parse_args()
+    if not args.sf_dir:
+        raise SystemExit("--sf-dir (or $SPARK_GRAFT_SF_DIR) is required")
+
     from blow_spark import dedup
     from blow_spark.queries import queries
     from blow_spark.session import get_spark
@@ -54,12 +67,12 @@ def main() -> None:
     from blow_spark.streaming import EVENTS_SCHEMA
 
     spark = get_spark(app_name="scale_families")
-    sf = "/root/testdata/sf0.1"
+    sf = args.sf_dir
     cat = queries()
-    only = {"--streams-only", "--batch-only", "--substring-only"} & set(sys.argv)
-    batch = not only or "--batch-only" in only
-    streams = not only or "--streams-only" in only
-    substring = not only or "--substring-only" in only
+    only = args.streams_only or args.batch_only or args.substring_only
+    batch = not only or args.batch_only
+    streams = not only or args.streams_only
+    substring = not only or args.substring_only
 
     def noop(df) -> None:
         df.write.mode("overwrite").format("noop").save()

@@ -33,11 +33,14 @@ Replica design notes:
   corpus-size-independent by design (it runs on the distinct-name
   census), so this is the whole story, not a shortcut.
 
-Run: python scripts/scale_r6.py
+Run: python scripts/scale_r6.py --sf-dir DIR
+``--sf-dir`` (the sf0.1 fixtures) defaults to ``$SPARK_GRAFT_SF_DIR``.
 """
 
 from __future__ import annotations
 
+import argparse
+import os
 import sys
 import tempfile
 import time
@@ -45,7 +48,7 @@ from functools import reduce
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def bench(fn, warm: int = 1, runs: int = 2) -> float:
@@ -60,12 +63,20 @@ def bench(fn, warm: int = 1, runs: int = 2) -> float:
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument(
+        "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"), help="sf0.1 fixture dir"
+    )
+    args = ap.parse_args()
+    if not args.sf_dir:
+        raise SystemExit("--sf-dir (or $SPARK_GRAFT_SF_DIR) is required")
+
     from blow_spark.queries import queries
     from blow_spark.session import get_spark
     from blow_spark.sources import read_table
 
     spark = get_spark(app_name="scale_r6")
-    sf = "/root/testdata/sf0.1"
+    sf = args.sf_dir
     cat = queries()
 
     def noop(df) -> None:
@@ -88,7 +99,7 @@ def main() -> None:
     # mid-frequency shingles across the rare-shingle blocking cutoff and
     # collapsing the pair-generation phase split_leakage_safe measures
     # (the replica-density artifact class the events note below avoids)
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from scale_sf1 import permuted_docs
 
     docs01 = read_table(spark, sf, "documents")

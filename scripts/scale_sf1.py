@@ -26,14 +26,17 @@ The heavy ten are the top batch entries of BENCH_r04 (the streaming
 availableNow run is excluded here — its 1×/10×/100× slope is measured
 separately in SCALE.md's streaming rows).
 
-Run: python scripts/scale_sf1.py            (~15 min incl. build)
+Run: python scripts/scale_sf1.py --sf-dir DIR   (~15 min incl. build)
      python scripts/scale_sf1.py --reuse /tmp/scale_sf1_...   (skip build)
      python scripts/scale_sf1.py --only q1,q2 [--reuse DIR]   (other queries)
+``--sf-dir`` (the sf0.1 fixtures) defaults to ``$SPARK_GRAFT_SF_DIR``.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
+import os
 import sys
 import tempfile
 import time
@@ -41,9 +44,7 @@ from functools import reduce
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-SF01 = "/root/testdata/sf0.1"
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEAVY_TEN = [
     "graph_pagerank_bipartite",
@@ -112,7 +113,7 @@ def seeded_vectors(emb, replica: int, dim: int = 64):
     )
 
 
-def build_sf1(spark) -> str:
+def build_sf1(spark, sf01: str) -> str:
     from blow_spark.sources import read_table
 
     out = tempfile.mkdtemp(prefix="scale_sf1_")
@@ -121,23 +122,23 @@ def build_sf1(spark) -> str:
         df.write.mode("overwrite").parquet(f"{out}/{name}.parquet")
 
     for dim_t in ("region", "nation"):
-        w(read_table(spark, SF01, dim_t), dim_t)
-    w(rep10(read_table(spark, SF01, "customer"), ["c_custkey"]), "customer")
-    w(rep10(read_table(spark, SF01, "supplier"), ["s_suppkey"]), "supplier")
-    w(rep10(read_table(spark, SF01, "part"), ["p_partkey"]), "part")
-    w(rep10(read_table(spark, SF01, "orders"), ["o_orderkey", "o_custkey"]), "orders")
+        w(read_table(spark, sf01, dim_t), dim_t)
+    w(rep10(read_table(spark, sf01, "customer"), ["c_custkey"]), "customer")
+    w(rep10(read_table(spark, sf01, "supplier"), ["s_suppkey"]), "supplier")
+    w(rep10(read_table(spark, sf01, "part"), ["p_partkey"]), "part")
+    w(rep10(read_table(spark, sf01, "orders"), ["o_orderkey", "o_custkey"]), "orders")
     w(
         rep10(
-            read_table(spark, SF01, "lineitem"),
+            read_table(spark, sf01, "lineitem"),
             ["l_orderkey", "l_partkey", "l_suppkey"],
         ),
         "lineitem",
     )
     w(
-        rep10(read_table(spark, SF01, "events"), ["event_id", "user_id"]),
+        rep10(read_table(spark, sf01, "events"), ["event_id", "user_id"]),
         "events",
     )
-    docs = read_table(spark, SF01, "documents")
+    docs = read_table(spark, sf01, "documents")
     w(
         reduce(
             lambda a, b: a.unionByName(b),
@@ -145,7 +146,7 @@ def build_sf1(spark) -> str:
         ),
         "documents",
     )
-    emb = read_table(spark, SF01, "embeddings")
+    emb = read_table(spark, sf01, "embeddings")
     w(
         reduce(
             lambda a, b: a.unionByName(b),
@@ -157,32 +158,40 @@ def build_sf1(spark) -> str:
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument(
+        "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"), help="sf0.1 fixture dir"
+    )
+    ap.add_argument("--reuse", help="existing sf1 dataset dir (skip build)")
+    ap.add_argument("--only", help="comma-separated query names (default: the heavy ten)")
+    args = ap.parse_args()
+    if not args.sf_dir:
+        raise SystemExit("--sf-dir (or $SPARK_GRAFT_SF_DIR) is required")
+    sf01 = args.sf_dir
+
     from blow_spark.queries import queries
     from blow_spark.session import get_spark
 
     spark = get_spark(app_name="scale_sf1")
     cat = queries()
 
-    if "--reuse" in sys.argv:
-        sf1 = sys.argv[sys.argv.index("--reuse") + 1]
+    if args.reuse:
+        sf1 = args.reuse
     else:
         t0 = time.time()
-        sf1 = build_sf1(spark)
+        sf1 = build_sf1(spark, sf01)
         print(f"built sf1 dataset at {sf1} in {round(time.time() - t0, 1)} s", file=sys.stderr)
 
     def noop(df) -> None:
         df.write.mode("overwrite").format("noop").save()
 
-    if "--only" in sys.argv:
-        targets = sys.argv[sys.argv.index("--only") + 1].split(",")
-    else:
-        targets = HEAVY_TEN
+    targets = args.only.split(",") if args.only else HEAVY_TEN
 
     results: dict = {"sf1_dir": sf1}
     # warm codegen once
-    noop(cat["flagship_fizzbuzz_agg"](spark, SF01))
+    noop(cat["flagship_fizzbuzz_agg"](spark, sf01))
     for name in targets:
-        for label, sfd in (("sf0.1", SF01), ("sf1", sf1)):
+        for label, sfd in (("sf0.1", sf01), ("sf1", sf1)):
             best = float("inf")
             for _ in range(2):
                 t0 = time.perf_counter()

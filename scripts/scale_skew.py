@@ -38,13 +38,14 @@ Run: python scripts/scale_skew.py            (full, ~5 min)
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HOT_FRACTION = 0.35  # hot key's share of fact rows (>= the brief's 30%)
 N_KEYS = 100_000

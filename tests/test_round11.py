@@ -116,86 +116,6 @@ def test_macro_f1_excludes_absent_classes():
         assert macro[lang] == 1.0, out
 
 
-# --- baseline JPEG codec pins (round 11) ----------------------------------
-
-
-def test_jpeg_flat_block_closed_form():
-    """The oracle identity: a flat block of gray v at quality 50 decodes
-    to exactly clamp(2*floor((v-127)/2) + 128) — for ALL 256 values,
-    exercising DC Huffman categories through the full +-64 range."""
-    import math
-
-    import numpy as np
-
-    from blow_spark.multimodal import _decode_jpeg, encode_jpeg_baseline
-
-    img = np.zeros((16, 128), dtype=np.uint8)
-    for k in range(32):
-        r, c = divmod(k, 16)
-        img[r * 8 : (r + 1) * 8, c * 8 : (c + 1) * 8] = k * 8 + 3
-    for vals in (list(range(0, 256, 8)), list(range(255, 0, -16))):
-        img = np.zeros((8, 8 * len(vals)), dtype=np.uint8)
-        for k, v in enumerate(vals):
-            img[:, k * 8 : (k + 1) * 8] = v
-        dec = _decode_jpeg(encode_jpeg_baseline(img, quality=50))
-        for k, v in enumerate(vals):
-            expect = min(max(2 * math.floor((v - 127) / 2) + 128, 0), 255)
-            got = dec[:, k * 8 : (k + 1) * 8]
-            assert (got == expect).all(), (v, expect, np.unique(got))
-
-
-def test_jpeg_roundtrip_tolerance_gray_and_rgb():
-    """decode(encode(img)) stays within quantization-error bounds on a
-    smooth gradient (any zigzag/scaling/Huffman bug blows this up by
-    orders of magnitude), for non-multiple-of-8 dims and RGB 4:4:4."""
-    import numpy as np
-
-    from blow_spark.multimodal import _decode_jpeg, encode_jpeg_baseline
-
-    xx, yy = np.meshgrid(np.arange(45), np.arange(30))
-    smooth = ((xx * 3 + yy * 2) % 256).astype(np.uint8)
-    dec = _decode_jpeg(encode_jpeg_baseline(smooth, quality=90))
-    assert dec.shape == smooth.shape
-    err = np.abs(dec.astype(int) - smooth.astype(int))
-    assert err.mean() < 4.0 and err.max() < 40, (err.mean(), err.max())
-
-    rgb = np.stack([(xx + yy) % 256, xx % 256, yy % 256], axis=-1).astype(np.uint8)
-    dec3 = _decode_jpeg(encode_jpeg_baseline(rgb, quality=85))
-    assert dec3.shape == rgb.shape
-    err3 = np.abs(dec3.astype(int) - rgb.astype(int))
-    assert err3.mean() < 4.0 and err3.max() < 40, (err3.mean(), err3.max())
-
-
-def test_jpeg_subset_gates():
-    """Unsupported shapes raise NotImplementedError (truthful gates),
-    and garbage raises ValueError."""
-    import numpy as np
-    import pytest
-
-    from blow_spark.multimodal import _decode_jpeg, encode_jpeg_baseline
-
-    good = encode_jpeg_baseline(np.full((8, 8), 100, dtype=np.uint8))
-    # flip SOF0 (0xC0) to SOF2 (0xC2): progressive must be refused
-    sof_at = good.find(b"\xff\xc0")
-    bad = good[:sof_at] + b"\xff\xc2" + good[sof_at + 2 :]
-    with pytest.raises(NotImplementedError):
-        _decode_jpeg(bad)
-    with pytest.raises(ValueError):
-        _decode_jpeg(b"\x00\x01not a jpeg")
-
-
-def test_jpeg_decode_image_routing():
-    """decode_image auto-detects JPEG magic and decodes for real."""
-    import numpy as np
-
-    from blow_spark.multimodal import decode_image, encode_jpeg_baseline
-
-    img = np.full((8, 16), 200, dtype=np.uint8)
-    out = decode_image(encode_jpeg_baseline(img, quality=50))
-    assert out.shape == (8, 16)
-    assert (out == min(max(2 * ((200 - 127) // 2) + 128, 0), 255)).all()
-
-
 def test_ann_method_report_raw_floors(spark, sf_dir):
     """Raw numbers behind similarity_ann_method_report's proof bits:
     every method clears its documented recall floor WITH MARGIN, and

@@ -1,6 +1,6 @@
-"""Round-12 pins: 4:2:0 chroma-subsampled JPEG (round-11 verdict item
-#4), the narrowed codec gate, and the large-star/small-star connected
-components upgrade (round-11 verdict item #5)."""
+"""Round-12 pins: the large-star/small-star connected components
+upgrade (round-11 verdict item #5), QOI and Adam7 PNG. The 4:2:0 JPEG
+pins live in tests/test_jpeg.py."""
 
 from __future__ import annotations
 
@@ -8,121 +8,6 @@ import numpy as np
 import pytest
 
 from blow_spark import multimodal as M
-
-
-def _fixture_tile_expectation(v: int, par: int) -> tuple[int, int, int]:
-    """The closed form the DuckDB oracle uses (derivation in
-    jpeg420_corpus_fixture_dir's docstring)."""
-    vp = 32 + (v % 160)
-    y_r = vp + 4 * par
-    y_dec = 2 * ((y_r - 127) // 2) + 128
-    if par:
-        return (y_dec - 3, y_dec - 4, y_dec + 30)
-    return (y_dec, y_dec, y_dec)
-
-
-def test_jpeg420_closed_form_exhaustive():
-    """Every (byte value, tile parity) combo decodes to EXACTLY the
-    oracle's closed form — 512 combos, 32 full encode/decode cycles.
-    This is the proof the multimodal_jpeg_420_decode_stats oracle is
-    an exactness gate, not a tolerance check."""
-    combos = [(v, par) for v in range(256) for par in (0, 1)]
-    mismatched = 0
-    for chunk in range(0, 512, 16):
-        batch = combos[chunk : chunk + 16]
-        img = np.zeros((64, 64, 3), dtype=np.uint8)
-        exp = np.zeros_like(img)
-        for t, (v, par) in enumerate(batch):
-            ty, tx = divmod(t, 4)
-            vp = 32 + (v % 160)
-            img[ty * 16 : (ty + 1) * 16, tx * 16 : (tx + 1) * 16] = (
-                vp,
-                vp,
-                vp + 34 * par,
-            )
-            exp[ty * 16 : (ty + 1) * 16, tx * 16 : (tx + 1) * 16] = (
-                _fixture_tile_expectation(v, par)
-            )
-        dec = M._decode_jpeg(M.encode_jpeg_baseline(img, 50, subsampling="420"))
-        mismatched += int(
-            (dec.astype(int) != exp.astype(int)).any(axis=-1).sum()
-        )
-    assert mismatched == 0
-
-
-def test_jpeg420_roundtrip_natural_image():
-    """A smooth gradient image survives the full 4:2:0 chain with small
-    error (it IS lossy), correct shape at non-MCU-aligned dimensions,
-    and a smaller file than 4:4:4 at the same quality — the point of
-    subsampling."""
-    xx, yy = np.meshgrid(np.arange(75), np.arange(41))
-    img = np.stack(
-        [
-            (60 + xx * 2) % 256,
-            (30 + yy * 3) % 256,
-            (xx + yy) % 256,
-        ],
-        axis=-1,
-    ).astype(np.uint8)
-    enc420 = M.encode_jpeg_baseline(img, 90, subsampling="420")
-    enc444 = M.encode_jpeg_baseline(img, 90, subsampling="444")
-    dec = M._decode_jpeg(enc420)
-    assert dec.shape == img.shape
-    assert float(np.mean(np.abs(dec.astype(int) - img.astype(int)))) < 8.0
-    assert len(enc420) < len(enc444)
-
-
-def test_jpeg420_grayscale_content_matches_444():
-    """Gray-valued RGB has constant (128) chroma, so 4:2:0 and 4:4:4
-    must decode IDENTICALLY — chroma subsampling only ever touches
-    chroma."""
-    rng = np.random.default_rng(12)
-    g = rng.integers(40, 200, (32, 48), dtype=np.uint8)
-    img = np.stack([g, g, g], axis=-1)
-    d420 = M._decode_jpeg(M.encode_jpeg_baseline(img, 50, subsampling="420"))
-    d444 = M._decode_jpeg(M.encode_jpeg_baseline(img, 50, subsampling="444"))
-    assert np.array_equal(d420, d444)
-
-
-def test_jpeg_gate_narrowed():
-    """The NotImplementedError gate now excludes ONLY what is truly
-    unimplemented: sampling factors outside 1-2, progressive (SOF2),
-    and non-420/444 encoder requests. 4:2:0 itself decodes."""
-    img = np.zeros((16, 16, 3), dtype=np.uint8)
-    enc = bytearray(M.encode_jpeg_baseline(img, 50, subsampling="420"))
-    # corrupt the luma sampling byte in SOF0 to 3x1 (factor > 2)
-    i = enc.index(b"\xff\xc0")
-    # SOF0 payload: len(2) prec(1) h(2) w(2) nc(1) then per-comp id,samp,tq
-    samp_off = i + 2 + 2 + 1 + 2 + 2 + 1 + 1
-    assert enc[samp_off] == 0x22
-    enc[samp_off] = 0x31
-    with pytest.raises(NotImplementedError, match="sampling factors"):
-        M._decode_jpeg(bytes(enc))
-    # progressive still gated
-    enc2 = bytearray(M.encode_jpeg_baseline(img, 50, subsampling="420"))
-    enc2[i + 1] = 0xC2
-    with pytest.raises(NotImplementedError, match="SOF0"):
-        M._decode_jpeg(bytes(enc2))
-    with pytest.raises(NotImplementedError, match="subsampling"):
-        M.encode_jpeg_baseline(img, 50, subsampling="422")
-
-
-def test_jpeg420_with_restart_markers_unaffected_regression():
-    """The generalized MCU walk kept the 4:4:4 path intact: re-encode
-    the round-11 flat-block fixture shape and check the decoded image
-    against its closed form (2*floor((v-127)/2)+128 per block)."""
-    vals = [0, 1, 63, 64, 127, 128, 129, 200, 254, 255] * 7
-    img = np.zeros((64, 64), dtype=np.uint8)
-    exp = np.zeros_like(img)
-    for k in range(64):
-        r, c = divmod(k, 8)
-        v = vals[k % len(vals)]
-        img[r * 8 : (r + 1) * 8, c * 8 : (c + 1) * 8] = v
-        exp[r * 8 : (r + 1) * 8, c * 8 : (c + 1) * 8] = min(
-            max(2 * ((v - 127) // 2) + 128, 0), 255
-        )
-    dec = M._decode_jpeg(M.encode_jpeg_baseline(img, 50))
-    assert np.array_equal(dec, exp)
 
 
 def test_cc_large_small_star_long_chain(spark):

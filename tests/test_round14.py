@@ -1,134 +1,15 @@
 """Round-14 pins: the r13-ADVICE exact-readout fixes, the overflow
-guards, and the full successive-approximation progressive JPEG codec
-(r13 verdict item #4 taken the IMPLEMENT way for AC refinement). Each
-test names what it pins so a regression reads as a reopened item."""
+guards and the pHash perceptual twin. The successive-approximation
+progressive JPEG codec pins live in tests/test_jpeg.py. Each test names
+what it pins so a regression reads as a reopened item."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from blow_spark import multimodal as M
 
 SF = "/root/testdata/sf0.001"
-
-
-# ---------------------------------------------------------------------------
-# full progressive JPEG (encode successive=True -> decode_jpeg_progressive)
-# ---------------------------------------------------------------------------
-
-
-def _roundtrip_images():
-    rng = np.random.default_rng(1404)
-    yield rng.integers(0, 256, (64, 64), dtype=np.uint8)  # dense noise
-    yield rng.integers(0, 256, (48, 56, 3), dtype=np.uint8)  # RGB, ragged
-    yield np.tile(np.arange(64, dtype=np.uint8), (64, 1))  # smooth ramp
-    flat = np.full((40, 40), 200, np.uint8)  # long EOB runs
-    yield flat
-    step = np.full((64, 64), 128, np.uint8)
-    step[32:, :] += 40
-    step[:, 32:] -= 30
-    yield step
-
-
-def test_sa_progressive_decode_matches_baseline_exactly():
-    """The headline codec gate: a successive-approximation progressive
-    encoding of an image decodes (decode_jpeg_progressive) to EXACTLY
-    the pixels of the baseline encoding's decode — same FDCT/quant
-    pipeline, so identical coefficients must reconstruct identically
-    through the completely different entropy path (EOBn runs, ZRL over
-    zero-history, correction bits)."""
-    for i, img in enumerate(_roundtrip_images()):
-        for q in (35, 50, 75):
-            prog = M.encode_jpeg_progressive(img, quality=q, successive=True)
-            base = M.encode_jpeg_baseline(img, quality=q, subsampling="444")
-            got = M.decode_jpeg_progressive(prog)
-            want = M.decode_image(base)
-            assert np.array_equal(got, want), f"image {i} q={q}"
-
-
-def test_sa_scan_script_census():
-    """The SA script is the libjpeg shape: 6 scans for grayscale
-    (DC first Al=1, two AC-first bands Al=1, DC refine Ah=1, two
-    AC-refine bands), 14 for RGB 4:4:4, with the split bands (1-5,
-    6-63) realized in the SOS headers the decoder saw."""
-    img = np.random.default_rng(7).integers(0, 256, (64, 64), dtype=np.uint8)
-    st: dict = {}
-    M.decode_jpeg_progressive(
-        M.encode_jpeg_progressive(img, quality=50, successive=True), stats=st
-    )
-    assert len(st["scans"]) == 6
-    assert st["scans"][0] == (0, 0, 0, 1)  # DC first at Al=1
-    assert (1, 5, 0, 1) in st["scans"] and (6, 63, 0, 1) in st["scans"]
-    assert (0, 0, 1, 0) in st["scans"]  # DC refinement
-    assert (1, 5, 1, 0) in st["scans"] and (6, 63, 1, 0) in st["scans"]
-    rgb = np.random.default_rng(8).integers(0, 256, (24, 24, 3), dtype=np.uint8)
-    st2: dict = {}
-    M.decode_jpeg_progressive(
-        M.encode_jpeg_progressive(rgb, quality=50, successive=True), stats=st2
-    )
-    assert len(st2["scans"]) == 14  # 1 DC + 3*2 AC first + 1 + 3*2 refine
-
-
-def test_sa_fixture_blocks_force_every_decoder_path():
-    """The crafted fixture blocks quantize to EXACTLY one coefficient
-    at the last zigzag position — q=2 (correction bit 0), q=3
-    (correction bit 1), q=1 (newly significant only in the refinement
-    scan) — so every fixture file forces ZRL runs in both scan kinds,
-    EOB runs > 1, and both correction-bit parities. This is the
-    rounding-noise-below-half-quantizer claim in jpeg_sa_fixture_block's
-    docstring, checked against the encoder's own pipeline."""
-    ql, _ = M._jpeg_quality_tables(50)
-    for k, want in ((61, 2), (62, 3), (63, 1)):
-        blk = M.jpeg_sa_fixture_block(k, 123)
-        f = M._JM @ (blk - 128.0) @ M._JM.T
-        qf = np.floor(np.round(f, 8) / ql + 0.5).astype(int)
-        nz = {(r, c): int(qf[r, c]) for r in range(8) for c in range(8) if qf[r, c]}
-        assert nz == {(7, 7): want}, f"block {k}: {nz}"
-    # end-to-end: a real fixture image exercises all four path counters
-    img = M.jpeg_sa_fixture_image(b"The quick brown fox jumps over the lazy dog, twice over again..")
-    st: dict = {}
-    got = M.decode_jpeg_progressive(
-        M.encode_jpeg_progressive(img, quality=50, successive=True), stats=st
-    )
-    want = M.decode_image(M.encode_jpeg_baseline(img, quality=50))
-    assert np.array_equal(got, want)
-    assert st["used_eobrun"] > 0
-    assert st["used_zrl"] > 0
-    assert st["used_newsig_refine"] > 0
-    assert st["corr_bits"] > 0
-
-
-def test_sa_stream_is_genuinely_progressive_and_backward_compatible():
-    """The SA stream is a real SOF2 multi-scan file: decode_image
-    refuses it (truthful baseline-only gate), decode_jpeg_progressive_dc
-    reads just its first scan (coarse Al=1 DC preview), and the FULL
-    decoder also accepts the round-13 2-scan spectral-only stream."""
-    img = np.random.default_rng(9).integers(0, 256, (64, 64), dtype=np.uint8)
-    sa = M.encode_jpeg_progressive(img, quality=50, successive=True)
-    with pytest.raises(NotImplementedError):
-        M.decode_image(sa)
-    dc = M.decode_jpeg_progressive_dc(sa)
-    assert dc.shape == (64, 64)
-    two_scan = M.encode_jpeg_progressive(img, quality=50)
-    base = M.decode_image(M.encode_jpeg_baseline(img, quality=50))
-    assert np.array_equal(M.decode_jpeg_progressive(two_scan), base)
-
-
-def test_prog_ac_huffman_table_is_spec_valid():
-    """The flat-8 custom AC table: 176 symbols (every EOBn 0-14, ZRL,
-    all (run,size<=10)), all 8 bits, Kraft sum < 1 (prefix-free), and
-    the all-ones padding code is NOT a symbol (so 1-padding at scan end
-    can never decode as data)."""
-    bits, vals = M._JH_AC_PROG
-    assert sum(bits) == len(vals) == 176
-    assert bits[7] == 176 and sum(b for i, b in enumerate(bits) if i != 7) == 0
-    enc = M._huff_canonical(bits, vals)
-    assert all(ln == 8 for _, ln in enc.values())
-    assert (0xFF, 8) not in {(c, l) for c, l in enc.values()}
-    for r in range(15):
-        assert (r << 4) in enc  # EOBn categories
-    assert 0xF0 in enc
 
 
 # ---------------------------------------------------------------------------
